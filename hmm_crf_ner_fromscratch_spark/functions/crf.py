@@ -241,6 +241,18 @@ class CRFModel:
     def n_features(self) -> int:
         return len(self.feature_index)
 
+    def tag_batch(self, token_lists: list) -> list[list[str]]:
+        """Viterbi tags for each token array of a batch. DecodeTables are
+        built once and kept on this object until ``weights`` is replaced;
+        a broadcast ships only the compact model (tables dwarf it)."""
+        memo = self.__dict__.get("_tables")
+        if memo is None or memo[0] is not self.weights:
+            memo = self._tables = (self.weights, DecodeTables(self))
+        return viterbi_decode_crf_batch([list(t) for t in token_lists], memo[1])
+
+    def __getstate__(self):
+        return {k: v for k, v in self.__dict__.items() if k != "_tables"}
+
     def save(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
         np.save(os.path.join(path, "weights.npy"), self.weights)

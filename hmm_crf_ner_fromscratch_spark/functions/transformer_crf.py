@@ -32,6 +32,8 @@ import os
 
 import numpy as np
 
+from .viterbi import decode_by_length
+
 
 class TransformerCRFParams:
     """CRF-layer parameters: (K, K) transitions + (K,) start/end vectors
@@ -53,6 +55,17 @@ class TransformerCRFParams:
         assert self.transitions.shape == (self.K, self.K)
         assert self.start_transitions.shape == (self.K,)
         assert self.end_transitions.shape == (self.K,)
+
+    def tag_batch(self, emission_lists: list) -> list[list[str]]:
+        """Viterbi tags for each (T, K) emission matrix of a batch, one
+        :func:`crf_viterbi_batch` per length."""
+        i2t = np.array(self.tags, dtype=object)
+
+        def bucket(rows):
+            E = np.array([[list(tok) for tok in em] for em in rows], dtype=np.float32)
+            return crf_viterbi_batch(E, self)
+
+        return [i2t[p].tolist() for p in decode_by_length(emission_lists, bucket)]
 
     def save(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)

@@ -66,13 +66,24 @@ def viterbi_batch(E: np.ndarray, pi: np.ndarray, A: np.ndarray) -> np.ndarray:
     return paths
 
 
-def emissions_for_indices(
-    word_idx: np.ndarray, B_ext: np.ndarray
-) -> np.ndarray:
-    """Gather emission columns for a (B, T) matrix of word indices.
+_EMPTY_PATH = np.empty(0, dtype=np.int64)
 
-    ``B_ext`` is the (K, V+1) emission matrix with the unknown-word column
-    appended at position V, so unknown words (index -1 == V via wraparound)
-    gather the correct ``log(1/(count(t)+V))`` column. Returns (B, T, K).
+
+def decode_by_length(seqs: list, decode_bucket) -> list:
+    """Decode variable-length sequences one length bucket at a time.
+
+    ``decode_bucket(rows)`` receives the rows sharing one length T >= 1
+    and returns their (B, T) tag-index paths, so each bucket runs as a
+    single vectorized DP. Returns one index path per input row, in input
+    order; a length-0 row gets an empty path.
     """
-    return B_ext[:, word_idx].transpose(1, 2, 0)
+    lengths = np.array([len(s) for s in seqs], dtype=np.int64)
+    out: list = [_EMPTY_PATH] * len(seqs)
+    for T in np.unique(lengths):
+        if T == 0:
+            continue
+        idxs = np.flatnonzero(lengths == T)
+        paths = decode_bucket([seqs[i] for i in idxs])
+        for row, i in enumerate(idxs):
+            out[i] = paths[row]
+    return out

@@ -33,11 +33,10 @@ from ..functions.crf import (
     STOP_TAG,
     U_TEMPLATES,
     CRFModel,
-    DecodeTables,
     build_feature_key,
     build_obs_lists,
-    viterbi_decode_crf,
 )
+from .labeler import label
 
 
 def _context_frame(sentences: DataFrame, xform_pairs: tuple = ()) -> DataFrame:
@@ -361,56 +360,18 @@ def gazetteer_entries(sentences: DataFrame) -> DataFrame:
     )
 
 
-# per-worker-process DecodeTables cache: built once per (worker, broadcast)
-_TABLES_CACHE: dict[int, DecodeTables] = {}
-
-
-def _worker_tables(bc) -> DecodeTables:
-    key = id(bc.value)
-    tables = _TABLES_CACHE.get(key)
-    if tables is None:
-        _TABLES_CACHE.clear()  # one model at a time per worker
-        tables = DecodeTables(bc.value)
-        _TABLES_CACHE[key] = tables
-    return tables
-
-
 def decode_crf(
     sentences: DataFrame,
     model: CRFModel,
     token_col: str = "tokens",
     out_col: str = "tags_pred",
 ) -> DataFrame:
-    """W2: the compact model is broadcast; each python worker builds its
-    DecodeTables ONCE and caches it process-wide (module-level cache keyed
-    by id -- workers are reused across tasks). Shipping prebuilt tables
+    """W2: appends ``out_col`` through the labeler. The compact model is
+    broadcast; each python worker builds its DecodeTables once on the
+    first :meth:`CRFModel.tag_batch` call. Shipping prebuilt tables
     instead was measured slower: for a 1.4M-feature model the pickled
     tables dwarf the model and the broadcast dominates."""
-    from .partitioning import fan_out
-
-    sentences = fan_out(sentences)
-    spark = sentences.sparkSession
-    bc = spark.sparkContext.broadcast(model)
-    from pyspark.sql.types import StructField, StructType
-
-    out_schema = StructType(
-        sentences.schema.fields
-        + [StructField(out_col, sentences.schema[token_col].dataType)]
-    )
-    cols = [f.name for f in sentences.schema.fields]
-
-    from ..functions.crf import viterbi_decode_crf_batch
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tables = _worker_tables(bc)
-        for pdf in batches:
-            out = pdf[cols].copy()
-            out[out_col] = viterbi_decode_crf_batch(
-                [list(wl) for wl in pdf[token_col]], tables
-            )
-            yield out
-
-    return sentences.mapInPandas(run, schema=out_schema)
+    return label(sentences, model, token_col=token_col, tag_col=out_col)
 
 
 # ---------------------------------------------------------------------

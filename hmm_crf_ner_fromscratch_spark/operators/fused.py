@@ -1,28 +1,17 @@
-"""Fused decode+mention extraction: one Arrow round trip.
+"""Decode + mention extraction in one python stage (turns -> mentions).
 
-Two chained ``mapInPandas`` operators run inside one Spark stage as a
-pipeline of two Python workers with the intermediate frame crossing the
-JVM twice -- measured on this machine, that chain *inverts* scaling at 32
-cores (64 workers + per-task writer/monitor threads oversubscribe the
-box: decode-only 5.3s, chained 30.7s on the same input). Fusing the two
-steps into a single mapInPandas restores linear behavior and halves the
-Arrow traffic; at 10^12-turn scale this is the difference between a
-python-bound and a serialization-bound pipeline.
-
-The fused operator is the throughput path; the unfused operators remain
-the checkpointed path (each stage independently resumable).
+The labeler (``operators/labeler.py``) emitting mentions: ``tag_batch``
+and the span assembly share one ``mapInPandas``, so the tags never cross
+the JVM boundary. ``decode_hmm``/``decode_crf`` then ``extract_mentions``
+give the same rows through the same kernel and span helper, with a tags
+table in between that can be checkpointed.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..functions.mentions import extract_spans_batch
-from .partitioning import fan_out
+from .labeler import label
 
 
 def decode_and_extract(
@@ -32,126 +21,12 @@ def decode_and_extract(
     token_col: str = "tokens",
     scheme: str = "bio",
 ) -> DataFrame:
-    """turns (with ``tokens``) -> mentions table, one python stage."""
-    spark = turns.sparkSession
-    bc = spark.sparkContext.broadcast(
-        {
-            "pi": model.pi,
-            "A": model.A,
-            "B_ext": model.b_extended(),
-            "word_to_idx": model.word_to_idx,
-            "idx_to_tag": [model.idx_to_tag[i] for i in range(model.K)],
-        }
-    )
-    key_cols = tuple(c for c in key_cols if c in turns.columns)
-    if not key_cols:
-        raise ValueError(
-            "decode_and_extract: none of the requested key columns exist in "
-            f"the input (columns: {turns.columns}); at least one key column "
-            "is required to attribute spans"
-        )
-    # fan out the narrow (keys, tokens) projection off unsplittable
-    # scans so the decode kernel runs on all cores (no-op at scale)
-    in_df = fan_out(turns.select(*key_cols, token_col))
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in in_df.schema.fields[: len(key_cols)]
-    )
-    out_schema = (
-        f"{key_schema}, span_start int, span_end int, "
-        "entity_type string, surface string"
+    """turns (with ``tokens``) -> mentions table, one python stage; any
+    model with ``tag_batch`` (HMM or CRF)."""
+    return label(
+        turns, model, emit="mentions", key_cols=key_cols, token_col=token_col, scheme=scheme
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.viterbi import viterbi_batch
 
-        m = bc.value
-        pi, A, B_ext = m["pi"], m["A"], m["B_ext"]
-        w2i = m["word_to_idx"]
-        i2t = np.array(m["idx_to_tag"], dtype=object)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            token_lists = pdf[token_col].tolist()
-            lengths = np.array([len(t) for t in token_lists])
-            tags: list = [None] * len(token_lists)
-            for T in np.unique(lengths):
-                idxs = np.nonzero(lengths == T)[0]
-                if T == 0:
-                    for i in idxs:
-                        tags[i] = []
-                    continue
-                widx = np.array(
-                    [[w2i.get(w, -1) for w in token_lists[i]] for i in idxs],
-                    dtype=np.int64,
-                )
-                E = B_ext[:, widx].transpose(1, 2, 0)
-                paths = viterbi_batch(E, pi, A)
-                for row, i in enumerate(idxs):
-                    tags[i] = i2t[paths[row]]
-            rows, starts, ends, types, surfaces = extract_spans_batch(
-                token_lists, tags, scheme=scheme
-            )
-            out = pdf.iloc[rows][list(key_cols)].reset_index(drop=True)
-            out["span_start"] = pd.Series(starts, dtype="int32")
-            out["span_end"] = pd.Series(ends, dtype="int32")
-            out["entity_type"] = pd.Series(types, dtype=object)
-            out["surface"] = pd.Series(surfaces, dtype=object)
-            yield out
-
-    return in_df.mapInPandas(run, schema=out_schema)
-
-
-def decode_and_extract_crf(
-    turns: DataFrame,
-    model,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx", "role", "tool"),
-    token_col: str = "tokens",
-    scheme: str = "bio",
-) -> DataFrame:
-    """CRF variant of the fused operator: batch CRF Viterbi + span
-    assembly in ONE python stage (same rationale as the HMM path). The
-    compact CRFModel is broadcast; each worker builds its DecodeTables
-    once and caches them process-wide."""
-    spark = turns.sparkSession
-    bc = spark.sparkContext.broadcast(model)
-    key_cols = tuple(c for c in key_cols if c in turns.columns)
-    if not key_cols:
-        raise ValueError(
-            "decode_and_extract: none of the requested key columns exist in "
-            f"the input (columns: {turns.columns}); at least one key column "
-            "is required to attribute spans"
-        )
-    # fan out the narrow (keys, tokens) projection off unsplittable
-    # scans so the decode kernel runs on all cores (no-op at scale)
-    in_df = fan_out(turns.select(*key_cols, token_col))
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in in_df.schema.fields[: len(key_cols)]
-    )
-    out_schema = (
-        f"{key_schema}, span_start int, span_end int, "
-        "entity_type string, surface string"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.crf import viterbi_decode_crf_batch
-        from .crf import _worker_tables
-
-        tables = _worker_tables(bc)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            token_lists = [list(t) for t in pdf[token_col]]
-            tags = viterbi_decode_crf_batch(token_lists, tables)
-            rows, starts, ends, types, surfaces = extract_spans_batch(
-                token_lists, tags, scheme=scheme
-            )
-            out = pdf.iloc[rows][list(key_cols)].reset_index(drop=True)
-            out["span_start"] = pd.Series(starts, dtype="int32")
-            out["span_end"] = pd.Series(ends, dtype="int32")
-            out["entity_type"] = pd.Series(types, dtype=object)
-            out["surface"] = pd.Series(surfaces, dtype=object)
-            yield out
-
-    return in_df.mapInPandas(run, schema=out_schema)
+# the labeler needs no per-model variant; kept as the CRF-path name
+decode_and_extract_crf = decode_and_extract

@@ -18,10 +18,10 @@ Vocab/tag index order is first-occurrence order over the token stream
 (``hmm_ner.py:37-39``) -- this order is semantics: Viterbi tie-breaking is
 first-index-wins, so the index assignment must be reproduced exactly.
 
-Decode (reference ``hmm_ner.py:127-268``) broadcasts the model to executors
-and runs a batched, length-bucketed NumPy Viterbi inside ``mapInPandas``
-(Arrow-batched; no per-row Python). Output bit-matches the reference on
-both bundled eval sets.
+Decode (reference ``hmm_ner.py:127-268``) is :meth:`HMMModel.tag_batch`,
+a length-bucketed NumPy Viterbi, run per Arrow batch by the one labeler
+(``operators/labeler.py``). Output bit-matches the reference on both
+bundled eval sets.
 """
 
 from __future__ import annotations
@@ -29,15 +29,13 @@ from __future__ import annotations
 import json
 import math
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
 
-from ..functions.viterbi import viterbi_batch
+from ..functions.viterbi import decode_by_length, viterbi_batch
+from .labeler import label
 
 SMOOTHING_FACTOR = 1e-10  # reference hmm_ner.py:7
 
@@ -82,6 +80,25 @@ class HMMModel:
         """(K, V+1) emission matrix with the unk column appended, so word
         index -1 (unknown) gathers the correct column via wraparound."""
         return np.concatenate([self.B, self.unk_column()[:, None]], axis=1)
+
+    def tag_batch(self, token_lists: list) -> list[list[str]]:
+        """Viterbi tags for each token array of a batch, one (B, T, K) DP
+        per length; decode tables are built once and kept on this object."""
+        if "_tables" not in self.__dict__:
+            i2t = np.array([self.idx_to_tag[i] for i in range(self.K)], dtype=object)
+            self._tables = (self.b_extended(), i2t)
+        B_ext, i2t = self._tables
+        w2i = self.word_to_idx
+
+        def bucket(rows):
+            widx = np.array([[w2i.get(w, -1) for w in toks] for toks in rows], dtype=np.int64)
+            # (K, B, T) gather -> (B, T, K); index -1 hits the unk column
+            return viterbi_batch(B_ext[:, widx].transpose(1, 2, 0), self.pi, self.A)
+
+        return [i2t[p].tolist() for p in decode_by_length(token_lists, bucket)]
+
+    def __getstate__(self):  # a broadcast ships the model, not its tables
+        return {k: v for k, v in self.__dict__.items() if k != "_tables"}
 
     def save(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
@@ -183,6 +200,11 @@ def train_hmm(sentences: DataFrame, max_model_rows: int = 50_000_000) -> HMMMode
             lambda p, c: ent(F.lit("tr"), p, c, F.lit(0)),
         ),
     )
+    # a row whose tags do not align with its tokens adds no entries
+    # (element_at past the end of ``tags`` aborts under ANSI). Checked
+    # here, above the exchange, not in the ``where``: Catalyst pushes a
+    # filter below a computed ``tags`` projection and evaluates it twice.
+    entries = F.when(n == F.size("tokens"), entries)
     unified = sentences.select(
         F.struct(*order_cols).alias("sent_id"), F.explode(entries).alias("en")
     ).select(
@@ -269,70 +291,6 @@ def decode_hmm(
     token_col: str = "tokens",
     out_col: str = "tags_pred",
 ) -> DataFrame:
-    """Viterbi-decode every row's token array; appends ``out_col``.
-
-    Physical plan: model broadcast once per executor; ``mapInPandas`` over
-    Arrow batches; inside each batch sentences are bucketed by exact length
-    and each bucket is decoded as one (B, T, K) vectorized DP -- identical
-    float ops to the reference decoder, so outputs bit-match while running
-    the DP over whole batches instead of per-sentence Python loops.
-
-    Decode is embarrassingly parallel, so at scale it runs over whatever
-    partitioning the input already has; a single-row-group scan (1-task)
-    is fanned out first so the python kernel actually uses the cores
-    (round 7: fork-warm workers made the 32-way python stage cheaper
-    than the 1-way one even counting the narrow shuffle -- decode of the
-    sf0.1 corpus 1.0 -> 0.6 s).
-    """
-    from .partitioning import fan_out
-
-    sentences = fan_out(sentences)
-    spark = spark or sentences.sparkSession
-    bc = spark.sparkContext.broadcast(
-        {
-            "pi": model.pi,
-            "A": model.A,
-            "B_ext": model.b_extended(),
-            "word_to_idx": model.word_to_idx,
-            "idx_to_tag": [model.idx_to_tag[i] for i in range(model.K)],
-        }
-    )
-    out_schema = StructType(
-        sentences.schema.fields + [StructField(out_col, sentences.schema[token_col].dataType)]
-    )
-    other_cols = [f.name for f in sentences.schema.fields]
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = bc.value
-        pi, A, B_ext = m["pi"], m["A"], m["B_ext"]
-        w2i = m["word_to_idx"]
-        i2t = np.array(m["idx_to_tag"], dtype=object)
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf[out_col] = pd.Series([], dtype=object)
-                yield pdf
-                continue
-            token_lists = pdf[token_col].tolist()
-            lengths = np.array([len(t) for t in token_lists])
-            out: list = [None] * len(token_lists)
-            # length-bucketing: each bucket decodes as one vectorized DP
-            for T in np.unique(lengths):
-                idxs = np.nonzero(lengths == T)[0]
-                if T == 0:
-                    for i in idxs:
-                        out[i] = []
-                    continue
-                widx = np.array(
-                    [[w2i.get(w, -1) for w in token_lists[i]] for i in idxs],
-                    dtype=np.int64,
-                )
-                # (K, B, T) gather -> (B, T, K); index -1 hits the unk column
-                E = B_ext[:, widx].transpose(1, 2, 0)
-                paths = viterbi_batch(E, pi, A)
-                for row, i in enumerate(idxs):
-                    out[i] = i2t[paths[row]].tolist()
-            res = pdf[other_cols].copy()
-            res[out_col] = out
-            yield res
-
-    return sentences.mapInPandas(decode_batches, schema=out_schema)
+    """Viterbi-decode every row's token array; appends ``out_col``
+    (:meth:`HMMModel.tag_batch` via ``label``). ``spark`` is unused."""
+    return label(sentences, model, token_col=token_col, tag_col=out_col)

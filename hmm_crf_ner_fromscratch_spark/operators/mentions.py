@@ -6,22 +6,16 @@ Input: the decoded transcript frame (one row per turn, ``tokens`` +
   ``conv_id string, turn_idx int, role string, tool string,
     span_start int, span_end int, entity_type string, surface string``
 
-Implemented as ``mapInPandas`` over Arrow batches with the flat-vectorized
-span kernel (functions/mentions.py) -- no token-level shuffle is ever
-introduced; the operator is embarrassingly parallel over the decode
-output's partitioning.
+The labeler's span assembly (``operators/labeler.py``) over the existing
+tags: flat-vectorized span kernel (functions/mentions.py), no shuffle,
+embarrassingly parallel over the decode output's partitioning.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
-MENTION_SCHEMA_SUFFIX = (
-    "span_start int, span_end int, entity_type string, surface string"
-)
+from .labeler import label
 
 
 def extract_mentions(
@@ -32,31 +26,7 @@ def extract_mentions(
     scheme: str = "bio",
 ) -> DataFrame:
     """Explode decoded turns into a mentions table."""
-    from ..functions.mentions import extract_spans_batch
-    from .partitioning import fan_out
-
-    key_cols = tuple(c for c in key_cols if c in decoded.columns)
-    # fan the narrow projection out off unsplittable scans so the span
-    # kernel uses the cores (no-op when the input is already parallel,
-    # e.g. the fanned-out decode outputs)
-    in_df = fan_out(decoded.select(*key_cols, token_col, tag_col))
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in in_df.schema.fields[: len(key_cols)]
+    return label(
+        decoded, None, emit="mentions", key_cols=key_cols, token_col=token_col,
+        tag_col=tag_col, scheme=scheme,
     )
-    out_schema = f"{key_schema}, {MENTION_SCHEMA_SUFFIX}" if key_schema else MENTION_SCHEMA_SUFFIX
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows, starts, ends, types, surfaces = extract_spans_batch(
-                pdf[token_col].tolist(), pdf[tag_col].tolist(), scheme=scheme
-            )
-            out = pdf.iloc[rows][list(key_cols)].reset_index(drop=True)
-            out["span_start"] = pd.Series(starts, dtype="int32")
-            out["span_end"] = pd.Series(ends, dtype="int32")
-            out["entity_type"] = pd.Series(types, dtype=object)
-            out["surface"] = pd.Series(surfaces, dtype=object)
-            yield out
-
-    return in_df.mapInPandas(emit, schema=out_schema)

@@ -10,22 +10,21 @@ On a cluster with a real encoder checkpoint, a preceding stage fills the
 emissions column (e.g. an inference server UDF or an ONNX scorer); this
 operator is everything downstream of it.
 
-Physical plan notes: embarrassingly parallel over existing partitioning
-(no shuffle introduced); the broadcast is K^2 + 2K floats -- trivially
-small; per-batch cost is O(sum T * K^2) vectorized.
+Decode is the labeler (``operators/labeler.py``) over
+:meth:`TransformerCRFParams.tag_batch`. Physical plan notes:
+embarrassingly parallel over existing partitioning (no shuffle
+introduced); the broadcast is K^2 + 2K floats -- trivially small;
+per-batch cost is O(sum T * K^2) vectorized.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-from ..functions.transformer_crf import TransformerCRFParams, crf_viterbi_batch
+from ..functions.transformer_crf import TransformerCRFParams
+from .labeler import label
 
 
 def decode_transformer_crf(
@@ -35,54 +34,8 @@ def decode_transformer_crf(
     out_col: str = "tags_pred",
 ) -> DataFrame:
     """Viterbi-decode every row's emission matrix; appends ``out_col``
-    (array<string> of tag names, one per token)."""
-    from .partitioning import fan_out
-
-    df = fan_out(df)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(
-        {
-            "transitions": params.transitions,
-            "start": params.start_transitions,
-            "end": params.end_transitions,
-            "tags": params.tags,
-        }
-    )
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, ArrayType(StringType()))]
-    )
-    other_cols = [f.name for f in df.schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = bc.value
-        p = TransformerCRFParams(m["transitions"], m["start"], m["end"], m["tags"])
-        i2t = np.array(m["tags"], dtype=object)
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf[out_col] = pd.Series([], dtype=object)
-                yield pdf
-                continue
-            em_lists = pdf[emissions_col].tolist()
-            lengths = np.array([len(e) for e in em_lists])
-            out: list = [None] * len(em_lists)
-            for T in np.unique(lengths):
-                idxs = np.nonzero(lengths == T)[0]
-                if T == 0:
-                    for i in idxs:
-                        out[i] = []
-                    continue
-                E = np.array(
-                    [[list(tok) for tok in em_lists[i]] for i in idxs],
-                    dtype=np.float32,
-                )  # (B, T, K)
-                paths = crf_viterbi_batch(E, p)
-                for row, i in enumerate(idxs):
-                    out[i] = i2t[paths[row]].tolist()
-            res = pdf[other_cols].copy()
-            res[out_col] = out
-            yield res
-
-    return df.mapInPandas(run, schema=out_schema)
+    (array<string> of tag names, one per token) through the labeler."""
+    return label(df, params, emissions_col=emissions_col, tag_col=out_col)
 
 
 # ---------------------------------------------------------------------

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 # committed trained-CRF decode artifact (tools/make_crf_dict_artifact.py)
@@ -70,6 +70,26 @@ def _toks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # applied per-pipeline where the map-side work dominates (dedup
     # shingle hashing, sim_topk dot products, fused decode inputs).
     return _docs(spark, sf_dir).withColumn("toks", F.split("text", " "))
+
+
+def _dict_tags(prefix: str) -> Column:
+    """Dictionary tagging of ``toks``: OP_WORDS -> ``{prefix}-OP``,
+    OBJ_WORDS -> ``{prefix}-OBJ``, every other word ``O``."""
+    return F.transform(
+        "toks",
+        lambda w: F.when(w.isin(OP_WORDS), f"{prefix}-OP")
+        .when(w.isin(OBJ_WORDS), f"{prefix}-OBJ")
+        .otherwise("O"),
+    )
+
+
+def _word_tag_rows(decoded: DataFrame) -> DataFrame:
+    """(doc_id, pos, word, tag) rows of a decoded frame: the shape the
+    decode oracles compare."""
+    wt = F.arrays_zip(F.col("tokens").alias("word"), F.col("tags_pred").alias("tag"))
+    return decoded.select("doc_id", F.posexplode(wt).alias("pos", "wt")).select(
+        "doc_id", "pos", F.col("wt.word").alias("word"), F.col("wt.tag").alias("tag")
+    )
 
 
 def _dict_class(col, op=OP_WORDS, obj=OBJ_WORDS):
@@ -170,12 +190,7 @@ def q_dict_mentions(spark, sf_dir):
     tagged = _toks(spark, sf_dir).select(
         "doc_id",
         F.col("toks").alias("tokens"),
-        F.transform(
-            "toks",
-            lambda w: F.when(w.isin(OP_WORDS), "I-OP")
-            .when(w.isin(OBJ_WORDS), "I-OBJ")
-            .otherwise("O"),
-        ).alias("tags_pred"),
+        _dict_tags("I").alias("tags_pred"),
     )
     return extract_mentions(tagged, key_cols=("doc_id",)).select(
         "doc_id",
@@ -1489,20 +1504,12 @@ def q_hmm_decode_dict(spark, sf_dir):
         "doc_id",
         F.col("doc_id").alias("sent_id"),
         F.col("toks").alias("tokens"),
-        F.transform(
-            "toks",
-            lambda w: F.when(w.isin(OP_WORDS), "B-OP")
-            .when(w.isin(OBJ_WORDS), "B-OBJ")
-            .otherwise("O"),
-        ).alias("tags"),
+        _dict_tags("B").alias("tags"),
     )
     model = train_hmm(tagged.where(F.col("doc_id") % 5 != 0).drop("doc_id"))
     test = tagged.where(F.col("doc_id") % 5 == 0).select("doc_id", "tokens")
     decoded = decode_hmm(test, model)
-    return decoded.select(
-        "doc_id",
-        F.posexplode(F.arrays_zip(F.col("tokens").alias("word"), F.col("tags_pred").alias("tag"))).alias("pos", "wt"),
-    ).select("doc_id", "pos", F.col("wt.word").alias("word"), F.col("wt.tag").alias("tag"))
+    return _word_tag_rows(decoded)
 
 
 def _sql_argmax_case(scores, results):
@@ -1695,12 +1702,7 @@ def q_crf_decode_dict(spark, sf_dir):
         "doc_id", F.col("toks").alias("tokens")
     )
     decoded = decode_crf(test, model)
-    return decoded.select(
-        "doc_id",
-        F.posexplode(
-            F.arrays_zip(F.col("tokens").alias("word"), F.col("tags_pred").alias("tag"))
-        ).alias("pos", "wt"),
-    ).select("doc_id", "pos", F.col("wt.word").alias("word"), F.col("wt.tag").alias("tag"))
+    return _word_tag_rows(decoded)
 
 
 def q_crf_decode_fixed(spark, sf_dir):
@@ -1724,12 +1726,7 @@ def q_crf_decode_fixed(spark, sf_dir):
         "doc_id",
         F.col("doc_id").alias("sent_id"),
         F.col("toks").alias("tokens"),
-        F.transform(
-            "toks",
-            lambda w: F.when(w.isin(OP_WORDS), "B-OP")
-            .when(w.isin(OBJ_WORDS), "B-OBJ")
-            .otherwise("O"),
-        ).alias("tags"),
+        _dict_tags("B").alias("tags"),
     )
     train = tagged.where(F.col("doc_id") % 37 == 1)
     registry = build_registry(train)
@@ -1739,12 +1736,7 @@ def q_crf_decode_fixed(spark, sf_dir):
     registry.weights = w
     test = tagged.where(F.col("doc_id") % 37 == 0).select("doc_id", "tokens")
     decoded = decode_crf(test, registry)
-    return decoded.select(
-        "doc_id",
-        F.posexplode(
-            F.arrays_zip(F.col("tokens").alias("word"), F.col("tags_pred").alias("tag"))
-        ).alias("pos", "wt"),
-    ).select("doc_id", "pos", F.col("wt.word").alias("word"), F.col("wt.tag").alias("tag"))
+    return _word_tag_rows(decoded)
 
 
 def _crf_decode_sql(mode: str = "fixed", emit: str = "decode") -> str:
@@ -2165,12 +2157,7 @@ def _kg_model_and_test(spark, sf_dir):
         .alias("role"),
         F.when(F.col("doc_id") % 3 == 2, F.lit("search")).alias("tool"),
         F.col("toks").alias("tokens"),
-        F.transform(
-            "toks",
-            lambda w: F.when(w.isin(OP_WORDS), "B-OP")
-            .when(w.isin(OBJ_WORDS), "B-OBJ")
-            .otherwise("O"),
-        ).alias("tags"),
+        _dict_tags("B").alias("tags"),
     )
     model = train_hmm(
         turns.where(F.col("turn_idx") % 5 != 0).select(
@@ -2514,12 +2501,7 @@ def q_gazetteer(spark, sf_dir):
     toks = _toks(spark, sf_dir)
     fine = toks.select(
         F.col("toks").alias("tokens"),
-        F.transform(
-            "toks",
-            lambda w: F.when(w.isin(OP_WORDS), "I-OP")
-            .when(w.isin(OBJ_WORDS), "I-OBJ")
-            .otherwise("O"),
-        ).alias("tags"),
+        _dict_tags("I").alias("tags"),
     )
     coarse = toks.select(
         F.col("toks").alias("tokens"),

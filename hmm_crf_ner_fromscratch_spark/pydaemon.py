@@ -13,7 +13,8 @@ Importing those modules HERE, before ``manager()`` starts forking, makes
 every forked worker inherit the already-initialized modules through
 copy-on-write memory: worker startup drops to the cost of a bare fork.
 The kernels this engine ships to workers (Viterbi, CRF feature tables,
-span assembly) are preloaded for the same reason.
+span assembly, the labeler and its models) are preloaded for the same
+reason; a failed preload is reported on stderr, not fatal.
 
 Selected via ``spark.python.daemon.module`` in session.get_spark; the
 package root is already on PYTHONPATH for workers (session.py sets it
@@ -24,6 +25,7 @@ one.
 from __future__ import annotations
 
 import importlib
+import sys
 
 for _mod in (
     "numpy",
@@ -36,11 +38,13 @@ for _mod in (
     "hmm_crf_ner_fromscratch_spark.functions.mentions",
     "hmm_crf_ner_fromscratch_spark.functions.crf",
     "hmm_crf_ner_fromscratch_spark.functions.transformer_crf",
+    "hmm_crf_ner_fromscratch_spark.operators.hmm",
+    "hmm_crf_ner_fromscratch_spark.operators.labeler",
 ):
     try:
         importlib.import_module(_mod)
-    except Exception:  # pragma: no cover - preload is best-effort
-        pass
+    except Exception as exc:  # preload is best-effort, but never silent
+        print(f"pydaemon: preload of {_mod} failed: {exc!r}", file=sys.stderr)
 
 from pyspark.daemon import manager  # noqa: E402
 

@@ -487,6 +487,31 @@ def test_train_hmm_model_row_cap(spark):
     assert model.B.shape[0] == 2  # two tags
 
 
+def test_train_hmm_drops_misaligned_rows(spark):
+    """A row whose tags are empty or shorter than its tokens used to abort
+    training under ANSI (element_at past the end of ``tags``); it is now
+    skipped, so the model equals the one trained without it."""
+    from hmm_crf_ner_fromscratch_spark.operators.hmm import train_hmm
+
+    schema = "doc_id string, sent_id long, tokens array<string>, tags array<string>"
+    good = [
+        ("d", i, ["alpha", "beta", f"w{i % 4}", "gamma"], ["O", "B-X", "O", "I-X"][: 4 - i % 2] + ["O"] * (i % 2))
+        for i in range(1, 20)
+    ]
+    bad = [
+        ("d", 0, ["zeta", "alpha", "beta"], ["B-Y"]),  # shorter than tokens
+        ("d", 7, ["eta", "theta"], []),  # empty tags
+    ]
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    clean = train_hmm(spark.createDataFrame(good, schema))
+    mixed = train_hmm(spark.createDataFrame(bad[:1] + good + bad[1:], schema))
+    assert mixed.word_to_idx == clean.word_to_idx
+    assert mixed.tag_to_idx == clean.tag_to_idx
+    assert mixed.tag_counts == clean.tag_counts
+    for a, b in ((mixed.pi, clean.pi), (mixed.A, clean.A), (mixed.B, clean.B)):
+        np.testing.assert_array_equal(a, b)
+
+
 def test_local_df_arrow_paths(spark):
     """session.local_df is load-bearing for every driver-built table
     (lineage, components, relation rules, eval labels, ANN probes): it
