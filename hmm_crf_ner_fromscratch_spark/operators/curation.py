@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 def pack_sequences(
     docs: DataFrame,
     capacity: int = 512,
+    *,
     # 256, not 4: parallelism equals the shard count, and the round-7
     # 1M-doc sweep (BENCH/curation_1m_r7.md) measured the old 4-shard
     # default ~70% slower than 32+ shards ALREADY at 1M rows -- at real
@@ -40,6 +41,11 @@ def pack_sequences(
     sequential recurrence over the whole stream (not window-expressible,
     not parallelizable); concat-and-chunk wastes zero tokens and is what
     large pretraining pipelines actually do.
+
+    ``n_shards`` and the column names are keyword-only. The ``n_shards``
+    default changed from 4 to 256 in round 7, and the shard count is part
+    of the packed layout, so a caller that relied on the old default gets
+    different bins; pass ``n_shards=4`` to reproduce it.
     """
     n_tok = F.size(F.split(F.col(text_col), " ")).cast("long")
     t = docs.select(

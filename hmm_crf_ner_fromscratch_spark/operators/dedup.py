@@ -8,6 +8,8 @@ operator here is exactly cross-checkable.
 * minhash_near_duplicates -- shingle -> MinHash -> LSH banding ->
   candidate pairs -> exact shingle-set Jaccard confirm (the classic
   Broder pipeline; banding keeps the join linear in corpus size)
+* jaccard_near_duplicates -- exhaustive shingle-set Jaccard over the
+  pairs that share a rare shingle (one inverted list per shingle)
 * simhash_fingerprints  -- bit-vote fingerprint over token hashes
   (Charikar); equal fingerprints = near-dup bucket
 * winnowing_fingerprints -- MOSS-style winnowed k-gram fingerprints
@@ -120,6 +122,49 @@ def minhash_band_col(n_hashes: int = N_MINHASH, band_size: int = BAND_SIZE):
     ).alias("bk")
 
 
+def _exchanged(df: DataFrame) -> DataFrame:
+    """``df`` behind a round-robin exchange ABOVE its computed columns.
+
+    A frame several subtrees of one query consume is otherwise evaluated
+    once per consumer: ``fan_out``'s exchange sits below the projection,
+    so only the scan and shuffle are shared. With the exchange above it,
+    the consumers' exchanges are identical and AQE's stage reuse feeds
+    them all from one materialized shuffle -- the projection runs once,
+    without persisting anything.
+
+    Rows with a null ``doc_id`` are dropped below the exchange: they can
+    be in no output pair, and a consumer that joins on the id would
+    otherwise infer that filter, push it below its own copy of the
+    exchange, and so stop that copy matching the others.
+
+    Limit: AQE keys a cached input's table-cache stage by its stage id,
+    so no exchange above a cached (``persist``-ed) input is ever reused
+    and every consumer recomputes its copy, this one included."""
+    return df.where(F.col("doc_id").isNotNull()).repartition(
+        df.sparkSession.sparkContext.defaultParallelism
+    )
+
+
+def _confirm(cands: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """Exact shingle-set Jaccard over candidate (doc_a, doc_b) pairs,
+    kept at >= threshold. ``sh`` is an ``_exchanged`` shingle frame; both
+    sides join it under aliases, not renaming projections, because the
+    optimizer collapses a pure rename into the projection below the
+    exchange, and the renamed exchange would no longer match the others."""
+    sa, sb = sh.alias("sa"), sh.alias("sb")
+    inter = F.size(F.array_intersect("sa.shingles", "sb.shingles"))
+    union = F.size(F.array_union("sa.shingles", "sb.shingles"))
+    return (
+        cands.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        .select(
+            "doc_a", "doc_b",
+            (inter.cast("double") / union.cast("double")).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def minhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -131,15 +176,19 @@ def minhash_near_duplicates(
     """(doc_a, doc_b, jaccard) for LSH-candidate pairs clearing the exact
     Jaccard threshold.
 
-    No caching: the shingle frame is larger than the input (n-gram
-    expansion), so persisting it at corpus scale spills more than the
-    narrow per-row recompute costs (split + slice, no shuffle); the
-    fan-out exchange below is deduped across the three shingle consumers
-    by ReusedExchange, so the scan + shuffle still run once per query.
-    Signatures are per-row numeric mins (see minhash_signature_cols) --
-    zero shuffles until the band self-join."""
-    sh = shingle_sets(fan_out(df), text_col, id_col)
-    minhashes = sh.select("doc_id", *minhash_signature_cols(n_hashes))
+    Each per-document array is computed once per query, with no caching
+    (the shingle frame is larger than the input, so a persisted copy
+    spills at corpus scale and leaks blocks in long-lived sessions).
+    ``fan_out`` spreads the scan so shingling runs on every core; the
+    shingle frame then sits behind its own exchange, read by both the
+    signature projection and both confirm sides; the signature frame sits
+    behind another, read by both sides of the (band, bh) self-join.
+    Without them each side of the self-join computes its own signatures,
+    and each consumer its own shingles. Signatures are per-row numeric
+    mins (see minhash_signature_cols) -- no hash shuffle until the band
+    join."""
+    sh = _exchanged(shingle_sets(fan_out(df), text_col, id_col))
+    minhashes = _exchanged(sh.select("doc_id", *minhash_signature_cols(n_hashes)))
     bands = minhashes.select(
         "doc_id", minhash_band_col(n_hashes, band_size)
     ).select("doc_id", "bk.band", "bk.bh")
@@ -156,19 +205,7 @@ def minhash_near_duplicates(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _confirm(cands, sh, threshold)
 
 
 def jaccard_near_duplicates(
@@ -184,7 +221,7 @@ def jaccard_near_duplicates(
 
     The scale knob is ``df_cap``: shingles with document frequency above
     it are stop-shingles and generate no candidates, bounding each
-    shingle's join fan-out at df_cap^2 pairs regardless of corpus size
+    shingle's fan-out at df_cap^2 pairs regardless of corpus size
     (the standard inverted-index trick; boilerplate shingles would
     otherwise pair every document with every other). The tradeoff is
     recall on pairs that share ONLY stop-shingles -- by construction
@@ -192,45 +229,37 @@ def jaccard_near_duplicates(
     Complement to minhash_near_duplicates: exact among rare-shingle
     pairs vs probabilistic-but-cheaper banding.
 
-    Uncached by design (same rationale as minhash_near_duplicates): the
-    shingle frame exceeds input size, so recomputing the narrow
-    projection on each of its consumers beats spilling a persisted copy,
-    and leaves no persisted blocks behind in long-lived sessions.
+    Candidates come from one inverted list per shingle: a single
+    ``groupBy(sh)`` collects each shingle's documents, and lists of 2 to
+    ``df_cap`` ids emit their ordered pairs. The shingle frame sits
+    behind one exchange read by that aggregate and by both confirm sides,
+    so it is computed once, uncached (same rationale as
+    minhash_near_duplicates). ``explode_outer`` plus an explicit null
+    filter, not ``explode``: ``explode`` makes Catalyst infer
+    ``size(shingles) > 0`` and push it through the exchanges into the
+    scan, which would run the whole shingle expression inside the scan
+    task. The null filter keeps null-text documents (shingles ``[null]``)
+    out of every list.
     """
-    sh = shingle_sets(fan_out(df), text_col, id_col)
-    ex = sh.select("doc_id", F.explode("shingles").alias("sh"))
-    rare = (
-        ex.groupBy("sh")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= df_cap)
-        .select("sh")
+    sh = _exchanged(shingle_sets(fan_out(df), text_col, id_col))
+    lists = (
+        sh.select("doc_id", F.explode_outer("shingles").alias("sh"))
+        .where(F.col("sh").isNotNull())
+        .groupBy("sh")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+        .where(F.size("ids").between(2, df_cap))
     )
-    exr = ex.join(rare, "sh")
-    a, b = exr.alias("a"), exr.alias("b")
     cands = (
-        a.join(
-            b,
-            [
-                F.col("a.sh") == F.col("b.sh"),
-                F.col("a.doc_id") < F.col("b.doc_id"),
-            ],
+        lists.select("ids", F.posexplode("ids").alias("i", "doc_a"))
+        .select(
+            "doc_a",
+            F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias("doc_b"),
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        # ids are sorted, so this drops only pairs of a repeated id
+        .where(F.col("doc_a") < F.col("doc_b"))
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _confirm(cands, sh, threshold)
 
 
 def simhash_fingerprints(

@@ -15,7 +15,11 @@ not needed.
 A bonus at plan level: when several subtrees of one query consume the
 same fanned-out frame, the round-robin exchanges are identical and
 Spark's ReusedExchange dedups them -- the scan + shuffle run once, the
-per-consumer narrow work runs 32-way above it.
+per-consumer narrow work runs 32-way above it. Two limits: a filter one
+consumer pushes below the exchange (an inferred ``isnotnull`` or
+``size(...) > 0``) makes its copy differ and run separately, and the
+narrow work itself still runs once per consumer; ``dedup._exchanged``
+adds a second exchange above a shared projection for that.
 """
 
 from __future__ import annotations

@@ -498,10 +498,10 @@ def q_dedup_minhash(spark, sf_dir):
     implementation (round-6 verdict ask #2): numeric 60-bit signatures as
     per-row array_min (zero shuffles before the band join; the previous
     explode + groupBy form paid a whole doc_id exchange for the same
-    values), no shingle-frame persist (the fan-out exchange is deduped by
-    ReusedExchange across the three shingle consumers). The DuckDB oracle
-    mirrors the exact hex-prefix -> BIGINT conversion and decimal band
-    concatenation."""
+    values), no shingle-frame persist (the shingle and signature frames
+    each sit behind one round-robin exchange that all their consumers
+    reuse, so each is computed once). The DuckDB oracle mirrors the exact
+    hex-prefix -> BIGINT conversion and decimal band concatenation."""
     from ..operators.dedup import minhash_near_duplicates
 
     return minhash_near_duplicates(
@@ -518,7 +518,7 @@ JACCARD_DF_CAP = 20
 def q_jaccard_ngram(spark, sf_dir):
     """Exhaustive n-gram Jaccard near-dup pairs: candidates share >= 1
     rare shingle (document frequency <= cap -- the stop-shingle bound
-    that keeps per-shingle join fan-out constant at any corpus size),
+    that keeps per-shingle pair fan-out constant at any corpus size),
     exact shingle-set Jaccard confirm. The exact-recall complement to
     dedup_minhash's probabilistic banding."""
     from ..operators.dedup import jaccard_near_duplicates

@@ -34,7 +34,14 @@ SF = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").persist()
+    # materialized here, so its cache RDD exists before any test snapshots
+    # the session's persisted RDDs; released after the module, because the
+    # session's cache manager would otherwise serve every later read of
+    # this parquet file from it
+    df = spark.read.parquet(f"{SF}/documents.parquet").persist()
+    df.count()
+    yield df
+    df.unpersist()
 
 
 def test_minhash_finds_planted_neardups(spark, docs):
@@ -91,6 +98,28 @@ def test_jaccard_ngram_exact_recall_and_stop_shingle_bound(spark, docs):
     assert jaccard_near_duplicates(bp, threshold=0.1, df_cap=20).count() == 0
     # raising the cap above corpus size re-admits those pairs
     assert jaccard_near_duplicates(bp, threshold=0.1, df_cap=50).count() > 0
+
+
+def test_dedup_null_and_empty_text(spark):
+    """Null text shingles to ``[null]``, which must join no inverted list
+    and match no band, so a null-text document is in no pair -- not even
+    with another null-text document. Empty text shingles to ``[""]``, so
+    two empty documents are an exact duplicate pair."""
+    from hmm_crf_ner_fromscratch_spark.operators.dedup import (
+        jaccard_near_duplicates,
+    )
+
+    text = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = [(1, None), (2, None), (3, ""), (4, ""), (5, text), (6, text + " iota")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for op in (minhash_near_duplicates, jaccard_near_duplicates):
+        pairs = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in op(df, threshold=0.5).collect()
+        }
+        assert not {1, 2} & {d for p in pairs for d in p}, (op.__name__, pairs)
+        assert pairs.get((3, 4)) == 1.0, (op.__name__, pairs)
+        assert (5, 6) in pairs, (op.__name__, pairs)
 
 
 def test_ppm_decode_resize_and_frame_sample(spark):

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import shutil
 from contextlib import redirect_stdout
 
@@ -85,10 +86,68 @@ def test_dedup_minhash_no_prebanding_shuffle(spark):
     )
     assert n <= 1, f"dedup_minhash grew a data shuffle: {n} > 1"
     assert "BroadcastHashJoin [band" in plan, "banding join lost band-key equality"
-    # (the three shingle consumers print as separate scan+fan-out subtrees
-    # in the INITIAL adaptive plan; AQE's shuffle-stage reuse dedups the
-    # identical round-robin exchanges at runtime, so the scan+shuffle run
-    # once -- not assertable from the static tree)
+    # (the shingle and signature consumers print as separate subtrees in
+    # the INITIAL adaptive plan; AQE's shuffle-stage reuse dedups the
+    # identical round-robin exchanges at runtime -- not assertable from
+    # the static tree; test_dedup_minhash_final_plan_one_signature_projection
+    # checks it on the final plan)
+
+
+def _final_plan(df) -> str:
+    """Run ``df`` and return the ``== Final Plan ==`` section of its
+    adaptive plan: what AQE actually executed, with reused exchanges
+    printed as ``ReusedExchange`` instead of their subtrees."""
+    df.collect()
+    plan = _tree(df)
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    # AQE never reuses an exchange above a table-cache stage, so these
+    # gates only hold on the parquet scan, not on an input some other
+    # test left cached
+    assert "InMemoryTableScan" not in final, "query input is cached"
+    # a reused exchange whose original is not in the final plan was built
+    # in a stage AQE later re-planned away: that copy ran all the same
+    built, reused = set(), set()
+    for line in final.splitlines():
+        ids = re.findall(r"\[plan_id=(\d+)\]", line)
+        (reused if "ReusedExchange" in line else built).update(ids)
+    assert reused <= built, f"hidden exchange copies ran: {reused - built}"
+    return final
+
+
+# the printed head of operators/dedup.shingle_sets' shingle expression
+_SHINGLE_EXPR = "array_distinct(transform(sequence("
+
+
+def test_dedup_minhash_final_plan_one_signature_projection(spark):
+    """The signature frame sits behind one exchange that both sides of
+    the (band, bh) self-join reuse, so the final plan projects the
+    ``n_hashes`` signatures once (not once per side), and the shingle
+    frame, read by the signatures and both confirm sides, is projected
+    once too."""
+    from hmm_crf_ner_fromscratch_spark.plans.entry_queries import N_MINHASH, QUERIES
+
+    final = _final_plan(QUERIES["dedup_minhash"](spark, SF))
+    n = final.count("array_min(transform(shingles")
+    assert n == N_MINHASH, f"{n // N_MINHASH} signature projections, want 1"
+    assert final.count(_SHINGLE_EXPR) == 1
+
+
+def test_jaccard_ngram_final_plan_one_shingle_projection(spark):
+    """The candidate aggregate and both confirm sides read one exchanged
+    shingle frame, so the shingle expression runs once, and never inside
+    the parquet scan: an inferred ``size(shingles) > 0`` pushed through
+    the fan-out exchange into ``DataFilters`` would run it in the
+    single-task scan."""
+    from hmm_crf_ner_fromscratch_spark.plans.entry_queries import QUERIES
+
+    final = _final_plan(QUERIES["jaccard_ngram"](spark, SF))
+    assert final.count(_SHINGLE_EXPR) == 1, final
+    scans = [l for l in final.splitlines() if "FileScan" in l]
+    assert scans
+    for line in scans:
+        filters = line.split("DataFilters:")[1].split("], ")[0]
+        assert "transform(" not in filters, f"shingles in a scan filter: {line}"
 
 
 def test_pricing_summary_pushdown(spark):
