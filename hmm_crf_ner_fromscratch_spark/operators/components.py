@@ -1,18 +1,20 @@
-"""K7: connected-components canonicalization via iterative DataFrame
-self-joins (min-label propagation).
+"""K7: adaptive connected-components canonicalization.
 
 Each candidate entity is a vertex (string key); link edges (K6) connect
 variants of the same real-world entity. The component representative --
 the lexicographically smallest key -- becomes the canonical entity.
 
-Algorithm: iterative min-label propagation. Every round, each vertex
-adopts the minimum label among itself and its neighbors; converged when no
-label changes. Rounds = O(component diameter); name-similarity graphs have
-tiny diameters, so a handful of rounds suffice. This is the DataFrame
-rendition of the map-reduce CC algorithms (large-star/small-star family,
-Kiveris et al.) -- per SURVEY.md SS2.6 K7.
+Two paths, chosen from the deduped edge count (see
+:func:`connected_components`):
+  * small link graphs -> driver-side union-find over the collected edges;
+  * large ones -> iterative min-label propagation with DataFrame
+    self-joins. Every round, each vertex adopts the minimum label among
+    itself and its neighbors; converged when no label changes. Rounds =
+    O(component diameter); name-similarity graphs have tiny diameters, so
+    a handful of rounds suffice -- per SURVEY.md SS2.6 K7.
 
-Scale guards (the two failure modes of naive iterative DataFrames):
+Scale guards for the distributed loop (the two failure modes of naive
+iterative DataFrames):
   * lineage blowup -> ``localCheckpoint()`` every iteration truncates the
     plan, keeping each round's job constant-size;
   * convergence detection -> a single ``count`` of changed labels per
@@ -22,79 +24,6 @@ Scale guards (the two failure modes of naive iterative DataFrames):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src_key",
-    dst: str = "dst_key",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond") -- O(log n)
-    rounds, the right algorithm for adversarial (long-path / high-
-    diameter) graphs where min-label propagation needs O(diameter).
-
-    large-star: per node u, attach every strictly-larger neighbor to the
-    minimum of N(u) ∪ {u}. small-star: orient edges large->small, attach
-    u and its (smaller) neighbors to the minimum. Converged when the
-    small-star output is a fixpoint; the edge set is then (node -> root).
-    Same contract as :func:`connected_components`.
-    """
-    spark = edges.sparkSession
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.select(F.col("u"), F.col("v")).unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        m = m.select("u", F.least("u", "mn").alias("m"))
-        return (
-            sym.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # orient large -> small
-        oriented = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        m = oriented.groupBy("u").agg(F.min("v").alias("mn"))
-        m = m.select("u", F.least("u", "mn").alias("m"))
-        joined = oriented.join(m, "u")
-        out = (
-            joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(m.select(F.col("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        return out
-
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev_sig = None
-    for _ in range(max_iter):
-        e = small_star(large_star(e)).localCheckpoint()
-        sig = e.agg(
-            F.count("*").alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("h")
-        ).first()
-        if prev_sig == (sig.n, sig.h):
-            break
-        prev_sig = (sig.n, sig.h)
-
-    roots = e.select(F.col("v").alias("key")).distinct().withColumn(
-        "component", F.col("key")
-    )
-    return e.select(F.col("u").alias("key"), F.col("v").alias("component")).unionByName(
-        roots
-    ).distinct()
 
 
 def _local_components(pairs: list) -> list:
@@ -128,7 +57,6 @@ def connected_components(
     dst: str = "dst_key",
     max_iter: int = 25,
     local_threshold: int = 500_000,
-    seed: DataFrame | None = None,
 ) -> DataFrame:
     """Returns ``DataFrame[key, component]`` for every vertex appearing in
     ``edges``; ``component`` is the minimum key in the vertex's component.
@@ -144,18 +72,6 @@ def connected_components(
     small link graphs), above it the distributed min-label loop runs.
     Both paths produce identical (key, min-key-of-component) rows --
     property-tested equivalent.
-
-    ``seed`` (``DataFrame[key, component]``, e.g. the previous snapshot's
-    assignment) warm-starts the distributed loop: labels initialize to
-    the seed instead of each vertex's own key, so regions whose component
-    structure did not change converge in one round instead of
-    O(diameter). SOUNDNESS CAVEAT: a seed label must name a vertex in
-    the SAME component under the current edge set -- true when edges only
-    GROW between snapshots (a component can merge but never split; the
-    old min is still a member). If edges may have been removed (e.g.
-    incremental ingest with conversation deletion), do NOT seed --
-    recompute cold, as plans/incremental.py does. The local union-find
-    path ignores the seed (it is one-shot anyway).
     """
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -186,26 +102,12 @@ def connected_components(
         return spark.createDataFrame(
             pd.DataFrame(rows, columns=["key", "component"]), schema
         )
-    labels = sym.select(F.col("u").alias("key")).distinct().withColumn(
-        "component", F.col("key")
+    labels = (
+        sym.select(F.col("u").alias("key"))
+        .distinct()
+        .withColumn("component", F.col("key"))
+        .localCheckpoint()
     )
-    if seed is not None:
-        labels = (
-            labels.join(
-                seed.select("key", F.col("component").alias("_seed")),
-                "key",
-                "left",
-            )
-            # least() guards a malformed seed (label > key can never be a
-            # component min); coalesce covers vertices new since the seed
-            .select(
-                "key",
-                F.least(
-                    F.coalesce("_seed", F.col("key")), F.col("key")
-                ).alias("component"),
-            )
-        )
-    labels = labels.localCheckpoint()
 
     for _ in range(max_iter):
         # neighbor labels: for vertex u, min label among neighbors v

@@ -294,16 +294,6 @@ def simhash_fingerprints(
     return votes.select("doc_id", fp.cast("long").alias("simhash"))
 
 
-def simhash_buckets(df: DataFrame, **kw) -> DataFrame:
-    """Exact-fingerprint near-dup buckets (hamming distance 0)."""
-    fps = simhash_fingerprints(df, **kw)
-    return (
-        fps.groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def winnowing_fingerprints(
     df: DataFrame,
     text_col: str = "text",

@@ -51,13 +51,26 @@ def build_graph(
     provenance_cap: int = 20,
     check_id_collisions: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """mentions + triples -> (nodes, edges)."""
+    """mentions + triples -> (nodes, edges).
+
+    Raw triples are PROJECTED to unit-count rows (n=1, singleton
+    provenance), NOT pre-aggregated -- sum(1)==count(*) and
+    flatten([e])==collect(e), so semantics match the counts path while
+    the batch plan keeps its single edge-aggregate shuffle (a counts
+    pre-agg was measured ~35% slower on the one-shot flagship: it
+    shuffles every provenance struct twice). The incremental pipeline
+    feeds real aggregated counts to materialize_graph_from_counts."""
     cands = candidate_entities(mentions).persist()
     edges_sim = link_edges(cands, threshold=link_threshold)
-    out = materialize_graph(
+    unit = triples.select(
+        "subj_type", "subj", "pred", "obj_type", "obj",
+        F.lit(1).alias("n"),
+        F.array(F.struct("conv_id", "turn_idx")).alias("prov"),
+    )
+    out = materialize_graph_from_counts(
         cands,
         edges_sim,
-        triples,
+        unit,
         provenance_cap=provenance_cap,
         check_id_collisions=check_id_collisions,
     )
@@ -83,36 +96,6 @@ def triple_counts_from_triples(
     )
 
 
-def materialize_graph(
-    cands: DataFrame,
-    edges_sim: DataFrame,
-    triples: DataFrame,
-    provenance_cap: int = 20,
-    check_id_collisions: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Canonicalize candidates against link edges and materialize
-    (nodes, edges). Thin wrapper over the counts path: raw triples are
-    PROJECTED to unit-count rows (n=1, singleton provenance), NOT
-    pre-aggregated -- sum(1)==count(*) and flatten([e])==collect(e), so
-    semantics are identical while the batch plan keeps its original
-    single edge-aggregate shuffle (a counts pre-agg was measured ~35%
-    slower on the one-shot flagship: it shuffles every provenance
-    struct twice). The incremental pipeline feeds real aggregated
-    counts via materialize_graph_from_counts."""
-    unit = triples.select(
-        "subj_type", "subj", "pred", "obj_type", "obj",
-        F.lit(1).alias("n"),
-        F.array(F.struct("conv_id", "turn_idx")).alias("prov"),
-    )
-    return materialize_graph_from_counts(
-        cands,
-        edges_sim,
-        unit,
-        provenance_cap=provenance_cap,
-        check_id_collisions=check_id_collisions,
-    )
-
-
 def materialize_graph_from_counts(
     cands: DataFrame,
     edges_sim: DataFrame,
@@ -135,10 +118,12 @@ def materialize_graph_from_counts(
     # link edges (tests/test_kg.py singleton assertion) -- means every
     # candidate is its own component and its own canonical surface, so
     # the component join, the canonical-surface aggregate, and the eager
-    # checkpoint all collapse to a projection of the (persisted) cands:
-    # two shuffles and one action less in every graph build. Results are
-    # identical by construction: coalesce(component, key) = key and the
-    # per-singleton best surface = the candidate's own surface.
+    # checkpoint all collapse to a projection of cands: two shuffles and
+    # one action less in every graph build. Results are identical by
+    # construction: coalesce(component, key) = key and the per-singleton
+    # best surface = the candidate's own surface. The projection is lazy:
+    # build_graph unpersists cands before it returns, so each consumer of
+    # the result recomputes mentions -> candidates.
     if comp.isEmpty():
         enriched = cands.withColumn(
             "key", F.concat_ws("|", "entity_type", "surface")

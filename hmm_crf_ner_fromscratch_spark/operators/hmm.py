@@ -31,7 +31,7 @@ import math
 import os
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.viterbi import decode_by_length, viterbi_batch
@@ -287,10 +287,9 @@ def train_hmm(sentences: DataFrame, max_model_rows: int = 50_000_000) -> HMMMode
 def decode_hmm(
     sentences: DataFrame,
     model: HMMModel,
-    spark: SparkSession | None = None,
     token_col: str = "tokens",
     out_col: str = "tags_pred",
 ) -> DataFrame:
     """Viterbi-decode every row's token array; appends ``out_col``
-    (:meth:`HMMModel.tag_batch` via ``label``). ``spark`` is unused."""
+    (:meth:`HMMModel.tag_batch` via ``label``)."""
     return label(sentences, model, token_col=token_col, tag_col=out_col)

@@ -1047,7 +1047,9 @@ class IncrementalKGPipeline:
         # graph materialization: CC + canonicalization over the maintained
         # states (cross-candidate by nature -- CC is adaptive and cheap
         # relative to pair scoring), edge weights aggregated from the
-        # merged triples
+        # merged triples. CC is recomputed cold every run: removed
+        # conversations can split a component, so the previous snapshot's
+        # labels are not a valid warm start
         shared: dict = {}
 
         def graph(which: str):

@@ -1,14 +1,11 @@
 """K9 support: table IO with snapshot manifests + per-partition lineage.
 
-No Iceberg runtime jar ships in this sandbox (and none may be fetched), so
-the default engine is ``ParquetManifestTableIO``: Hive-layout Parquet plus
-a JSON manifest per stage emulating the snapshot/commit metadata the
-pipeline needs for exact resume. What it does and does not replicate is
-explicit: snapshot-id-addressed reads and commit atomicity via
-rename -> yes; Iceberg's snapshot isolation / time travel -> no.
-``IcebergTableIO`` (same interface) is selected automatically when a
-catalog is configured, so the pipeline runs unchanged on a real
-Iceberg deployment.
+The one table layer is ``ParquetManifestTableIO``: Hive-layout Parquet
+plus a JSON manifest per stage emulating the snapshot/commit metadata the
+pipeline needs for exact resume, with no Iceberg runtime jar. What it does
+and does not replicate is explicit: snapshot-id-addressed reads and commit
+atomicity via rename -> yes; Iceberg's snapshot isolation / time travel
+-> no.
 
 Lineage: after each stage commit, one row per output file (= output
 partition) is appended to ``<stage>/_lineage.parquet``: stage, run_id,
@@ -447,103 +444,6 @@ class ParquetManifestTableIO:
         ).first()
         got_xor = int(row.x) if row.x is not None else 0
         return got_xor == m.get("content_xor") and int(row.n) == m["row_count"]
-
-
-class IcebergTableIO:
-    """Same interface against a real Iceberg catalog (``spark.sql.catalog.*``
-    configured + runtime jar on the classpath). Not exercisable in this
-    sandbox (no jar, no network) -- constructor raises if the catalog is
-    absent so failures are loud, not silent."""
-
-    def __init__(self, spark: SparkSession, namespace: str):
-        self.spark = spark
-        self.namespace = namespace
-        catalogs = [
-            k for k in spark.sparkContext.getConf().getAll()
-            if k[0].startswith("spark.sql.catalog.")
-        ]
-        if not catalogs:
-            raise RuntimeError(
-                "no Iceberg catalog configured; use ParquetManifestTableIO"
-            )
-
-    def write(self, stage, df, input_snapshots, run_id, partition_by=None):
-        name = f"{self.namespace}.{stage}"
-        writer = df.writeTo(name).using("iceberg")
-        if partition_by:
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        writer.createOrReplace()
-        snap = (
-            self.spark.sql(f"SELECT snapshot_id FROM {name}.snapshots ORDER BY committed_at DESC LIMIT 1")
-            .first()[0]
-        )
-        return str(snap)
-
-    def read(self, stage):
-        return self.spark.read.table(f"{self.namespace}.{stage}")
-
-    def is_complete(self, stage, input_snapshots):
-        # Iceberg tables are snapshot-addressed; resume bookkeeping still
-        # uses the orchestrator's manifest of input snapshot ids.
-        try:
-            self.read(stage)
-            return True
-        except Exception:
-            return False
-
-    # -- bucketed commits: Iceberg-native equivalents --
-    def write_bucketed(
-        self, stage, df, input_snapshots, run_id,
-        affected_buckets=None, bucket_col="bucket",
-    ):
-        """Same contract as ParquetManifestTableIO.write_bucketed, mapped
-        to Iceberg primitives: identity-partition on the bucket column;
-        delta commits use overwritePartitions (Iceberg's dynamic
-        partition overwrite, atomic at the snapshot level -- strictly
-        stronger than the Hive-layout emulation's pre-delete+write)."""
-        name = f"{self.namespace}.{stage}"
-        if affected_buckets is None:
-            df.writeTo(name).using("iceberg").partitionedBy(
-                F.col(bucket_col)
-            ).createOrReplace()
-        else:
-            df.writeTo(name).overwritePartitions()
-        snap = (
-            self.spark.sql(
-                f"SELECT snapshot_id FROM {name}.snapshots ORDER BY committed_at DESC LIMIT 1"
-            ).first()[0]
-        )
-        return str(snap)
-
-    def read_buckets(self, stage, buckets, bucket_col="bucket"):
-        return self.read(stage).where(
-            F.col(bucket_col).isin([int(b) for b in buckets])
-        )
-
-    def compact(self, stage, buckets=None, run_id=None):
-        """Iceberg's own maintenance procedure subsumes the Hive-layout
-        compaction (and preserves logical content by construction)."""
-        catalog = self.namespace.split(".")[0]
-        self.spark.sql(
-            f"CALL {catalog}.system.rewrite_data_files(table => '{self.namespace}.{stage}')"
-        )
-        return self.snapshot_like(stage)
-
-    def snapshot_like(self, stage):
-        name = f"{self.namespace}.{stage}"
-        return str(
-            self.spark.sql(
-                f"SELECT snapshot_id FROM {name}.snapshots ORDER BY committed_at DESC LIMIT 1"
-            ).first()[0]
-        )
-
-
-def make_table_io(spark: SparkSession, base_dir: str):
-    """Pick Iceberg when a catalog is configured, else Parquet+manifest."""
-    try:
-        return IcebergTableIO(spark, base_dir)
-    except RuntimeError:
-        return ParquetManifestTableIO(spark, base_dir)
 
 
 def new_run_id() -> str:

@@ -9,8 +9,8 @@ Stage DAG:
     -> triples    (K4)
     -> nodes/edges (K5-K8)
 
-Each stage writes through TableIO (Parquet+manifest here, Iceberg when a
-catalog exists); a stage is skipped on re-run iff its manifest is complete
+Each stage writes through ``ParquetManifestTableIO`` (Parquet+manifest);
+a stage is skipped on re-run iff its manifest is complete
 AND its recorded input snapshot ids match the current upstream snapshots --
 so editing/removing any upstream invalidates exactly the affected suffix
 of the DAG.

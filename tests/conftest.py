@@ -17,6 +17,12 @@ from hmm_crf_ner_fromscratch_spark.session import get_spark  # noqa: E402
 REFERENCE = "/root/reference"
 GOLDEN_CACHE = os.path.join(os.path.dirname(__file__), ".golden_cache")
 
+# marks a test that compares against the reference implementation itself
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE),
+    reason=f"needs the reference implementation at {REFERENCE}",
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

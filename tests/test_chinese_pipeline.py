@@ -16,8 +16,10 @@ from hmm_crf_ner_fromscratch_spark.sources.transcripts import (
     synth_transcripts,
 )
 from tests.test_transcripts_mentions import spans_oracle
+from conftest import needs_reference
 
 
+@needs_reference
 def test_chinese_bmes_pipeline(spark, chinese_golden, tmp_path):
     sents = load_eval_sentences(chinese_golden["val"])[:200]
     tx = synth_transcripts(spark, 20, seed=17, eval_sentences=sents)

@@ -4,8 +4,10 @@ windows) and blank-line handling."""
 from __future__ import annotations
 
 from hmm_crf_ner_fromscratch_spark.sources.conll import read_conll
+from conftest import needs_reference
 
 
+@needs_reference
 def test_read_conll_directory_per_file_windows(spark, tmp_path, english_golden):
     # split the train file into two parts at a sentence boundary
     text = open(english_golden["train"], encoding="utf-8").read()

@@ -13,11 +13,13 @@ from hmm_crf_ner_fromscratch_spark.operators.linking import (
     tfidf_link_scores,
 )
 from hmm_crf_ner_fromscratch_spark.sources.conll import read_conll
+from conftest import needs_reference
 
 GOLD = "/root/reference/example_data/example_gold_result.txt"
 PRED = "/root/reference/example_data/example_my_result.txt"
 
 
+@needs_reference
 def test_evaluate_tagging_on_reference_example(spark):
     gold = read_conll(spark, GOLD, doc_id="ex")
     pred = read_conll(spark, PRED, doc_id="ex").withColumnRenamed("tags", "tags_pred")
@@ -57,6 +59,7 @@ def test_evaluate_tagging_on_reference_example(spark):
     assert got["B-ORG"].fn == 2 and got["B-PER"].fp == 2
 
 
+@needs_reference
 def test_classification_report_on_reference_example(spark):
     """check.py:38-40 parity: classification_report(labels=sort_labels[1:])
     over the bundled example pair, verified against a from-scratch
@@ -151,6 +154,7 @@ def test_tfidf_link_scores(spark):
     for score in s.values():
         assert -1e-9 <= score <= 1.0 + 1e-9
 
+@needs_reference
 def test_check_cli_reference_prompt_flow(tmp_path):
     """tools/check_cli.py: the reference's interactive prompt flow
     (check.py:44-67 -- prompt strings, retry-on-invalid loops, banner)

@@ -17,6 +17,7 @@ from hmm_crf_ner_fromscratch_spark.sources.conll import (
     read_conll,
     write_conll_local,
 )
+from conftest import needs_reference
 
 
 @pytest.fixture(scope="module")
@@ -25,6 +26,7 @@ def english_model(spark, english_golden):
     return train_hmm(train_df)
 
 
+@needs_reference
 def test_model_matches_reference_pickle(english_model, english_golden):
     with open(english_golden["model"], "rb") as f:
         ref = pickle.load(f)
@@ -46,6 +48,7 @@ def test_model_matches_reference_pickle(english_model, english_golden):
     assert np.array_equal(m.B, refB), "emission matrix mismatch"
 
 
+@needs_reference
 def test_english_decode_bitmatch(spark, english_model, english_golden, tmp_path):
     val_df = read_conll(spark, english_golden["val"], doc_id="en_val", with_tags=False)
     decoded = decode_hmm(val_df, english_model)
@@ -56,6 +59,7 @@ def test_english_decode_bitmatch(spark, english_model, english_golden, tmp_path)
     assert ours == golden, "English validation predictions are not byte-identical"
 
 
+@needs_reference
 def test_chinese_decode_bitmatch(spark, chinese_golden, tmp_path):
     train_df = read_conll(spark, chinese_golden["train"], doc_id="zh_train")
     model = train_hmm(train_df)
@@ -66,6 +70,7 @@ def test_chinese_decode_bitmatch(spark, chinese_golden, tmp_path):
     assert out.read_bytes() == open(chinese_golden["pred"], "rb").read()
 
 
+@needs_reference
 def test_unknown_word_emission_quirk(english_model):
     # Q3: unk emission = log(1/(count(t)+V)) per tag (hmm_ner.py:206-210)
     m = english_model

@@ -29,6 +29,7 @@ from hmm_crf_ner_fromscratch_spark.sources.transcripts import (
     tokenize_turns,
 )
 from tests.test_transcripts_mentions import spans_oracle
+from conftest import needs_reference
 
 
 def triples_oracle(mention_rows, window=0):
@@ -123,10 +124,6 @@ def test_linking_blocks_and_scores(spark):
 
 
 def test_connected_components_chain_and_clique(spark):
-    from hmm_crf_ner_fromscratch_spark.operators.components import (
-        connected_components_star,
-    )
-
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"), ("y", "z"), ("x", "z")],
         "src_key string, dst_key string",
@@ -137,18 +134,17 @@ def test_connected_components_chain_and_clique(spark):
     }
     comp = {r.key: r.component for r in connected_components(edges).collect()}
     assert comp == want
-    star = {r.key: r.component for r in connected_components_star(edges).collect()}
-    assert star == want
+    dist = {
+        r.key: r.component
+        for r in connected_components(edges, local_threshold=0).collect()
+    }
+    assert dist == want
 
 
-def test_connected_components_star_random_graphs(spark):
-    """Property: large-star/small-star agrees with min-label propagation
-    on random graphs, including a long path (the min-label worst case)."""
+def test_connected_components_local_matches_distributed(spark):
+    """Property: driver union-find agrees with min-label propagation on
+    random graphs, including a long path (the min-label worst case)."""
     import random
-
-    from hmm_crf_ner_fromscratch_spark.operators.components import (
-        connected_components_star,
-    )
 
     rng = random.Random(99)
     cases = []
@@ -159,7 +155,7 @@ def test_connected_components_star_random_graphs(spark):
         cases.append(
             [(rng.choice(nodes), rng.choice(nodes)) for _ in range(m)]
         )
-    # 40-node path: min-label needs ~40 rounds, star needs O(log n)
+    # 40-node path: min-label needs ~40 rounds
     path = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(40)]
     cases.append(path)
 
@@ -168,66 +164,15 @@ def test_connected_components_star_random_graphs(spark):
         if not edges_py:
             continue
         e = spark.createDataFrame(edges_py, "src_key string, dst_key string")
-        # three independent implementations must agree: driver union-find
-        # (small-graph adaptive path), distributed min-label loop (forced
-        # via local_threshold=0), large-star/small-star
+        # both adaptive paths must agree: driver union-find (small-graph
+        # path) and the distributed min-label loop (forced via
+        # local_threshold=0)
         base = {r.key: r.component for r in connected_components(e, max_iter=60).collect()}
         dist = {
             r.key: r.component
             for r in connected_components(e, max_iter=60, local_threshold=0).collect()
         }
-        star = {r.key: r.component for r in connected_components_star(e).collect()}
         assert dist == base, f"local/distributed mismatch on {edges_py[:5]}..."
-        assert star == base, f"star mismatch on {edges_py[:5]}..."
-
-
-def test_connected_components_warm_start(spark):
-    """Seeded (warm-start) min-label propagation equals cold recompute
-    under append-only edge growth, and a complete seed converges without
-    propagation rounds (max_iter=1 suffices where cold needs many)."""
-    import random
-
-    rng = random.Random(7)
-    nodes = [f"w{i:02d}" for i in range(24)]
-    e1_py = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(20)]
-    e1_py = [(a, b) for a, b in e1_py if a != b]
-    e2_py = e1_py + [(rng.choice(nodes), rng.choice(nodes)) for _ in range(12)]
-    e2_py = [(a, b) for a, b in e2_py if a != b]
-    e1 = spark.createDataFrame(e1_py, "src_key string, dst_key string")
-    e2 = spark.createDataFrame(e2_py, "src_key string, dst_key string")
-
-    seed = connected_components(e1, local_threshold=0, max_iter=60)
-    cold = {
-        r.key: r.component
-        for r in connected_components(e2, local_threshold=0, max_iter=60).collect()
-    }
-    warm = {
-        r.key: r.component
-        for r in connected_components(
-            e2, local_threshold=0, max_iter=60, seed=seed
-        ).collect()
-    }
-    assert warm == cold
-
-    # long path: cold min-label with max_iter=1 CANNOT finish, while a
-    # complete seed makes round 1 a no-op fixpoint -> correct labels
-    path = [(f"q{i:02d}", f"q{i + 1:02d}") for i in range(30)]
-    ep = spark.createDataFrame(path, "src_key string, dst_key string")
-    full = connected_components(ep, local_threshold=0, max_iter=60)
-    expected = {r.key: r.component for r in full.collect()}
-    assert set(expected.values()) == {"q00"}
-    one_round_cold = {
-        r.key: r.component
-        for r in connected_components(ep, local_threshold=0, max_iter=1).collect()
-    }
-    assert one_round_cold != expected
-    one_round_warm = {
-        r.key: r.component
-        for r in connected_components(
-            ep, local_threshold=0, max_iter=1, seed=full
-        ).collect()
-    }
-    assert one_round_warm == expected
 
 
 def test_build_graph_e2e(spark, english_golden):
@@ -252,6 +197,7 @@ def test_build_graph_e2e(spark, english_golden):
     nodes.unpersist()
 
 
+@needs_reference
 def test_e2e_triple_pr_vs_reference(spark, english_golden):
     """BASELINE.json metric: triple P/R >= 0.95 vs the reference extraction.
 

@@ -94,55 +94,6 @@ def test_pipeline_with_crf_labeler(spark, tmp_path):
         assert m["sec"] > 0 and m["rows"] >= 0
 
 
-def test_table_io_selection_and_iceberg_contract(spark, tmp_path):
-    """IcebergTableIO is code-complete but cannot run here (no runtime
-    jar); this pins its *contract*: catalog-based selection logic, loud
-    failure without a catalog, and interface compatibility with
-    ParquetManifestTableIO so `make_table_io` swap-in is safe."""
-    import inspect
-
-    import pytest as _pytest
-
-    from hmm_crf_ner_fromscratch_spark.plans.lineage import (
-        IcebergTableIO,
-        ParquetManifestTableIO,
-        make_table_io,
-    )
-
-    # this session has no spark.sql.catalog.* -> parquet+manifest fallback
-    io = make_table_io(spark, str(tmp_path / "t"))
-    assert isinstance(io, ParquetManifestTableIO)
-    with _pytest.raises(RuntimeError, match="no Iceberg catalog"):
-        IcebergTableIO(spark, "ns")
-
-    # with a catalog configured, the Iceberg branch is selected
-    class _Conf:
-        def getAll(self):
-            return [
-                ("spark.sql.catalog.ice", "org.apache.iceberg.spark.SparkCatalog"),
-                ("spark.master", "local[8]"),
-            ]
-
-    class _SC:
-        def getConf(self):
-            return _Conf()
-
-    class _Spark:
-        sparkContext = _SC()
-
-    ice = IcebergTableIO(_Spark(), "ice.kg")
-    assert ice.namespace == "ice.kg"
-
-    # interface contract: the orchestrator-facing methods exist with
-    # compatible leading parameters on both implementations (incl. the
-    # bucketed-commit surface the incremental pipeline uses)
-    for meth in ("write", "read", "is_complete", "write_bucketed", "read_buckets", "compact"):
-        p_ice = list(inspect.signature(getattr(IcebergTableIO, meth)).parameters)
-        p_par = list(inspect.signature(getattr(ParquetManifestTableIO, meth)).parameters)
-        shared = min(len(p_ice), len(p_par))
-        assert p_ice[:shared] == p_par[:shared], meth
-
-
 def test_lineage_rows(spark, english_golden, tmp_path):
     sents = load_eval_sentences(english_golden["val"])[:100]
     tx = synth_transcripts(spark, 50, seed=2, eval_sentences=sents)

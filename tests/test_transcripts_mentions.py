@@ -16,6 +16,7 @@ from hmm_crf_ner_fromscratch_spark.sources.transcripts import (
     synth_transcripts,
     tokenize_turns,
 )
+from conftest import needs_reference
 
 
 def spans_oracle(tokens, tags, scheme="bio"):
@@ -67,6 +68,7 @@ def test_synth_transcripts_deterministic_and_skewed(spark):
         assert idxs == list(range(len(idxs)))
 
 
+@needs_reference
 def test_eval_slice_text_equality(spark, english_golden):
     sents = load_eval_sentences(english_golden["val"])
     df = synth_transcripts(spark, 500, seed=42, eval_sentences=sents[:300])
@@ -79,6 +81,7 @@ def test_eval_slice_text_equality(spark, english_golden):
     assert [r.text for r in got] == sents[:300]
 
 
+@needs_reference
 def test_decode_through_transcript_path_bitmatch(spark, english_golden):
     """Per-turn decode over the salted transcript path must equal the
     reference's per-sentence predictions (tag-sequence identity)."""
