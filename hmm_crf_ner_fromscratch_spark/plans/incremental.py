@@ -1,9 +1,15 @@
-"""Incremental KG ingest: delta decode over changed conversations only.
+"""The KG pipeline: checkpointed stage DAG with exact resume and delta ingest.
 
-At 100 TB the batch pipeline's invalidation rule ("any input change recomputes
-everything", plans/pipeline.py) is the wrong contract for the common case --
-an append-mostly transcript table where each ingest adds/edits a sliver of
-conversations. This module processes exactly that sliver:
+Stage DAG (one ``ParquetManifestTableIO`` commit per stage):
+  transcripts -> decoded (salting + tokenize + HMM/CRF decode) -> mentions
+    -> triples -> triple_counts / candidates -> link_pairs -> nodes, edges
+
+A stage is skipped iff its manifest is complete AND its recorded input
+snapshot ids match the current upstream snapshots, so a re-run recomputes
+exactly the missing or invalidated suffix. The first ``run`` into an empty
+work dir is the one-shot build; later runs over an append-mostly transcript
+table, where each ingest adds/edits a sliver of conversations, process
+exactly that sliver:
 
   1. per-conversation content digests (order-insensitive xxhash64 XOR over a
      conversation's turns) diffed against the digests recorded at the last
@@ -47,6 +53,7 @@ in as ``changed`` below without touching the rest of the flow.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import time
 from dataclasses import dataclass, field
@@ -72,7 +79,6 @@ from ..operators.mentions import extract_mentions
 from ..operators.relations import template_triples
 from ..sources.transcripts import salted_turns, tokenize_turns
 from .lineage import ParquetManifestTableIO, new_run_id
-from .pipeline import _model_fingerprint, transcripts_snapshot
 
 BUCKET_COL = "bucket"
 DIGEST_COLS = ("conv_id", "turn_idx", "role", "text")
@@ -80,6 +86,31 @@ DIGEST_COLS = ("conv_id", "turn_idx", "role", "text")
 _TRIPLE_KEY = ("subj_type", "subj", "pred", "obj_type", "obj")
 _PROV_DDL = "array<struct<conv_id:string,turn_idx:int>>"
 PROVENANCE_CAP = 20
+
+
+def _model_fingerprint(model) -> str:
+    h = hashlib.sha256()
+    if isinstance(model, CRFModel):
+        h.update(b"crf")
+        h.update(model.weights.tobytes())
+        h.update(str(len(model.feature_index)).encode())
+        h.update("\x1f".join(model.tags).encode())
+    else:
+        h.update(b"hmm")
+        h.update(model.pi.tobytes())
+        h.update(model.A.tobytes())
+        h.update(model.B.tobytes())
+    return h.hexdigest()[:16]
+
+
+def transcripts_snapshot(df: DataFrame) -> str:
+    """Content-hash snapshot id for a transcript frame that has no table
+    snapshot of its own (e.g. synthetic inputs): order-insensitive xxhash."""
+    row = df.select(
+        F.bit_xor(F.xxhash64(*DIGEST_COLS)).alias("h"),
+        F.count("*").alias("n"),
+    ).first()
+    return f"tx:{row.h}:{row.n}"
 
 
 def conv_digests(transcripts: DataFrame) -> DataFrame:
@@ -109,7 +140,8 @@ class IncrementalResult:
 
 
 class IncrementalKGPipeline:
-    """Same stage DAG and operators as KGPipeline, delta execution.
+    """The one stage orchestrator: ``run`` into a fresh ``work_dir`` is the
+    one-shot build; later ``run``/``run_append`` calls execute the delta.
 
     ``n_buckets`` sizes the stage partitioning: pick so one bucket's decoded
     rows fit an executor write task comfortably (at 100 TB input and the

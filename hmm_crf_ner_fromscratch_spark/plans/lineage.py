@@ -33,6 +33,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _LINEAGE_SCHEMA = (
     "stage string, run_id string, file string, rows bigint, "
@@ -136,7 +137,6 @@ class ParquetManifestTableIO:
         df: DataFrame,
         input_snapshots: list[str],
         run_id: str,
-        partition_by: list[str] | None = None,
     ) -> str:
         """Write stage output + lineage, then commit the manifest (the
         manifest write is the atomic commit point: written to a temp file
@@ -158,10 +158,7 @@ class ParquetManifestTableIO:
             F.bit_xor(F.xxhash64(*cols)).alias("content_xor"),
             F.count(F.lit(1)).alias("rows"),
         )
-        writer = observed.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        observed.write.mode("overwrite").parquet(data_dir)
         got = obs.get
         global_xor = int(got["content_xor"]) if got["content_xor"] is not None else 0
         total_rows = int(got["rows"])
@@ -191,6 +188,7 @@ class ParquetManifestTableIO:
             "row_count": total_rows,
             "content_xor": global_xor,
             "columns": cols,
+            "schema": df.schema.jsonValue(),
             "n_files": len(lineage_rows),
             "complete": True,
         }
@@ -201,7 +199,17 @@ class ParquetManifestTableIO:
         return snapshot
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._dir(stage), "data"))
+        m = self.manifest(stage)
+        return self._read_data(stage, m.get("schema") if m else None)
+
+    def _read_data(self, stage: str, schema: dict | None) -> DataFrame:
+        """Read a stage's data dir with its recorded schema: a commit of an
+        empty partitioned frame writes no files, so inference has nothing
+        to read. Manifests without a schema fall back to inference."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(os.path.join(self._dir(stage), "data"))
 
     # -- bucketed commits (incremental ingest) --
     def write_bucketed(
@@ -244,6 +252,9 @@ class ParquetManifestTableIO:
             if prev
             else [c for c in df.columns if c != bucket_col]
         )
+        # data columns first, then the partition column, as partition
+        # discovery orders them on read-back
+        schema = df.select(*cols, bucket_col).schema.jsonValue()
 
         if affected_buckets is not None:
             # the caller materialized df (eager checkpoint) so it no longer
@@ -273,7 +284,7 @@ class ParquetManifestTableIO:
         # per-bucket ledger refresh: scan ONLY the (re)written buckets
         # (partition pruning on the read-back), hash in the recorded
         # column order so delta and full commits agree bit-for-bit
-        out = self.spark.read.parquet(data_dir)
+        out = self._read_data(stage, schema)
         if affected_buckets is not None:
             out = out.where(F.col(bucket_col).isin([int(b) for b in affected_buckets]))
         agg = (
@@ -351,6 +362,7 @@ class ParquetManifestTableIO:
             "row_count": total_rows,
             "content_xor": global_xor,
             "columns": cols,
+            "schema": schema,
             "bucketed": True,
             "bucket_col": bucket_col,
             "n_buckets": n_buckets,

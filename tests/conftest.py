@@ -1,4 +1,5 @@
-"""Shared fixtures: one SparkSession per test session, plus reference
+"""Shared fixtures: one SparkSession per test session, a hermetic English
+HMM trained on dictionary-tagged synthetic transcripts, plus reference
 goldens generated by actually running the (deterministic) reference HMM
 implementation at /root/reference -- never copied, always re-derived."""
 
@@ -12,7 +13,14 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F  # noqa: E402
+
+from hmm_crf_ner_fromscratch_spark.operators.hmm import train_hmm  # noqa: E402
 from hmm_crf_ner_fromscratch_spark.session import get_spark  # noqa: E402
+from hmm_crf_ner_fromscratch_spark.sources.transcripts import (  # noqa: E402
+    synth_transcripts,
+    tokenize_turns,
+)
 
 REFERENCE = "/root/reference"
 GOLDEN_CACHE = os.path.join(os.path.dirname(__file__), ".golden_cache")
@@ -24,10 +32,44 @@ needs_reference = pytest.mark.skipif(
 )
 
 
+# dictionary tagger for the hermetic HMM training corpora (synth_transcripts
+# filler words); "Street"/"States" are I- tags, so orphan I- spans occur too
+DICT = {
+    "Germany": "B-LOC", "Russia": "B-LOC", "England": "B-LOC", "Paris": "B-LOC",
+    "France": "B-LOC", "Iraq": "B-LOC", "Wall": "B-LOC", "Street": "I-LOC",
+    "United": "B-LOC", "States": "I-LOC", "Clinton": "B-PER", "Michael": "B-PER",
+    "Reuters": "B-ORG", "U.N.": "B-ORG",
+}
+
+
+def dict_tagged(spark, n_turns: int, seed: int):
+    """``train_hmm`` input: synthetic turns tagged by ``DICT``."""
+
+    def tag(w):
+        expr = F.lit("O")
+        for word, t in DICT.items():
+            expr = F.when(w == word, t).otherwise(expr)
+        return expr
+
+    corpus = tokenize_turns(synth_transcripts(spark, n_turns, seed=seed))
+    return corpus.select(
+        F.col("conv_id").alias("doc_id"),
+        F.col("turn_idx").cast("long").alias("sent_id"),
+        "tokens",
+        F.transform("tokens", tag).alias("tags"),
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", master="local[8]", shuffle_partitions="8")
     yield s
+
+
+@pytest.fixture(scope="session")
+def english_model(spark):
+    """Hermetic English HMM (no reference corpus needed)."""
+    return train_hmm(dict_tagged(spark, 600, seed=13))
 
 
 def _ensure_reference_hmm(corpus: str) -> dict[str, str]:

@@ -6,10 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hmm_crf_ner_fromscratch_spark.operators.hmm import train_hmm
-from hmm_crf_ner_fromscratch_spark.plans.pipeline import (
-    KGPipeline,
-    transcripts_snapshot,
-)
+from hmm_crf_ner_fromscratch_spark.plans.incremental import IncrementalKGPipeline
 from hmm_crf_ner_fromscratch_spark.sources.conll import read_conll
 from hmm_crf_ner_fromscratch_spark.sources.transcripts import (
     load_eval_sentences,
@@ -25,8 +22,10 @@ def test_chinese_bmes_pipeline(spark, chinese_golden, tmp_path):
     tx = synth_transcripts(spark, 20, seed=17, eval_sentences=sents)
     model = train_hmm(read_conll(spark, chinese_golden["train"], doc_id="zh"))
 
-    pipe = KGPipeline(spark, str(tmp_path / "kg"), model, scheme="bmes", salt_bucket=64)
-    res = pipe.run(tx, transcripts_snapshot(tx))
+    pipe = IncrementalKGPipeline(
+        spark, str(tmp_path / "kg"), model, scheme="bmes", salt_bucket=64
+    )
+    res = pipe.run(tx)
     assert res.executed[-1] == "edges"
 
     # mentions equal the independent oracle applied to golden tags

@@ -7,14 +7,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from hmm_crf_ner_fromscratch_spark.operators.graph import build_graph
 from hmm_crf_ner_fromscratch_spark.operators.hmm import train_hmm
+from hmm_crf_ner_fromscratch_spark.operators.relations import template_triples
 from hmm_crf_ner_fromscratch_spark.plans.incremental import (
     IncrementalKGPipeline,
     conv_digests,
-)
-from hmm_crf_ner_fromscratch_spark.plans.pipeline import KGPipeline
-from hmm_crf_ner_fromscratch_spark.plans.pipeline import (
-    transcripts_snapshot,
 )
 from hmm_crf_ner_fromscratch_spark.sources.conll import read_conll
 from hmm_crf_ner_fromscratch_spark.sources.transcripts import (
@@ -110,12 +108,12 @@ def test_incremental_delta_and_convergence(spark, english_golden, tmp_path):
     for stage in ("decoded", "mentions", "triples", "candidates", "link_pairs"):
         assert r2.snapshots[stage] == r_one.snapshots[stage], stage
 
-    # and the graph matches the batch pipeline on the same input
-    batch = KGPipeline(
-        spark, str(tmp_path / "batch"), model, salt_bucket=64
-    )
-    batch.run(tx2, transcripts_snapshot(tx2))
-    assert _edges_set(inc.io) == _edges_set(batch.io)
+    # and the graph matches the batch build over the same mentions
+    m = oneshot.io.read("mentions").drop("bucket")
+    _, batch_edges = build_graph(m, template_triples(m, cross_turn_window=2))
+    assert _edges_set(inc.io) == {
+        (r.src, r.pred, r.dst, r.weight) for r in batch_edges.collect()
+    }
 
 
 def test_run_append_matches_full_run(spark, english_golden, tmp_path):
@@ -250,6 +248,32 @@ def test_compaction_preserves_snapshot(spark, tmp_path):
     # checksum both before and after the layout change
     assert io.read("s").count() == 3000
     assert io.manifest("s")["snapshot_id"] == snap
+    assert io.audit("s") is True
+
+
+def test_empty_bucketed_stage_commits_and_reads(spark, tmp_path):
+    """A bucketed commit with no rows (link_pairs of a corpus with no
+    link pair) writes no data files; it still reads back with its columns
+    from the schema the manifest records, audits clean, and takes a delta
+    commit on top."""
+    from hmm_crf_ner_fromscratch_spark.plans.lineage import (
+        ParquetManifestTableIO,
+    )
+
+    io = ParquetManifestTableIO(spark, str(tmp_path / "t"))
+    ddl = "id long, v string, bucket int"
+    empty = spark.createDataFrame([], ddl)
+    snap0 = io.write_bucketed("s", empty, ["i1"], "r1", n_buckets=4)
+    got = io.read("s")
+    assert got.count() == 0
+    assert got.dtypes == empty.dtypes
+    assert io.audit("s") is True
+
+    delta = spark.createDataFrame([(1, "a", 1), (2, "b", 3)], ddl)
+    snap1 = io.write_bucketed("s", delta, ["i2"], "r2", affected_buckets=[1, 3])
+    assert snap1 != snap0 and io.snapshot_id("s") == snap1
+    assert sorted(r.id for r in io.read("s").collect()) == [1, 2]
+    assert io.manifest("s")["row_count"] == 2
     assert io.audit("s") is True
 
 

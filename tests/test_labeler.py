@@ -49,17 +49,10 @@ from hmm_crf_ner_fromscratch_spark.sources.transcripts import (
     synth_transcripts,
     tokenize_turns,
 )
+from conftest import dict_tagged
 
 KEYS = ("conv_id", "turn_idx")
 SPAN_COLS = ["span_start", "span_end", "entity_type", "surface"]
-# dictionary tagger for the HMM training corpus (synth_transcripts filler
-# words); "Street"/"States" are I- tags, so orphan I- spans occur too
-DICT = {
-    "Germany": "B-LOC", "Russia": "B-LOC", "England": "B-LOC", "Paris": "B-LOC",
-    "France": "B-LOC", "Iraq": "B-LOC", "Wall": "B-LOC", "Street": "I-LOC",
-    "United": "B-LOC", "States": "I-LOC", "Clinton": "B-PER", "Michael": "B-PER",
-    "Reuters": "B-ORG", "U.N.": "B-ORG",
-}
 EDGE_TURNS = [  # (conv_id, turn_idx, text)
     ("edge", 0, ""),  # T = 0
     ("edge", 1, "zzqx wvut qqqq"),  # every word unknown to every model
@@ -79,22 +72,8 @@ def _turns(spark):
     return tokenize_turns(synth.unionByName(extra)).persist()
 
 
-def _dict_tag(w):
-    expr = F.lit("O")
-    for word, t in DICT.items():
-        expr = F.when(w == word, t).otherwise(expr)
-    return expr
-
-
 def _hmm_case(spark):
-    corpus = tokenize_turns(synth_transcripts(spark, 2000, seed=13))
-    tagged = corpus.select(
-        F.col("conv_id").alias("doc_id"),
-        F.col("turn_idx").cast("long").alias("sent_id"),
-        "tokens",
-        F.transform("tokens", _dict_tag).alias("tags"),
-    )
-    model = train_hmm(tagged)
+    model = train_hmm(dict_tagged(spark, 2000, seed=13))
     B_ext = model.b_extended()
 
     def oracle(tokens):

@@ -2,63 +2,75 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
-from hmm_crf_ner_fromscratch_spark.operators.hmm import train_hmm
-from hmm_crf_ner_fromscratch_spark.plans.pipeline import (
-    KGPipeline,
-    transcripts_snapshot,
-)
-from hmm_crf_ner_fromscratch_spark.sources.conll import read_conll
-from hmm_crf_ner_fromscratch_spark.sources.transcripts import (
-    load_eval_sentences,
-    synth_transcripts,
-)
+from hmm_crf_ner_fromscratch_spark.operators.graph import build_graph
+from hmm_crf_ner_fromscratch_spark.operators.relations import template_triples
+from hmm_crf_ner_fromscratch_spark.plans.incremental import IncrementalKGPipeline
+from hmm_crf_ner_fromscratch_spark.sources.transcripts import synth_transcripts
+
+STAGES = [
+    "decoded", "mentions", "triples", "triple_counts", "candidates",
+    "link_pairs", "nodes", "edges",
+]
 
 
-def _edges_set(pipe):
-    return {
-        (r.src, r.pred, r.dst, r.weight)
-        for r in pipe.io.read("edges").collect()
-    }
+def _edges_set(edges):
+    return {(r.src, r.pred, r.dst, r.weight) for r in edges.collect()}
 
 
-def test_pipeline_run_resume_invalidate(spark, english_golden, tmp_path):
-    sents = load_eval_sentences(english_golden["val"])[:400]
-    tx = synth_transcripts(spark, 300, seed=21, eval_sentences=sents)
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
-    snap = transcripts_snapshot(tx)
+@pytest.fixture(scope="module")
+def full_load(spark, english_model, tmp_path_factory):
+    """One full load shared by the module: (pipeline, transcripts, result)."""
+    tx = synth_transcripts(spark, 300, seed=21)
+    pipe = IncrementalKGPipeline(
+        spark, str(tmp_path_factory.mktemp("kg")), english_model,
+        salt_bucket=64, n_buckets=16,
+    )
+    return pipe, tx, pipe.run(tx)
 
-    pipe = KGPipeline(spark, str(tmp_path / "kg"), model, salt_bucket=64)
-    r1 = pipe.run(tx, snap)
-    assert r1.executed == ["decoded", "mentions", "triples", "nodes", "edges"]
+
+def test_pipeline_run_resume_invalidate(spark, full_load):
+    pipe, tx, r1 = full_load
+    assert r1.executed == STAGES
     assert r1.skipped == []
-    edges1 = _edges_set(pipe)
+    edges1 = _edges_set(pipe.io.read("edges"))
     assert len(edges1) > 50
+    # the committed graph is the one-shot build over the committed mentions
+    m = pipe.io.read("mentions").drop("bucket")
+    _, want = build_graph(m, template_triples(m, cross_turn_window=2))
+    assert edges1 == _edges_set(want)
 
     # full resume: nothing recomputes, outputs identical
-    r2 = pipe.run(tx, snap)
+    r2 = pipe.run(tx)
     assert r2.executed == []
-    assert r2.skipped == ["decoded", "mentions", "triples", "nodes", "edges"]
-    assert _edges_set(pipe) == edges1
+    assert r2.skipped == STAGES
+    assert _edges_set(pipe.io.read("edges")) == edges1
     assert r2.snapshots == r1.snapshots
 
-    # partial resume: nuke the triples manifest -> triples recomputes; its
-    # content-defined snapshot id comes out identical, so downstream nodes/
-    # edges remain valid and are skipped (content-addressed invalidation)
-    import os
-
-    os.remove(tmp_path / "kg" / "triples" / "_manifest.json")
-    r3 = pipe.run(tx, snap)
+    # partial resume, as a crash after the mentions commit leaves the
+    # store (the digest state commits last): triples recomputes; its
+    # content-defined snapshot id comes out identical, so every
+    # downstream stage remains valid and is skipped
+    base = pipe.io.base_dir
+    os.remove(os.path.join(base, "triples", "_manifest.json"))
+    shutil.rmtree(os.path.join(base, "_convs"))
+    r3 = pipe.run(tx)
     assert r3.executed == ["triples"]
-    assert r3.skipped == ["decoded", "mentions", "nodes", "edges"]
-    assert _edges_set(pipe) == edges1
+    assert r3.skipped == [s for s in STAGES if s != "triples"]
+    assert _edges_set(pipe.io.read("edges")) == edges1
     assert r3.snapshots == r1.snapshots  # deterministic snapshot ids
 
-    # input change invalidates everything
-    tx2 = synth_transcripts(spark, 310, seed=21, eval_sentences=sents)
-    r4 = pipe.run(tx2, transcripts_snapshot(tx2))
-    assert r4.executed == ["decoded", "mentions", "triples", "nodes", "edges"]
+    # input change (ten turns of new conversations) invalidates everything
+    extra = synth_transcripts(spark, 10, seed=22).withColumn(
+        "conv_id", F.concat(F.lit("n_"), F.col("conv_id"))
+    )
+    r4 = pipe.run(tx.unionByName(extra))
+    assert r4.executed == STAGES
 
 
 def test_pipeline_with_crf_labeler(spark, tmp_path):
@@ -81,9 +93,9 @@ def test_pipeline_with_crf_labeler(spark, tmp_path):
         "conv_id string, turn_idx int, role string, text string, tool string",
     ).withColumn("ts", F.to_timestamp(F.lit("2026-01-01 00:00:00")))
 
-    pipe = KGPipeline(spark, str(tmp_path / "kg"), model, salt_bucket=16)
-    res = pipe.run(tx, transcripts_snapshot(tx))
-    assert res.executed == ["decoded", "mentions", "triples", "nodes", "edges"]
+    pipe = IncrementalKGPipeline(spark, str(tmp_path / "kg"), model, salt_bucket=16)
+    res = pipe.run(tx)
+    assert res.executed == STAGES
     mentions = {
         (r.surface, r.entity_type) for r in pipe.io.read("mentions").collect()
     }
@@ -94,13 +106,8 @@ def test_pipeline_with_crf_labeler(spark, tmp_path):
         assert m["sec"] > 0 and m["rows"] >= 0
 
 
-def test_lineage_rows(spark, english_golden, tmp_path):
-    sents = load_eval_sentences(english_golden["val"])[:100]
-    tx = synth_transcripts(spark, 50, seed=2, eval_sentences=sents)
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
-    pipe = KGPipeline(spark, str(tmp_path / "kg"), model, salt_bucket=64)
-    pipe.run(tx, transcripts_snapshot(tx))
-
+def test_lineage_rows(full_load):
+    pipe = full_load[0]
     lin = pipe.io.lineage("mentions")
     rows = lin.collect()
     assert {r.stage for r in rows} == {"mentions"}

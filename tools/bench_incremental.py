@@ -2,8 +2,8 @@
 
 Builds an n-turn transcript corpus, times (1) the initial full load
 through IncrementalKGPipeline, (2) a run_append of a ~pct% batch of new
-conversations, and (3) what a from-scratch batch recompute of the grown
-corpus costs (the cost incremental ingest avoids). Prints one JSON line.
+conversations, and (3) what a one-shot build of the grown corpus into a
+fresh work dir costs (the cost incremental ingest avoids). Prints one JSON line.
 
 Usage: python tools/bench_incremental.py [n_turns] [pct] [cores]
 """
@@ -29,10 +29,6 @@ def main():
     from hmm_crf_ner_fromscratch_spark.operators.hmm import train_hmm
     from hmm_crf_ner_fromscratch_spark.plans.incremental import (
         IncrementalKGPipeline,
-    )
-    from hmm_crf_ner_fromscratch_spark.plans.pipeline import (
-        KGPipeline,
-        transcripts_snapshot,
     )
     from hmm_crf_ner_fromscratch_spark.session import get_spark
     from hmm_crf_ner_fromscratch_spark.sources.conll import read_conll
@@ -69,11 +65,11 @@ def main():
     r_app = pipe.run_append(delta)
     append_sec = time.time() - t0
 
-    # what the append avoided: batch recompute of the grown corpus
+    # what the append avoided: a one-shot build of the grown corpus
     grown = tx.unionByName(delta)
-    batch = KGPipeline(spark, os.path.join(base_dir, "batch"), model)
+    batch = IncrementalKGPipeline(spark, os.path.join(base_dir, "batch"), model)
     t0 = time.time()
-    batch.run(grown, transcripts_snapshot(grown))
+    batch.run(grown)
     recompute_sec = time.time() - t0
 
     print(

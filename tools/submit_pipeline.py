@@ -33,9 +33,8 @@ def main():
     spark.sparkContext.setLogLevel("WARN")
 
     from hmm_crf_ner_fromscratch_spark.operators.hmm import train_hmm
-    from hmm_crf_ner_fromscratch_spark.plans.pipeline import (
-        KGPipeline,
-        transcripts_snapshot,
+    from hmm_crf_ner_fromscratch_spark.plans.incremental import (
+        IncrementalKGPipeline,
     )
     from hmm_crf_ner_fromscratch_spark.sources.conll import read_conll
     from hmm_crf_ner_fromscratch_spark.sources.transcripts import synth_transcripts
@@ -45,15 +44,17 @@ def main():
         tx = spark.read.parquet(args.transcripts_parquet)
     else:
         tx = synth_transcripts(spark, args.n_turns, seed=42)
-    pipe = KGPipeline(spark, args.work_dir, model)
-    res = pipe.run(tx, transcripts_snapshot(tx))
+    pipe = IncrementalKGPipeline(spark, args.work_dir, model)
+    res = pipe.run(tx)
     print(f"run_id={res.run_id} executed={res.executed} skipped={res.skipped}")
-    for stage in ("decoded", "mentions", "triples", "nodes", "edges"):
-        m = res.metrics.get(stage, {})
-        print(
-            f"stage={stage} rows={pipe.io.manifest(stage)['row_count']}"
-            + (f" sec={m['sec']} rows/s={m['rows_per_sec']}" if m else " (skipped)")
-        )
+    for stage in res.snapshots:
+        rows = pipe.io.manifest(stage)["row_count"]
+        m = res.metrics.get(stage)
+        if m:
+            rate = round(rows / m["sec"]) if m["sec"] > 0 else None
+            print(f"stage={stage} rows={rows} sec={m['sec']} rows/s={rate}")
+        else:
+            print(f"stage={stage} rows={rows} (skipped)")
     spark.stop()
 
 
