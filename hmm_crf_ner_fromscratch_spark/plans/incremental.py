@@ -35,9 +35,12 @@ exactly that sliver:
      bounded by DISTINCT entities/triple keys, not corpus size;
   5. snapshot ids stay content-defined through the per-bucket ledger
      (lineage.write_bucketed): a chain of incremental commits converges to
-     the IDENTICAL stage snapshot ids a one-shot run over the final input
-     produces -- which is also the property the tests pin, for every
-     bucketed stage including candidates and link_pairs.
+     the IDENTICAL decoded, mentions, triples, candidates and link_pairs
+     snapshot ids a one-shot run over the final input produces, and to
+     the same (src, pred, dst, weight) edge set -- the properties the
+     tests pin. triple_counts, nodes and edges do not converge by id:
+     their capped provenance samples depend on the commit history (and
+     on n_buckets), so only their counted content is equal.
 
 Maintenance: `compact()` (TableIO) merges small files within partitions;
 `rebalance()` folds accumulated generations back into the hash layout --
@@ -440,8 +443,9 @@ class IncrementalKGPipeline:
         entire table would compute: transcripts_snapshot is an XOR over
         rows, so it is derivable from the per-conversation digest state
         (XOR of digests, sum of turn counts) without touching the table.
-        Stage snapshots therefore converge to the one-shot ids -- pinned
-        by test.
+        The decoded ... link_pairs snapshots therefore converge to the
+        one-shot ids, and the edges to the one-shot edge set -- pinned by
+        test (module docstring, point 5).
         """
         io = self.io
         prev = self._prev_digests()

@@ -8,17 +8,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from hmm_crf_ner_fromscratch_spark.operators.graph import build_graph
-from hmm_crf_ner_fromscratch_spark.operators.hmm import train_hmm
 from hmm_crf_ner_fromscratch_spark.operators.relations import template_triples
 from hmm_crf_ner_fromscratch_spark.plans.incremental import (
     IncrementalKGPipeline,
     conv_digests,
 )
-from hmm_crf_ner_fromscratch_spark.sources.conll import read_conll
-from hmm_crf_ner_fromscratch_spark.sources.transcripts import (
-    load_eval_sentences,
-    synth_transcripts,
-)
+from hmm_crf_ner_fromscratch_spark.sources.transcripts import synth_transcripts
 
 
 def _edges_set(io):
@@ -27,21 +22,19 @@ def _edges_set(io):
     }
 
 
-def _mk_inputs(spark, english_golden):
-    sents = load_eval_sentences(english_golden["val"])[:300]
-    tx1 = synth_transcripts(spark, 400, seed=21, eval_sentences=sents)
+def _mk_inputs(spark):
+    tx1 = synth_transcripts(spark, 400, seed=21, heaps_vocab=0.5)
     # ingest 2: new conversations, one modified conversation, one removed
     extra = synth_transcripts(spark, 120, seed=77).withColumn(
         "conv_id", F.concat(F.lit("x_"), F.col("conv_id"))
     )
-    modified_id = "eval_000000"
-    # the quartic skew generator leaves low conv ranks empty; pick a
-    # conversation that actually exists
-    removed_id = [
+    # the quartic skew generator leaves low conv ranks empty; pick
+    # conversations that actually exist
+    convs = [
         r.conv_id
         for r in tx1.select("conv_id").distinct().orderBy("conv_id").collect()
-        if r.conv_id.startswith("conv_")
-    ][3]
+    ]
+    modified_id, removed_id = convs[0], convs[3]
     tx2 = (
         tx1.where(F.col("conv_id") != removed_id)
         .withColumn(
@@ -56,14 +49,11 @@ def _mk_inputs(spark, english_golden):
     return tx1, tx2, modified_id, removed_id, extra
 
 
-def test_incremental_delta_and_convergence(spark, english_golden, tmp_path):
-    tx1, tx2, modified_id, removed_id, extra = _mk_inputs(
-        spark, english_golden
-    )
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
+def test_incremental_delta_and_convergence(spark, english_model, tmp_path):
+    tx1, tx2, modified_id, removed_id, extra = _mk_inputs(spark)
 
     inc = IncrementalKGPipeline(
-        spark, str(tmp_path / "inc"), model, salt_bucket=64, n_buckets=16
+        spark, str(tmp_path / "inc"), english_model, salt_bucket=64, n_buckets=16
     )
     r1 = inc.run(tx1)
     assert r1.full_load
@@ -100,9 +90,11 @@ def test_incremental_delta_and_convergence(spark, english_golden, tmp_path):
     )
 
     # convergence: a fresh one-shot run over tx2 lands on IDENTICAL
-    # content-defined snapshots for every bucketed stage
+    # content-defined snapshots for the five stages below; triple_counts,
+    # nodes and edges carry sampled provenance, so only their edge content
+    # is compared
     oneshot = IncrementalKGPipeline(
-        spark, str(tmp_path / "oneshot"), model, salt_bucket=64, n_buckets=16
+        spark, str(tmp_path / "oneshot"), english_model, salt_bucket=64, n_buckets=16
     )
     r_one = oneshot.run(tx2)
     for stage in ("decoded", "mentions", "triples", "candidates", "link_pairs"):
@@ -116,21 +108,19 @@ def test_incremental_delta_and_convergence(spark, english_golden, tmp_path):
     }
 
 
-def test_run_append_matches_full_run(spark, english_golden, tmp_path):
+def test_run_append_matches_full_run(spark, english_model, tmp_path):
     """CDC-style run_append (no full-input scan) lands on the IDENTICAL
     stage snapshots as a full-table run() over the same final content --
     including the derived full-input snapshot id, which run_append
     reconstructs from the digest state alone."""
-    sents = load_eval_sentences(english_golden["val"])[:200]
-    tx1 = synth_transcripts(spark, 300, seed=31, eval_sentences=sents)
+    tx1 = synth_transcripts(spark, 300, seed=31, heaps_vocab=0.5)
     extra = synth_transcripts(spark, 100, seed=55).withColumn(
         "conv_id", F.concat(F.lit("y_"), F.col("conv_id"))
     )
     full = tx1.unionByName(extra)
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
 
     appender = IncrementalKGPipeline(
-        spark, str(tmp_path / "app"), model, salt_bucket=64, n_buckets=16
+        spark, str(tmp_path / "app"), english_model, salt_bucket=64, n_buckets=16
     )
     a1 = appender.run_append(tx1)  # first batch = full load
     assert a1.full_load
@@ -147,7 +137,7 @@ def test_run_append_matches_full_run(spark, english_golden, tmp_path):
     assert a3.skipped == ["decoded", "mentions", "triples", "triple_counts", "candidates", "link_pairs", "nodes", "edges"]
 
     oneshot = IncrementalKGPipeline(
-        spark, str(tmp_path / "one"), model, salt_bucket=64, n_buckets=16
+        spark, str(tmp_path / "one"), english_model, salt_bucket=64, n_buckets=16
     )
     r_one = oneshot.run(full)
     for stage in ("decoded", "mentions", "triples", "candidates", "link_pairs"):
@@ -170,7 +160,7 @@ def test_run_append_matches_full_run(spark, english_golden, tmp_path):
     assert _edges_set(appender.io) == _edges_set(oneshot.io)
 
 
-def test_stream_kg_ingest(spark, english_golden, tmp_path):
+def test_stream_kg_ingest(spark, english_model, tmp_path):
     """Transcript stream -> foreachBatch -> incremental KG: after two
     conversation-snapshot micro-batches the KG equals a one-shot run over
     the union."""
@@ -179,9 +169,7 @@ def test_stream_kg_ingest(spark, english_golden, tmp_path):
         stream_kg_ingest,
     )
 
-    sents = load_eval_sentences(english_golden["val"])[:200]
-    tx = synth_transcripts(spark, 300, seed=41, eval_sentences=sents).persist()
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
+    tx = synth_transcripts(spark, 300, seed=41, heaps_vocab=0.5).persist()
     # conversation-disjoint chunks (the conversation-snapshot contract)
     in_batch1 = tx.where(F.pmod(F.xxhash64("conv_id"), F.lit(2)) == 0)
     in_batch2 = tx.where(F.pmod(F.xxhash64("conv_id"), F.lit(2)) == 1)
@@ -189,7 +177,7 @@ def test_stream_kg_ingest(spark, english_golden, tmp_path):
     in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     pipe = IncrementalKGPipeline(
-        spark, str(tmp_path / "kg"), model, salt_bucket=64, n_buckets=16
+        spark, str(tmp_path / "kg"), english_model, salt_bucket=64, n_buckets=16
     )
 
     in_batch1.write.mode("append").parquet(in_dir)
@@ -200,7 +188,7 @@ def test_stream_kg_ingest(spark, english_golden, tmp_path):
     q2.awaitTermination(600)
 
     oneshot = IncrementalKGPipeline(
-        spark, str(tmp_path / "one"), model, salt_bucket=64, n_buckets=16
+        spark, str(tmp_path / "one"), english_model, salt_bucket=64, n_buckets=16
     )
     oneshot.run(tx)
     assert _edges_set(pipe.io) == _edges_set(oneshot.io)
@@ -278,16 +266,15 @@ def test_empty_bucketed_stage_commits_and_reads(spark, tmp_path):
 
 
 @pytest.mark.parametrize("seed", [3, 11])
-def test_random_ingest_sequences_converge(spark, english_golden, seed, tmp_path):
+def test_random_ingest_sequences_converge(spark, english_model, seed, tmp_path):
     """Property-style: a random sequence of ingests (each adding new
     conversations, modifying existing ones, and removing some) always
     converges to the one-shot snapshots over the final table state."""
     import random
 
     rng = random.Random(seed)
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
     pipe = IncrementalKGPipeline(
-        spark, str(tmp_path / "rnd"), model, salt_bucket=64, n_buckets=8
+        spark, str(tmp_path / "rnd"), english_model, salt_bucket=64, n_buckets=8
     )
 
     def mk(tag, n, s):
@@ -322,7 +309,7 @@ def test_random_ingest_sequences_converge(spark, english_golden, seed, tmp_path)
         assert not r.full_load, ops
 
     oneshot = IncrementalKGPipeline(
-        spark, str(tmp_path / "one"), model, salt_bucket=64, n_buckets=8
+        spark, str(tmp_path / "one"), english_model, salt_bucket=64, n_buckets=8
     )
     r_one = oneshot.run(current)
     r_last = pipe.run(current)  # no-op pass exposes current snapshots
@@ -342,17 +329,15 @@ def test_conv_digests_order_insensitive(spark):
     assert d1 == d2
 
 
-def test_resample_provenance(spark, english_golden, tmp_path):
+def test_resample_provenance(spark, english_model, tmp_path):
     """kg_admin resample: stale provenance pointers are cleared (every
     entry points into the live triples table afterwards), counts are
     unchanged, and a count mismatch (real corruption) refuses loudly."""
     from hmm_crf_ner_fromscratch_spark.plans.incremental import PROVENANCE_CAP
 
-    sents = load_eval_sentences(english_golden["val"])[:120]
-    tx = synth_transcripts(spark, 150, seed=5, eval_sentences=sents)
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
+    tx = synth_transcripts(spark, 150, seed=5, heaps_vocab=0.5)
     inc = IncrementalKGPipeline(
-        spark, str(tmp_path / "rs"), model, salt_bucket=64, n_buckets=8
+        spark, str(tmp_path / "rs"), english_model, salt_bucket=64, n_buckets=8
     )
     inc.run(tx)
     io = inc.io
@@ -432,17 +417,16 @@ def test_resample_provenance(spark, english_golden, tmp_path):
         wrong.resample_provenance()
 
 
-def test_auto_rebalance_bounds_generations(spark, english_golden, tmp_path):
+def test_auto_rebalance_bounds_generations(spark, english_model, tmp_path):
     """Round-7 default-on state bounding: an append chain folds its
     generation partitions back into the hash layout once the threshold
     is reached, without changing any snapshot or the edge content, and
     the incremental lineage path (untouched files keep their recorded
     rows/checksums/run_id) stays audit-clean throughout."""
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
     inc = IncrementalKGPipeline(
         spark,
         str(tmp_path / "auto"),
-        model,
+        english_model,
         salt_bucket=64,
         n_buckets=8,
         auto_rebalance_generations=2,  # fold on every 2nd generation
@@ -468,22 +452,21 @@ def test_auto_rebalance_bounds_generations(spark, english_golden, tmp_path):
     for b in batches[1:]:
         full = full.unionByName(b)
     one = IncrementalKGPipeline(
-        spark, str(tmp_path / "one"), model, salt_bucket=64, n_buckets=8
+        spark, str(tmp_path / "one"), english_model, salt_bucket=64, n_buckets=8
     )
     one.run(full)
     assert _edges_set(inc.io) == _edges_set(one.io)
 
 
-def test_incremental_lineage_reuses_untouched_rows(spark, english_golden, tmp_path):
+def test_incremental_lineage_reuses_untouched_rows(spark, english_model, tmp_path):
     """A delta commit must re-read footers ONLY for files in rewritten
     partitions: rows for untouched files keep the run_id that wrote them
     (and their recorded checksums), while every row carries the new
     snapshot id."""
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
     inc = IncrementalKGPipeline(
         spark,
         str(tmp_path / "lin"),
-        model,
+        english_model,
         salt_bucket=64,
         n_buckets=8,
         auto_rebalance_generations=None,  # opt-out keeps generations

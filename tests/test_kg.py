@@ -72,17 +72,15 @@ def triples_oracle(mention_rows, window=0):
     return out
 
 
-def _mention_rows(spark, english_golden, n_sents=300, window_turns=True):
-    sents = load_eval_sentences(english_golden["val"])[:n_sents]
-    df = synth_transcripts(spark, 300, seed=11, eval_sentences=sents)
+def _mention_rows(spark, model):
+    df = synth_transcripts(spark, 300, seed=11, heaps_vocab=0.5)
     turns = tokenize_turns(df)
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
     decoded = decode_hmm(turns, model)
     return extract_mentions(decoded).persist()
 
 
-def test_template_triples_vs_oracle(spark, english_golden):
-    mentions = _mention_rows(spark, english_golden)
+def test_template_triples_vs_oracle(spark, english_model):
+    mentions = _mention_rows(spark, english_model)
     rows = [r.asDict() for r in mentions.collect()]
     for window in (0, 3):
         got = sorted(
@@ -175,8 +173,8 @@ def test_connected_components_local_matches_distributed(spark):
         assert dist == base, f"local/distributed mismatch on {edges_py[:5]}..."
 
 
-def test_build_graph_e2e(spark, english_golden):
-    mentions = _mention_rows(spark, english_golden, n_sents=200)
+def test_build_graph_e2e(spark, english_model):
+    mentions = _mention_rows(spark, english_model)
     triples = template_triples(mentions, cross_turn_window=2)
     nodes, edges = build_graph(mentions, triples)
     nodes = nodes.persist()

@@ -9,9 +9,7 @@ from pyspark.sql import functions as F
 
 from hmm_crf_ner_fromscratch_spark.operators.fused import decode_and_extract
 from hmm_crf_ner_fromscratch_spark.operators.hmm import train_hmm
-from hmm_crf_ner_fromscratch_spark.sources.conll import read_conll
 from hmm_crf_ner_fromscratch_spark.sources.transcripts import (
-    load_eval_sentences,
     synth_transcripts,
     tokenize_turns,
 )
@@ -24,10 +22,8 @@ from hmm_crf_ner_fromscratch_spark.streaming.decode_stream import (
 MENTION_KEY = ["conv_id", "turn_idx", "span_start", "span_end", "entity_type", "surface"]
 
 
-def test_stream_decode_matches_batch_and_resumes(spark, english_golden, tmp_path):
-    sents = load_eval_sentences(english_golden["val"])[:300]
-    tx = synth_transcripts(spark, 500, seed=31, eval_sentences=sents).persist()
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
+def test_stream_decode_matches_batch_and_resumes(spark, english_model, tmp_path):
+    tx = synth_transcripts(spark, 500, seed=31, heaps_vocab=0.5).persist()
 
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
@@ -37,13 +33,13 @@ def test_stream_decode_matches_batch_and_resumes(spark, english_golden, tmp_path
     chunk1 = tx.where(F.col("turn_idx") % 2 == 0)
     chunk1.write.mode("append").parquet(in_dir)
     q = stream_decode_mentions(
-        read_transcript_stream(spark, in_dir), model, out_dir, ckpt
+        read_transcript_stream(spark, in_dir), english_model, out_dir, ckpt
     )
     q.awaitTermination(300)
     got1 = {tuple(r) for r in spark.read.parquet(out_dir).select(*MENTION_KEY).collect()}
     want1 = {
         tuple(r)
-        for r in decode_and_extract(tokenize_turns(chunk1), model)
+        for r in decode_and_extract(tokenize_turns(chunk1), english_model)
         .select(*MENTION_KEY)
         .collect()
     }
@@ -53,7 +49,7 @@ def test_stream_decode_matches_batch_and_resumes(spark, english_golden, tmp_path
     # final output equals the full batch result (exactly-once, no dupes)
     tx.where(F.col("turn_idx") % 2 == 1).write.mode("append").parquet(in_dir)
     q2 = stream_decode_mentions(
-        read_transcript_stream(spark, in_dir), model, out_dir, ckpt
+        read_transcript_stream(spark, in_dir), english_model, out_dir, ckpt
     )
     q2.awaitTermination(300)
     got_all = {
@@ -61,7 +57,7 @@ def test_stream_decode_matches_batch_and_resumes(spark, english_golden, tmp_path
     }
     want_all = {
         tuple(r)
-        for r in decode_and_extract(tokenize_turns(tx), model)
+        for r in decode_and_extract(tokenize_turns(tx), english_model)
         .select(*MENTION_KEY)
         .collect()
     }
@@ -70,14 +66,12 @@ def test_stream_decode_matches_batch_and_resumes(spark, english_golden, tmp_path
     tx.unpersist()
 
 
-def test_stream_windowed_mention_rates(spark, english_golden, tmp_path):
-    sents = load_eval_sentences(english_golden["val"])[:150]
-    tx = synth_transcripts(spark, 100, seed=41, eval_sentences=sents)
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
+def test_stream_windowed_mention_rates(spark, english_model, tmp_path):
+    tx = synth_transcripts(spark, 100, seed=41, heaps_vocab=0.5)
     in_dir = str(tmp_path / "in")
     tx.write.mode("append").parquet(in_dir)
 
-    rates = stream_mention_rates(read_transcript_stream(spark, in_dir), model)
+    rates = stream_mention_rates(read_transcript_stream(spark, in_dir), english_model)
     q = (
         rates.writeStream.format("memory")
         .queryName("rates")

@@ -144,13 +144,11 @@ def test_span_kernel_vs_oracle(scheme, tokens, tags):
     assert got == spans_oracle(tokens, tags, scheme)
 
 
-def test_extract_mentions_e2e(spark, english_golden):
+def test_extract_mentions_e2e(spark, english_model):
     """Spark mention table == oracle applied to the same decoded tags."""
-    sents = load_eval_sentences(english_golden["val"])[:200]
-    df = synth_transcripts(spark, 100, seed=3, eval_sentences=sents)
-    turns = tokenize_turns(df.where(F.col("conv_id").startswith("eval_")))
-    model = train_hmm(read_conll(spark, english_golden["train"], doc_id="t"))
-    decoded = decode_hmm(turns, model).persist()
+    df = synth_transcripts(spark, 100, seed=3, heaps_vocab=0.5)
+    turns = tokenize_turns(df)
+    decoded = decode_hmm(turns, english_model).persist()
 
     mentions = extract_mentions(decoded)
     got = {
