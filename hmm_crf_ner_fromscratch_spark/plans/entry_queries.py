@@ -227,8 +227,7 @@ def q_dict_triples(spark, sf_dir):
     # non-overlapping and sorted, so a span whose start equals this span's
     # end can only be the immediate successor. One window = one shuffle AND
     # the upstream python span-extraction stage runs once, not twice
-    # (a self-join of a mapInPandas output recomputes it per side --
-    # verified in docs/PLANS.md).
+    # (a self-join of a mapInPandas output recomputes it per side).
     m = q_dict_mentions(spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy("span_start")
     nxt = m.select(
@@ -2258,7 +2257,7 @@ def q_kg_incremental(spark, sf_dir):
     m1 = decode_and_extract(
         test.where(~batch2), model, key_cols=("conv_id", "turn_idx")
     ).withColumn("bucket", bucket).repartition(n_buckets, F.col("bucket"))
-    io.write_bucketed("mentions", m1, ["ingest:1"], "r1")
+    io.write_bucketed("mentions", m1, ["ingest:1"], "r1", n_buckets=n_buckets)
 
     # ingest 2: decode ONLY the new conversations and append them as a
     # fresh GENERATION partition (id n_buckets) -- a pure append writes

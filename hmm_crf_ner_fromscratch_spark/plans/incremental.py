@@ -42,6 +42,13 @@ exactly that sliver:
      their capped provenance samples depend on the commit history (and
      on n_buckets), so only their counted content is equal.
 
+The delta path runs only when every stage is committed and was built with
+this pipeline's parameters (labeler, scheme, window, link threshold: the
+manifest inputs after the upstream snapshot). Otherwise ``run`` folds any
+generation partitions and takes the full-load path over the existing
+state, so exactly the invalidated suffix recomputes, and ``run_append``
+raises.
+
 Maintenance: `compact()` (TableIO) merges small files within partitions;
 `rebalance()` folds accumulated generations back into the hash layout --
 both snapshot-preserving by construction, and enforced.
@@ -84,6 +91,10 @@ from ..sources.transcripts import salted_turns, tokenize_turns
 from .lineage import ParquetManifestTableIO, new_run_id
 
 BUCKET_COL = "bucket"
+STAGES = (
+    "decoded", "mentions", "triples", "triple_counts", "candidates",
+    "link_pairs", "nodes", "edges",
+)
 DIGEST_COLS = ("conv_id", "turn_idx", "role", "text")
 # triple-count state key + provenance sample bound (operators/graph.py)
 _TRIPLE_KEY = ("subj_type", "subj", "pred", "obj_type", "obj")
@@ -191,6 +202,29 @@ class IncrementalKGPipeline:
             if auto_rebalance_generations == "auto"
             else auto_rebalance_generations
         )
+
+    def _stage_params(self) -> dict:
+        """Per stage, the input after its upstream snapshot that this
+        pipeline's parameters fix (``inputs[1:]`` of its manifest)."""
+        return {
+            "decoded": "labeler:" + _model_fingerprint(self.model),
+            "mentions": "scheme:" + self.scheme,
+            "triples": f"w:{self.cross_turn_window}",
+            "link_pairs": f"t:{self.link_threshold}",
+        }
+
+    def _stale_stage(self) -> str | None:
+        """First stage the delta path cannot merge into: its manifest is
+        missing or incomplete, or it was built with other parameters (a
+        delta over it would keep the old content under a new snapshot)."""
+        params = self._stage_params()
+        for stage in STAGES:
+            m = self.io.manifest(stage)
+            if not (m and m.get("complete")) or (
+                stage in params and m["inputs"][1:] != [params[stage]]
+            ):
+                return stage
+        return None
 
     def _generation_count(self) -> int:
         """Number of generation partitions currently in the decoded stage
@@ -452,6 +486,13 @@ class IncrementalKGPipeline:
         if prev is None:
             # first batch = first full load
             return self.run(delta_tx)
+        stale = self._stale_stage()
+        if stale is not None:
+            raise ValueError(
+                f"run_append cannot merge into stage {stale}: its manifest is "
+                "missing or was built with other parameters; run() over the "
+                "full input rebuilds it"
+            )
 
         digests_delta = conv_digests(delta_tx).persist()
         # ignore no-op re-deliveries (same conv content re-sent)
@@ -552,6 +593,17 @@ class IncrementalKGPipeline:
         tx_snap = transcripts_snapshot(transcripts)
         digests_new = conv_digests(transcripts)
         prev = self._prev_digests()
+        if prev is not None and self._stale_stage() is not None:
+            # the full-load path over the existing state: stages skip by
+            # manifest, so exactly the invalidated suffix recomputes --
+            # into the hash layout, so generation partitions fold first
+            if any(
+                int(b) >= self.n_buckets
+                for stage in ("decoded", "mentions", "triples")
+                for b in (self.io.manifest(stage) or {}).get("buckets", {})
+            ):
+                self.rebalance()
+            prev = None
 
         def full_state_write(state_df):
             # full rewrite, atomically swapped (tmp dir + rename)
@@ -634,7 +686,7 @@ class IncrementalKGPipeline:
         tx_snap: str,
     ) -> IncrementalResult:
         io = self.io
-        labeler = "labeler:" + _model_fingerprint(self.model)
+        params = self._stage_params()
 
         if changed is None:
             res = IncrementalResult(run_id=new_run_id(), full_load=True)
@@ -684,7 +736,7 @@ class IncrementalKGPipeline:
             return merged("decoded", decoded_delta["df"])
 
         s_dec = self._commit(
-            res, "decoded", [tx_snap, labeler], compute_decoded, affected
+            res, "decoded", [tx_snap, params["decoded"]], compute_decoded, affected
         )
         if "df" in decoded_delta and not res.full_load:
             # cheap: the persisted delta was materialized by the commit
@@ -728,7 +780,7 @@ class IncrementalKGPipeline:
         s_men = self._commit(
             res,
             "mentions",
-            [s_dec, "scheme:" + self.scheme],
+            [s_dec, params["mentions"]],
             compute_mentions,
             affected,
         )
@@ -768,7 +820,7 @@ class IncrementalKGPipeline:
         s_tri = self._commit(
             res,
             "triples",
-            [s_men, f"w:{self.cross_turn_window}"],
+            [s_men, params["triples"]],
             compute_triples,
             affected,
         )
@@ -1020,7 +1072,7 @@ class IncrementalKGPipeline:
         pair_plan: dict = {}
         if (
             "membership" in cand_plan
-            and not io.is_complete("link_pairs", [s_cands])
+            and not io.is_complete("link_pairs", [s_cands, params["link_pairs"]])
         ):
             changed_keys = (
                 cand_plan["membership"]
@@ -1075,7 +1127,7 @@ class IncrementalKGPipeline:
         s_pairs = self._commit(
             res,
             "link_pairs",
-            [s_cands],
+            [s_cands, params["link_pairs"]],
             lambda: one_file_per_bucket(compute_link_pairs()),
             pair_affected,
         )

@@ -1,4 +1,4 @@
-"""K9 support: table IO with snapshot manifests + per-partition lineage.
+"""K9 support: table IO with snapshot manifests + per-file lineage.
 
 The one table layer is ``ParquetManifestTableIO``: Hive-layout Parquet
 plus a JSON manifest per stage emulating the snapshot/commit metadata the
@@ -7,20 +7,21 @@ and does not replicate is explicit: snapshot-id-addressed reads and commit
 atomicity via rename -> yes; Iceberg's snapshot isolation / time travel
 -> no.
 
-Lineage: after each stage commit, one row per output file (= output
-partition) is appended to ``<stage>/_lineage.parquet``: stage, run_id,
-snapshot_id, file, rows, checksum (a parquet-footer fingerprint; the
-content-defined global checksum lives in the manifest as ``content_xor``).
+One Spark job per commit: the stage's data write. The content checksum
+(order-insensitive xxhash XOR over all rows) and row count -- and, for a
+bucketed commit, the per-bucket (rows, xor) ledger -- ride that job via
+``df.observe``; nothing reads the written data back. Everything else is
+driver-side metadata work in ``_publish``: list the stage's files, read
+the parquet footers of the files this commit wrote (threadpooled,
+metadata-only: the same listing+footer work an Iceberg commit does when
+building its manifest, O(new files) not O(rows)) and rename the manifest
+in. The manifest is the only commit record: it carries the per-file
+lineage (file -> run_id, rows, footer fingerprint) next to the snapshot
+id, so the one atomic rename commits data checksum and lineage together.
 Resume correctness = manifest complete AND input snapshot ids unchanged.
-
-Single-pass commit: the content checksum (order-insensitive xxhash XOR over
-all rows) and row count are computed *during the write job* via
-``df.observe`` -- no second scan of the written data. Per-file row counts
-come from the parquet footers (metadata-only reads, threadpooled on the
-driver: the same listing+footer work an Iceberg commit does when building
-its manifest, O(n_files) not O(rows)). ``audit(stage)`` re-reads the data
-and re-derives the content XOR for integrity verification on demand --
-that full-scan path is opt-in instead of paid on every stage commit.
+``audit(stage)`` re-reads the data and re-derives the content XOR for
+integrity verification on demand -- that full-scan path is opt-in instead
+of paid on every stage commit.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ import os
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -39,26 +40,16 @@ _LINEAGE_SCHEMA = (
     "stage string, run_id string, file string, rows bigint, "
     "checksum bigint, snapshot_id string"
 )
-_LINEAGE_COLS = ["stage", "run_id", "file", "rows", "checksum", "snapshot_id"]
-
-
-def _write_lineage(spark: SparkSession, lineage_rows: list, path: str) -> None:
-    """One-file lineage-table write. Goes through pandas so the plan is an
-    Arrow LocalTableScan: createDataFrame on a plain Python list builds a
-    pickled RDD with defaultParallelism partitions, and coalesce(1) then
-    makes ONE task drain all of those python-worker partitions
-    sequentially -- measured ~4.3 s per commit for a 13-row table at
-    local[32] vs 0.16 s on the Arrow path."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(lineage_rows, columns=_LINEAGE_COLS)
-    spark.createDataFrame(pdf, schema=_LINEAGE_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
+_ROW_HASH = "__row_hash"
 
 
 def _stable_hash(*parts: str) -> str:
     return hashlib.sha256("\x1f".join(parts).encode()).hexdigest()[:16]
+
+
+def _xor(v) -> int:
+    # bit_xor over no rows is NULL
+    return int(v) if v is not None else 0
 
 
 def _footer_meta(path: str) -> tuple[int, int, int]:
@@ -85,11 +76,12 @@ def _footer_meta(path: str) -> tuple[int, int, int]:
 
 
 def _list_parquet_files(data_dir: str) -> list[str]:
+    """Data files under ``data_dir``, as paths relative to it."""
     out = []
     for root, _dirs, files in os.walk(data_dir):
         for name in files:
             if name.endswith(".parquet") and not name.startswith(("_", ".")):
-                out.append(os.path.join(root, name))
+                out.append(os.path.relpath(os.path.join(root, name), data_dir))
     return sorted(out)
 
 
@@ -105,6 +97,9 @@ class ParquetManifestTableIO:
     # -- paths --
     def _dir(self, stage: str) -> str:
         return os.path.join(self.base_dir, stage)
+
+    def _data_dir(self, stage: str) -> str:
+        return os.path.join(self._dir(stage), "data")
 
     def _manifest_path(self, stage: str) -> str:
         return os.path.join(self._dir(stage), "_manifest.json")
@@ -127,8 +122,53 @@ class ParquetManifestTableIO:
             m
             and m.get("complete")
             and m.get("inputs") == input_snapshots
-            and os.path.isdir(os.path.join(self._dir(stage), "data"))
+            and os.path.isdir(self._data_dir(stage))
         )
+
+    def _publish(
+        self,
+        stage: str,
+        input_snapshots: list[str],
+        run_id: str,
+        fields: dict,
+        kept_files: dict | None = None,
+    ) -> str:
+        """The commit point shared by every write: list the stage's data
+        files, read footers only for files without a ``kept_files`` entry
+        (files a delta commit left untouched keep the run_id that wrote
+        them), and rename the manifest -- snapshot id, ``fields`` and the
+        per-file lineage -- in from a temp file."""
+        data_dir = self._data_dir(stage)
+        kept_files = kept_files or {}
+        files = _list_parquet_files(data_dir)
+        fresh = [f for f in files if f not in kept_files]
+        with ThreadPoolExecutor(max_workers=min(32, max(1, len(fresh)))) as ex:
+            metas = ex.map(_footer_meta, [os.path.join(data_dir, f) for f in fresh])
+            lineage = {
+                f: {"run_id": run_id, "rows": int(n), "checksum": int(fp)}
+                for f, (n, _size, fp) in zip(fresh, metas)
+            }
+        lineage.update((f, kept_files[f]) for f in files if f in kept_files)
+        snapshot = _stable_hash(
+            stage,
+            *input_snapshots,
+            str(fields["row_count"]),
+            str(fields["content_xor"]),
+        )
+        manifest = {
+            "stage": stage,
+            "snapshot_id": snapshot,
+            "inputs": input_snapshots,
+            "run_id": run_id,
+            **fields,
+            "files": dict(sorted(lineage.items())),
+            "complete": True,
+        }
+        tmp = self._manifest_path(stage) + ".tmp"
+        with open(tmp, "w", encoding="utf-8") as f:
+            json.dump(manifest, f, indent=1)
+        os.replace(tmp, self._manifest_path(stage))
+        return snapshot
 
     # -- IO --
     def write(
@@ -138,78 +178,44 @@ class ParquetManifestTableIO:
         input_snapshots: list[str],
         run_id: str,
     ) -> str:
-        """Write stage output + lineage, then commit the manifest (the
-        manifest write is the atomic commit point: written to a temp file
-        and renamed).
+        """Write stage output, then commit the manifest (the manifest
+        rename is the atomic commit point).
 
-        One data scan total: the content checksum (order-insensitive
-        xxhash64 XOR over all rows -- layout-independent, so the snapshot
-        id is identical under any partitioning) rides the write job via
+        One Spark job: the content checksum (order-insensitive xxhash64
+        XOR over all rows -- layout-independent, so the snapshot id is
+        identical under any partitioning) rides the write via
         ``observe``; per-file lineage comes from parquet footers.
         """
-        from pyspark.sql import Observation
-
-        data_dir = os.path.join(self._dir(stage), "data")
         cols = [f.name for f in df.schema.fields]
-        obs = Observation(f"lineage_{stage}_{run_id}")
-        observed = df.observe(
+        obs = Observation()
+        df.observe(
             obs,
             # bit_xor: no ANSI overflow, any accumulation order
             F.bit_xor(F.xxhash64(*cols)).alias("content_xor"),
             F.count(F.lit(1)).alias("rows"),
-        )
-        observed.write.mode("overwrite").parquet(data_dir)
+        ).write.mode("overwrite").parquet(self._data_dir(stage))
         got = obs.get
-        global_xor = int(got["content_xor"]) if got["content_xor"] is not None else 0
-        total_rows = int(got["rows"])
-
-        snapshot = _stable_hash(
-            stage, *input_snapshots, str(total_rows), str(global_xor)
+        return self._publish(
+            stage,
+            input_snapshots,
+            run_id,
+            {
+                "row_count": int(got["rows"]),
+                "content_xor": _xor(got["content_xor"]),
+                "columns": cols,
+                "schema": df.schema.jsonValue(),
+            },
         )
-
-        files = _list_parquet_files(data_dir)
-        with ThreadPoolExecutor(max_workers=min(32, max(1, len(files)))) as ex:
-            metas = list(ex.map(_footer_meta, files))
-        lineage_rows = [
-            (stage, run_id, path, int(n), int(fp), snapshot)
-            for path, (n, _size, fp) in zip(files, metas)
-        ]
-        _write_lineage(
-            self.spark,
-            lineage_rows,
-            os.path.join(self._dir(stage), "_lineage.parquet"),
-        )
-
-        manifest = {
-            "stage": stage,
-            "snapshot_id": snapshot,
-            "inputs": input_snapshots,
-            "run_id": run_id,
-            "row_count": total_rows,
-            "content_xor": global_xor,
-            "columns": cols,
-            "schema": df.schema.jsonValue(),
-            "n_files": len(lineage_rows),
-            "complete": True,
-        }
-        tmp = self._manifest_path(stage) + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path(stage))
-        return snapshot
 
     def read(self, stage: str) -> DataFrame:
-        m = self.manifest(stage)
-        return self._read_data(stage, m.get("schema") if m else None)
-
-    def _read_data(self, stage: str, schema: dict | None) -> DataFrame:
         """Read a stage's data dir with its recorded schema: a commit of an
         empty partitioned frame writes no files, so inference has nothing
         to read. Manifests without a schema fall back to inference."""
+        m = self.manifest(stage)
         reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(StructType.fromJson(schema))
-        return reader.parquet(os.path.join(self._dir(stage), "data"))
+        if m and m.get("schema") is not None:
+            reader = reader.schema(StructType.fromJson(m["schema"]))
+        return reader.parquet(self._data_dir(stage))
 
     # -- bucketed commits (incremental ingest) --
     def write_bucketed(
@@ -229,44 +235,70 @@ class ParquetManifestTableIO:
         state instead of trusting a CLI default -- running those with a
         different modulus silently rebuckets the state and breaks
         read_buckets pruning (round-4 ADVICE). Omitted -> inherited from
-        the stage's previous manifest when one exists.
+        the stage's previous manifest; a full commit with neither raises.
 
-        ``affected_buckets is None`` -> full overwrite of the stage.
-        Otherwise ``df`` must hold the *complete new content of exactly
-        those buckets*; they are replaced via dynamic partition overwrite
-        (untouched buckets keep their files AND their ledger entries, so
-        commit I/O is proportional to the delta, not the table).
+        ``affected_buckets is None`` -> full overwrite of the stage, whose
+        rows must lie in ``range(n_buckets)``. Otherwise ``df`` must hold
+        the *complete new content of exactly those buckets*; they are
+        replaced via dynamic partition overwrite (untouched buckets keep
+        their files AND their ledger and lineage entries, so commit I/O is
+        proportional to the delta, not the table). A row outside the
+        declared buckets raises ValueError and the stage's manifest is
+        removed: the data no longer matches it.
 
-        The ledger maps bucket -> (rows, content XOR). The global row
-        count / XOR -- and therefore the snapshot id -- are derived from
-        the ledger, so an incremental commit chain converges to the
+        The ledger maps bucket -> (rows, content XOR), computed during the
+        write job by one ``observe``: the row hash is projected once, and
+        each declared bucket gets a conditional count and XOR. The global
+        row count / XOR -- and therefore the snapshot id -- are derived
+        from the ledger, so an incremental commit chain converges to the
         IDENTICAL snapshot id a one-shot write of the same content
         produces (XOR is associative; layout never enters the hash).
         """
-        data_dir = os.path.join(self._dir(stage), "data")
-        prev = self.manifest(stage) if affected_buckets is not None else None
-        if affected_buckets is not None and not (prev and prev.get("complete")):
+        data_dir = self._data_dir(stage)
+        prev = self.manifest(stage)
+        delta = affected_buckets is not None
+        if delta and not (prev and prev.get("complete")):
             raise ValueError(f"delta commit on {stage} without a prior full commit")
-        cols = (
-            prev["columns"]
-            if prev
-            else [c for c in df.columns if c != bucket_col]
-        )
+        if n_buckets is None:
+            n_buckets = (prev or {}).get("n_buckets")
+        if delta:
+            declared = sorted({int(b) for b in affected_buckets})
+        elif n_buckets is None:
+            raise ValueError(
+                f"full commit on {stage} needs n_buckets: no previous "
+                "manifest records one"
+            )
+        else:
+            declared = list(range(n_buckets))
+        cols = prev["columns"] if delta else [c for c in df.columns if c != bucket_col]
         # data columns first, then the partition column, as partition
         # discovery orders them on read-back
         schema = df.select(*cols, bucket_col).schema.jsonValue()
 
-        if affected_buckets is not None:
+        # hash in the recorded column order so delta and full commits
+        # agree bit-for-bit
+        b, h = F.col(bucket_col), F.col(_ROW_HASH)
+        obs = Observation()
+        observed = (
+            df.withColumn(_ROW_HASH, F.xxhash64(*cols))
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                *(F.count_if(b == k).alias(f"n{k}") for k in declared),
+                *(F.bit_xor(F.when(b == k, h)).alias(f"x{k}") for k in declared),
+            )
+            .drop(_ROW_HASH)
+        )
+
+        if delta:
             # the caller materialized df (eager checkpoint) so it no longer
             # reads these files; dropping the affected partition dirs up
-            # front (a) makes an all-rows-removed bucket disappear -- a
-            # dynamic overwrite would never touch a partition it writes no
-            # rows for -- and (b) guarantees the ledger read-back below
-            # sees only fresh content, never stale files
+            # front makes an all-rows-removed bucket disappear -- a dynamic
+            # overwrite would never touch a partition it writes no rows for
             import shutil
 
-            for b in affected_buckets:
-                stale = os.path.join(data_dir, f"{bucket_col}={int(b)}")
+            for k in declared:
+                stale = os.path.join(data_dir, f"{bucket_col}={k}")
                 if os.path.isdir(stale):
                     shutil.rmtree(stale)
 
@@ -274,107 +306,57 @@ class ParquetManifestTableIO:
         prev_mode = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         conf.set(
             "spark.sql.sources.partitionOverwriteMode",
-            "dynamic" if affected_buckets is not None else "static",
+            "dynamic" if delta else "static",
         )
         try:
-            df.write.mode("overwrite").partitionBy(bucket_col).parquet(data_dir)
+            observed.write.mode("overwrite").partitionBy(bucket_col).parquet(data_dir)
         finally:
             conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
-        # per-bucket ledger refresh: scan ONLY the (re)written buckets
-        # (partition pruning on the read-back), hash in the recorded
-        # column order so delta and full commits agree bit-for-bit
-        out = self._read_data(stage, schema)
-        if affected_buckets is not None:
-            out = out.where(F.col(bucket_col).isin([int(b) for b in affected_buckets]))
-        agg = (
-            out.groupBy(bucket_col)
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.bit_xor(F.xxhash64(*cols)).alias("xor"),
+        got = obs.get
+        counts = {k: int(got[f"n{k}"]) for k in declared}
+        outside = int(got["rows"]) - sum(counts.values())
+        if outside:
+            if prev is not None:
+                os.remove(self._manifest_path(stage))
+            raise ValueError(
+                f"{stage}: {outside} rows lie outside the declared buckets; "
+                "no manifest published"
             )
-            .collect()
-        )
-        ledger: dict = dict(prev["buckets"]) if prev else {}
-        written = {int(r[bucket_col]): r for r in agg}
-        for b in affected_buckets if affected_buckets is not None else []:
-            ledger.pop(str(int(b)), None)
-        for b, r in written.items():
-            ledger[str(b)] = {
-                "rows": int(r["rows"]),
-                "xor": int(r["xor"]) if r["xor"] is not None else 0,
-            }
 
-        total_rows = sum(e["rows"] for e in ledger.values())
+        ledger: dict = dict(prev["buckets"]) if delta else {}
+        for k in declared:
+            ledger.pop(str(k), None)
+            if counts[k]:
+                ledger[str(k)] = {"rows": counts[k], "xor": _xor(got[f"x{k}"])}
         global_xor = 0
         for e in ledger.values():
             global_xor ^= e["xor"]
-        snapshot = _stable_hash(
-            stage, *input_snapshots, str(total_rows), str(global_xor)
-        )
 
-        # incremental lineage (round 7): a delta commit used to re-read
-        # the parquet footer of EVERY file in the stage -- O(total files)
-        # metadata I/O per micro-batch, one of the growing terms in the
-        # streaming-soak drift. Untouched files are untouched: their
-        # (rows, checksum, run_id) rows from the previous lineage table
-        # are still valid, so only files under the (re)written bucket
-        # dirs (plus any file the previous table somehow missed) get a
-        # fresh footer read. Every row still records the NEW snapshot id;
-        # untouched files keep the run_id that actually wrote them.
-        files = _list_parquet_files(data_dir)
-        lineage_path = os.path.join(self._dir(stage), "_lineage.parquet")
-        prev_lineage: dict = {}
-        if affected_buckets is not None and os.path.isdir(lineage_path):
-            rewritten = tuple(
-                os.path.join(data_dir, f"{bucket_col}={int(b)}") + os.sep
-                for b in affected_buckets
-            )
-            prev_lineage = {
-                r.file: (r.run_id, int(r.rows), int(r.checksum))
-                for r in self.spark.read.parquet(lineage_path).collect()
-                if not r.file.startswith(rewritten)
+        kept_files = None
+        if delta:
+            rewritten = tuple(f"{bucket_col}={k}{os.sep}" for k in declared)
+            kept_files = {
+                f: e
+                for f, e in prev.get("files", {}).items()
+                if not f.startswith(rewritten)
             }
-        fresh = [p for p in files if p not in prev_lineage]
-        with ThreadPoolExecutor(
-            max_workers=min(32, max(1, len(fresh)))
-        ) as ex:
-            metas = list(ex.map(_footer_meta, fresh))
-        fresh_meta = {
-            p: (run_id, int(n), int(fp))
-            for p, (n, _size, fp) in zip(fresh, metas)
-        }
-        lineage_rows = [
-            (stage, rid, path, n, fp, snapshot)
-            for path in files
-            for rid, n, fp in [prev_lineage.get(path) or fresh_meta[path]]
-        ]
-        _write_lineage(self.spark, lineage_rows, lineage_path)
-
-        if n_buckets is None:
-            inherit = prev if prev is not None else self.manifest(stage)
-            n_buckets = (inherit or {}).get("n_buckets")
-        manifest = {
-            "stage": stage,
-            "snapshot_id": snapshot,
-            "inputs": input_snapshots,
-            "run_id": run_id,
-            "row_count": total_rows,
-            "content_xor": global_xor,
-            "columns": cols,
-            "schema": schema,
-            "bucketed": True,
-            "bucket_col": bucket_col,
-            "n_buckets": n_buckets,
-            "buckets": ledger,
-            "n_files": len(lineage_rows),
-            "complete": True,
-        }
-        tmp = self._manifest_path(stage) + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path(stage))
-        return snapshot
+        return self._publish(
+            stage,
+            input_snapshots,
+            run_id,
+            {
+                "row_count": sum(e["rows"] for e in ledger.values()),
+                "content_xor": global_xor,
+                "columns": cols,
+                "schema": schema,
+                "bucketed": True,
+                "bucket_col": bucket_col,
+                "n_buckets": n_buckets,
+                "buckets": ledger,
+            },
+            kept_files,
+        )
 
     def read_buckets(
         self, stage: str, buckets: list[int], bucket_col: str = "bucket"
@@ -433,9 +415,21 @@ class ParquetManifestTableIO:
         return snap
 
     def lineage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self._dir(stage), "_lineage.parquet")
+        """One row per data file of the committed stage, from its
+        manifest: (stage, run_id, file, rows, checksum, snapshot_id)."""
+        import pandas as pd
+
+        m = self.manifest(stage)
+        data_dir = self._data_dir(stage)
+        pdf = pd.DataFrame(
+            [
+                (stage, e["run_id"], os.path.join(data_dir, f), e["rows"],
+                 e["checksum"], m["snapshot_id"])
+                for f, e in m["files"].items()
+            ],
+            columns=["stage", "run_id", "file", "rows", "checksum", "snapshot_id"],
         )
+        return self.spark.createDataFrame(pdf, schema=_LINEAGE_SCHEMA)
 
     def audit(self, stage: str) -> bool:
         """Full content-integrity verification: re-read the committed data
@@ -454,8 +448,7 @@ class ParquetManifestTableIO:
             F.bit_xor(F.xxhash64(*cols)).alias("x"),
             F.count(F.lit(1)).alias("n"),
         ).first()
-        got_xor = int(row.x) if row.x is not None else 0
-        return got_xor == m.get("content_xor") and int(row.n) == m["row_count"]
+        return _xor(row.x) == m.get("content_xor") and int(row.n) == m["row_count"]
 
 
 def new_run_id() -> str:

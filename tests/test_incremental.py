@@ -216,7 +216,7 @@ def test_compaction_preserves_snapshot(spark, tmp_path):
             .repartition(6)
         )
 
-    io.write_bucketed("s", batch(0, 2000), ["i1"], "r1")
+    io.write_bucketed("s", batch(0, 2000), ["i1"], "r1", n_buckets=4)
     delta = batch(2000, 3000).localCheckpoint(eager=True)
     affected = [r.bucket for r in delta.select("bucket").distinct().collect()]
     merged = (
@@ -263,6 +263,89 @@ def test_empty_bucketed_stage_commits_and_reads(spark, tmp_path):
     assert sorted(r.id for r in io.read("s").collect()) == [1, 2]
     assert io.manifest("s")["row_count"] == 2
     assert io.audit("s") is True
+
+
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts, counted by a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "commit-" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, "commit under test")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_runs_one_spark_job(spark, tmp_path):
+    """Every commit of a checkpointed frame is ONE Spark job, the data
+    write: the checksum and bucket ledger ride it via observe and the
+    lineage goes into the manifest (no read-back, no lineage table). The
+    delta commit keeps the untouched bucket's lineage entries."""
+    from hmm_crf_ner_fromscratch_spark.plans.lineage import (
+        ParquetManifestTableIO,
+    )
+
+    io = ParquetManifestTableIO(spark, str(tmp_path / "t"))
+    full = (
+        spark.range(0, 400)
+        .withColumn("v", F.col("id") * 5)
+        .withColumn("bucket", F.pmod(F.col("id"), F.lit(4)).cast("int"))
+        .localCheckpoint(eager=True)
+    )
+    assert _jobs_in_group(
+        spark, lambda: io.write_bucketed("s", full, ["i1"], "r1", n_buckets=4)
+    ) == 1
+    before = io.manifest("s")["files"]
+    delta = (
+        io.read_buckets("s", [1, 2])
+        .withColumn("v", F.col("v") + 1)
+        .localCheckpoint(eager=True)
+    )
+    assert _jobs_in_group(
+        spark,
+        lambda: io.write_bucketed("s", delta, ["i2"], "r2", affected_buckets=[1, 2]),
+    ) == 1
+    assert _jobs_in_group(
+        spark, lambda: io.write("p", full.drop("bucket"), ["i1"], "r1")
+    ) == 1
+
+    m = io.manifest("s")
+    assert "n_files" not in m and m["row_count"] == 400 and io.audit("s")
+    assert not (tmp_path / "t" / "s" / "_lineage.parquet").exists()
+    untouched = {f: e for f, e in before.items() if f.startswith(("bucket=0", "bucket=3"))}
+    assert untouched and all(m["files"][f] == e for f, e in untouched.items())
+    assert all(
+        e["run_id"] == "r2" for f, e in m["files"].items() if f not in untouched
+    )
+    assert sum(e["rows"] for e in m["files"].values()) == 400
+
+
+def test_commit_rejects_rows_outside_declared_buckets(spark, tmp_path):
+    """The declared buckets -- affected_buckets for a delta, range(n_buckets)
+    for a full commit -- bound what a commit may write: a row outside them
+    raises and no manifest is published. A first full commit must name
+    n_buckets (no previous manifest records one)."""
+    from hmm_crf_ner_fromscratch_spark.plans.lineage import (
+        ParquetManifestTableIO,
+    )
+
+    io = ParquetManifestTableIO(spark, str(tmp_path / "t"))
+    ddl = "id long, bucket int"
+    rows = spark.createDataFrame([(1, 0), (2, 5)], ddl)
+    with pytest.raises(ValueError, match="n_buckets"):
+        io.write_bucketed("s", rows, ["i1"], "r1")
+    with pytest.raises(ValueError, match="outside the declared buckets"):
+        io.write_bucketed("s", rows, ["i1"], "r1", n_buckets=4)
+    assert io.manifest("s") is None
+
+    io.write_bucketed("d", spark.createDataFrame([(1, 0)], ddl), ["i1"], "r1", n_buckets=4)
+    with pytest.raises(ValueError, match="outside the declared buckets"):
+        io.write_bucketed("d", rows, ["i2"], "r2", affected_buckets=[0])
+    assert io.manifest("d") is None
 
 
 @pytest.mark.parametrize("seed", [3, 11])
@@ -317,6 +400,54 @@ def test_random_ingest_sequences_converge(spark, english_model, seed, tmp_path):
     for stage in ("decoded", "mentions", "triples", "candidates", "link_pairs"):
         assert r_last.snapshots[stage] == r_one.snapshots[stage], stage
     assert _edges_set(pipe.io) == _edges_set(oneshot.io)
+
+
+def test_changed_parameters_recompute_the_invalidated_suffix(
+    spark, english_model, tmp_path
+):
+    """State built with other pipeline parameters never takes the delta
+    path (which would keep the old content under a new snapshot id):
+    run_append refuses, and run folds the generation partitions and takes
+    the full-load path, so exactly the invalidated suffix recomputes."""
+    base = synth_transcripts(spark, 100, seed=51, heaps_vocab=0.5)
+    extra = synth_transcripts(spark, 40, seed=52, heaps_vocab=0.5).withColumn(
+        "conv_id", F.concat(F.lit("a_"), F.col("conv_id"))
+    )
+    tx = base.unionByName(extra)
+
+    def pipe(**kw):
+        return IncrementalKGPipeline(
+            spark, str(tmp_path / "kg"), english_model, salt_bucket=64,
+            n_buckets=4, **kw,
+        )
+
+    w2 = pipe()
+    w2.run(base)
+    w2.run_append(extra)
+    assert w2._generation_count() == 1
+    before = {s: w2.io.snapshot_id(s) for s in ("decoded", "mentions", "candidates")}
+
+    w5 = pipe(cross_turn_window=5)
+    with pytest.raises(ValueError, match="triples"):
+        w5.run_append(extra)
+    r = w5.run(tx)
+    assert r.full_load and r.executed == ["triples", "triple_counts", "nodes", "edges"]
+    assert r.skipped == ["decoded", "mentions", "candidates", "link_pairs"]
+    assert {s: r.snapshots[s] for s in before} == before
+    assert w5._generation_count() == 0
+    mentions = w5.io.read("mentions").drop("bucket")
+    want = template_triples(mentions, cross_turn_window=5)
+    got = w5.io.read("triples").select(*want.columns)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    _, want_edges = build_graph(mentions, want)
+    assert _edges_set(w5.io) == {
+        (e.src, e.pred, e.dst, e.weight) for e in want_edges.collect()
+    }
+
+    # the link threshold is an input of link_pairs
+    r_t = pipe(cross_turn_window=5, link_threshold=0.5).run(tx)
+    assert r_t.executed == ["link_pairs", "nodes", "edges"]
 
 
 def test_conv_digests_order_insensitive(spark):

@@ -1,12 +1,12 @@
 """Plan-shape regression gates for the load-bearing queries.
 
-`tools/explain_plans.py` documents the plans we want in docs/PLANS.md,
-but nothing failed when a plan regressed (round-5 verdict ask #7). These
-tests pin the properties that keep the queries scale-safe: shuffle
-counts, map-side combines, broadcast joins, the absence of cartesian
-products / python stages where none belong, and -- end to end -- that the
-partitioned IVF index really prunes to the probed cells (the pruned
-directories are DELETED under a planned query and it still runs).
+These tests are the record of the plans we want (round-5 verdict ask #7:
+nothing failed when a plan regressed). They pin the properties that keep
+the queries scale-safe: shuffle counts, map-side combines, broadcast
+joins, the absence of cartesian products / python stages where none
+belong, and -- end to end -- that the partitioned IVF index really
+prunes to the probed cells (the pruned directories are DELETED under a
+planned query and it still runs).
 """
 
 from __future__ import annotations

@@ -49,7 +49,7 @@ def main():
                         "stage": name,
                         "snapshot": m["snapshot_id"],
                         "rows": m["row_count"],
-                        "files": m["n_files"],
+                        "files": len(m["files"]),
                         "bucketed": bool(m.get("bucketed")),
                         "complete": m["complete"],
                     }
@@ -106,9 +106,9 @@ def main():
         print(json.dumps({"stage": stage, "audit": "PASS" if ok else "FAIL"}))
         return 0 if ok else 1
     if cmd == "compact":
-        before = io.manifest(stage)["n_files"]
+        before = len(io.manifest(stage)["files"])
         snap = io.compact(stage)
-        after = io.manifest(stage)["n_files"]
+        after = len(io.manifest(stage)["files"])
         print(json.dumps({"stage": stage, "snapshot": snap,
                           "files_before": before, "files_after": after}))
         return 0
