@@ -158,9 +158,12 @@ class IncrementalKGPipeline:
     one-shot build; later ``run``/``run_append`` calls execute the delta.
 
     ``n_buckets`` sizes the stage partitioning: pick so one bucket's decoded
-    rows fit an executor write task comfortably (at 100 TB input and the
-    default 1024 buckets that is ~100 GB of transcripts -> a few GB of
-    decoded parquet per bucket; raise for bigger corpora).
+    rows fit an executor write task comfortably (at 100 TB input, 1024
+    buckets is ~100 GB of transcripts -> a few GB of decoded parquet per
+    bucket). It also sets the CPU cost of a full bucketed commit (the
+    first load, ``rebalance``, ``resample_provenance``): its ledger
+    evaluates one conditional XOR per bucket for every row (docs/SCALE.md,
+    K9), so do not size it above what the data needs.
 
     ``auto_rebalance_generations`` bounds append-chain state growth BY
     DEFAULT (round-6 verdict ask #3: the mitigation existed but was

@@ -9,13 +9,14 @@ atomicity via rename -> yes; Iceberg's snapshot isolation / time travel
 
 One Spark job per commit: the stage's data write. The content checksum
 (order-insensitive xxhash XOR over all rows) and row count -- and, for a
-bucketed commit, the per-bucket (rows, xor) ledger -- ride that job via
+bucketed commit, the per-bucket XORs of its ledger -- ride that job via
 ``df.observe``; nothing reads the written data back. Everything else is
-driver-side metadata work in ``_publish``: list the stage's files, read
-the parquet footers of the files this commit wrote (threadpooled,
-metadata-only: the same listing+footer work an Iceberg commit does when
-building its manifest, O(new files) not O(rows)) and rename the manifest
-in. The manifest is the only commit record: it carries the per-file
+driver-side metadata work: list the stage's files, read the parquet
+footers of the files this commit wrote (threadpooled, metadata-only: the
+same listing+footer work an Iceberg commit does when building its
+manifest, O(new files) not O(rows); they also give the ledger's
+per-bucket row counts) and rename the manifest in (``_publish``). The
+manifest is the only commit record: it carries the per-file
 lineage (file -> run_id, rows, footer fingerprint) next to the snapshot
 id, so the one atomic rename commits data checksum and lineage together.
 Resume correctness = manifest complete AND input snapshot ids unchanged.
@@ -106,11 +107,16 @@ class ParquetManifestTableIO:
 
     # -- manifest --
     def manifest(self, stage: str) -> dict | None:
+        """The stage's manifest; None if it has none. A manifest without
+        the per-file ``files`` map predates lineage-in-manifest and also
+        reads as None: the pipeline then recomputes the stage instead of
+        attributing its files to a later run."""
         p = self._manifest_path(stage)
         if not os.path.exists(p):
             return None
         with open(p, encoding="utf-8") as f:
-            return json.load(f)
+            m = json.load(f)
+        return m if "files" in m else None
 
     def snapshot_id(self, stage: str) -> str | None:
         m = self.manifest(stage)
@@ -125,30 +131,35 @@ class ParquetManifestTableIO:
             and os.path.isdir(self._data_dir(stage))
         )
 
+    def _files(self, stage: str, run_id: str, kept: dict | None = None) -> dict:
+        """Per-file lineage of the stage's data dir: files with a ``kept``
+        entry (untouched by a delta commit) keep it and the run_id that
+        wrote them; the rest get ``run_id`` and their footer's row count
+        and fingerprint (threadpooled, footers only)."""
+        data_dir = self._data_dir(stage)
+        kept = kept or {}
+        files = _list_parquet_files(data_dir)
+        fresh = [f for f in files if f not in kept]
+        with ThreadPoolExecutor(max_workers=min(32, max(1, len(fresh)))) as ex:
+            metas = ex.map(_footer_meta, [os.path.join(data_dir, f) for f in fresh])
+            out = {
+                f: {"run_id": run_id, "rows": int(n), "checksum": int(fp)}
+                for f, (n, _size, fp) in zip(fresh, metas)
+            }
+        out.update((f, kept[f]) for f in files if f in kept)
+        return dict(sorted(out.items()))
+
     def _publish(
         self,
         stage: str,
         input_snapshots: list[str],
         run_id: str,
         fields: dict,
-        kept_files: dict | None = None,
+        files: dict,
     ) -> str:
-        """The commit point shared by every write: list the stage's data
-        files, read footers only for files without a ``kept_files`` entry
-        (files a delta commit left untouched keep the run_id that wrote
-        them), and rename the manifest -- snapshot id, ``fields`` and the
-        per-file lineage -- in from a temp file."""
-        data_dir = self._data_dir(stage)
-        kept_files = kept_files or {}
-        files = _list_parquet_files(data_dir)
-        fresh = [f for f in files if f not in kept_files]
-        with ThreadPoolExecutor(max_workers=min(32, max(1, len(fresh)))) as ex:
-            metas = ex.map(_footer_meta, [os.path.join(data_dir, f) for f in fresh])
-            lineage = {
-                f: {"run_id": run_id, "rows": int(n), "checksum": int(fp)}
-                for f, (n, _size, fp) in zip(fresh, metas)
-            }
-        lineage.update((f, kept_files[f]) for f in files if f in kept_files)
+        """The commit point shared by every write: rename the manifest --
+        snapshot id, ``fields`` and the per-file lineage ``files`` -- in
+        from a temp file."""
         snapshot = _stable_hash(
             stage,
             *input_snapshots,
@@ -161,7 +172,7 @@ class ParquetManifestTableIO:
             "inputs": input_snapshots,
             "run_id": run_id,
             **fields,
-            "files": dict(sorted(lineage.items())),
+            "files": files,
             "complete": True,
         }
         tmp = self._manifest_path(stage) + ".tmp"
@@ -205,6 +216,7 @@ class ParquetManifestTableIO:
                 "columns": cols,
                 "schema": df.schema.jsonValue(),
             },
+            self._files(stage, run_id),
         )
 
     def read(self, stage: str) -> DataFrame:
@@ -246,13 +258,17 @@ class ParquetManifestTableIO:
         declared buckets raises ValueError and the stage's manifest is
         removed: the data no longer matches it.
 
-        The ledger maps bucket -> (rows, content XOR), computed during the
-        write job by one ``observe``: the row hash is projected once, and
-        each declared bucket gets a conditional count and XOR. The global
-        row count / XOR -- and therefore the snapshot id -- are derived
-        from the ledger, so an incremental commit chain converges to the
-        IDENTICAL snapshot id a one-shot write of the same content
-        produces (XOR is associative; layout never enters the hash).
+        The ledger maps bucket -> (rows, content XOR). The XORs are computed
+        during the write job by one ``observe``: the row hash is projected
+        once, and each declared bucket gets a conditional XOR, so the
+        observe costs O(declared buckets) per row -- a full commit declares
+        all ``n_buckets`` (see docs/SCALE.md for the measured cost), a
+        delta commit only the buckets it replaces. The rows come from the
+        footers of the files the commit wrote. The global row count / XOR
+        -- and therefore the snapshot id -- are derived from the ledger,
+        so an incremental commit chain converges to the IDENTICAL
+        snapshot id a one-shot write of the same content produces (XOR is
+        associative; layout never enters the hash).
         """
         data_dir = self._data_dir(stage)
         prev = self.manifest(stage)
@@ -284,7 +300,6 @@ class ParquetManifestTableIO:
             .observe(
                 obs,
                 F.count(F.lit(1)).alias("rows"),
-                *(F.count_if(b == k).alias(f"n{k}") for k in declared),
                 *(F.bit_xor(F.when(b == k, h)).alias(f"x{k}") for k in declared),
             )
             .drop(_ROW_HASH)
@@ -313,8 +328,23 @@ class ParquetManifestTableIO:
         finally:
             conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
+        kept: dict = {}
+        if delta:
+            rewritten = tuple(f"{bucket_col}={k}{os.sep}" for k in declared)
+            kept = {
+                f: e for f, e in prev["files"].items() if not f.startswith(rewritten)
+            }
+        files = self._files(stage, run_id, kept)
+        # per-bucket row counts from the footers of the files this commit
+        # wrote; rows written anywhere else make the observed total exceed
+        # their sum
+        dirs = {f"{bucket_col}={k}": k for k in declared}
+        counts = dict.fromkeys(declared, 0)
+        for f, e in files.items():
+            k = dirs.get(f.split(os.sep, 1)[0])
+            if k is not None and f not in kept:
+                counts[k] += e["rows"]
         got = obs.get
-        counts = {k: int(got[f"n{k}"]) for k in declared}
         outside = int(got["rows"]) - sum(counts.values())
         if outside:
             if prev is not None:
@@ -332,15 +362,6 @@ class ParquetManifestTableIO:
         global_xor = 0
         for e in ledger.values():
             global_xor ^= e["xor"]
-
-        kept_files = None
-        if delta:
-            rewritten = tuple(f"{bucket_col}={k}{os.sep}" for k in declared)
-            kept_files = {
-                f: e
-                for f, e in prev.get("files", {}).items()
-                if not f.startswith(rewritten)
-            }
         return self._publish(
             stage,
             input_snapshots,
@@ -355,7 +376,7 @@ class ParquetManifestTableIO:
                 "n_buckets": n_buckets,
                 "buckets": ledger,
             },
-            kept_files,
+            files,
         )
 
     def read_buckets(

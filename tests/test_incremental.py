@@ -348,6 +348,31 @@ def test_commit_rejects_rows_outside_declared_buckets(spark, tmp_path):
     assert io.manifest("d") is None
 
 
+def test_manifest_without_file_lineage_reads_as_absent(spark, tmp_path):
+    """A manifest with no per-file ``files`` map (written before lineage
+    moved into the manifest) reads as no commit: the stage is not
+    complete, so it is recomputed, and a delta commit over it raises
+    instead of stamping its untouched files with the new run_id."""
+    import json
+
+    from hmm_crf_ner_fromscratch_spark.plans.lineage import (
+        ParquetManifestTableIO,
+    )
+
+    io = ParquetManifestTableIO(spark, str(tmp_path / "t"))
+    df = spark.createDataFrame([(1, 0), (2, 1)], "id long, bucket int")
+    io.write_bucketed("s", df, ["i1"], "r1", n_buckets=2)
+    assert io.is_complete("s", ["i1"])
+    path = tmp_path / "t" / "s" / "_manifest.json"
+    m = json.loads(path.read_text())
+    del m["files"]
+    path.write_text(json.dumps(m))
+    assert io.manifest("s") is None
+    assert not io.is_complete("s", ["i1"])
+    with pytest.raises(ValueError, match="without a prior full commit"):
+        io.write_bucketed("s", df.where("bucket = 0"), ["i2"], "r2", affected_buckets=[0])
+
+
 @pytest.mark.parametrize("seed", [3, 11])
 def test_random_ingest_sequences_converge(spark, english_model, seed, tmp_path):
     """Property-style: a random sequence of ingests (each adding new

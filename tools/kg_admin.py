@@ -106,7 +106,11 @@ def main():
         print(json.dumps({"stage": stage, "audit": "PASS" if ok else "FAIL"}))
         return 0 if ok else 1
     if cmd == "compact":
-        before = len(io.manifest(stage)["files"])
+        m = io.manifest(stage)
+        if m is None:
+            print(json.dumps({"stage": stage, "error": "no committed manifest"}))
+            return 1
+        before = len(m["files"])
         snap = io.compact(stage)
         after = len(io.manifest(stage)["files"])
         print(json.dumps({"stage": stage, "snapshot": snap,
