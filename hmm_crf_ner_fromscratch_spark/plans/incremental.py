@@ -11,9 +11,14 @@ work dir is the one-shot build; later runs over an append-mostly transcript
 table, where each ingest adds/edits a sliver of conversations, process
 exactly that sliver:
 
-  1. per-conversation content digests (order-insensitive xxhash64 XOR over a
-     conversation's turns) diffed against the digests recorded at the last
-     commit -> changed / new / removed conversation sets;
+  1. ONE plan action per ingest, the same for ``run`` and ``run_append``:
+     per-conversation content digests (order-insensitive xxhash64 XOR over
+     a conversation's turns) full-outer-joined with the digest state of
+     the last commit and aggregated to the input snapshot id (XOR of the
+     post-ingest digests, sum of their turn counts), the changed / new /
+     removed counts and the old partitions the diff touches. ``run``
+     removes a conversation missing from its input; ``run_append`` keeps
+     it. An empty diff costs only this action;
   2. the expensive conversation-local stages (decode -> mentions -> triples)
      run ONLY over changed+new conversations (the Python DP never sees
      unchanged data);
@@ -22,7 +27,11 @@ exactly that sliver:
      GENERATION partition per append batch (a broad append writes exactly
      one new partition dir; hash-bucketing would scatter it across every
      bucket). Modifications/removals rewrite only the partitions recorded
-     for the affected conversations (dynamic partition overwrite);
+     for the affected conversations. The digest state is itself a
+     bucketed table (``_convs``: conv_id, digest, n_turns, bucket) with
+     the input snapshot as its one input, committed last through the same
+     ``write_bucketed`` delta commit as the stages, so it has a manifest,
+     a ledger, ``audit()`` and ``compact()`` like them;
   4. the graph phase is delta-proportional too: a maintained candidates
      state advances by count arithmetic over the delta, per-block
      link-pair state rescores ONLY blocks whose membership changed
@@ -35,30 +44,35 @@ exactly that sliver:
      bounded by DISTINCT entities/triple keys, not corpus size;
   5. snapshot ids stay content-defined through the per-bucket ledger
      (lineage.write_bucketed): a chain of incremental commits converges to
-     the IDENTICAL decoded, mentions, triples, candidates and link_pairs
-     snapshot ids a one-shot run over the final input produces, and to
-     the same (src, pred, dst, weight) edge set -- the properties the
-     tests pin. triple_counts, nodes and edges do not converge by id:
+     the IDENTICAL decoded, mentions, triples, candidates, link_pairs and
+     ``_convs`` snapshot ids a one-shot run over the final input produces,
+     and to the same (src, pred, dst, weight) edge set -- the properties
+     the tests pin. triple_counts, nodes and edges do not converge by id:
      their capped provenance samples depend on the commit history (and
      on n_buckets), so only their counted content is equal.
 
-The delta path runs only when every stage is committed and was built with
-this pipeline's parameters (labeler, scheme, window, link threshold: the
-manifest inputs after the upstream snapshot). Otherwise ``run`` folds any
-generation partitions and takes the full-load path over the existing
-state, so exactly the invalidated suffix recomputes, and ``run_append``
-raises.
+The delta path runs only when the digest state and every stage are
+committed and the stages were built with this pipeline's parameters
+(labeler, scheme, window, link threshold: the manifest inputs after the
+upstream snapshot). Otherwise ``run`` folds any generation partitions and
+takes the full-load path over the existing state, so exactly the
+invalidated suffix recomputes, and ``run_append`` raises -- also when
+stage tables exist without a digest state, unless they are a crashed
+first load of the same batch.
 
 Maintenance: `compact()` (TableIO) merges small files within partitions;
 `rebalance()` folds accumulated generations back into the hash layout --
 both snapshot-preserving by construction, and enforced.
 
-Scale notes: the digest diff is one hash-aggregate scan of the input plus a
-join against the stored digest table on conv_id; the delta semi-join is a
-broadcast when the changed set is small (the common case). On a real
-deployment the input-side scan disappears too: table formats (Iceberg
-changelog / CDC feeds) hand over the changed-row set directly, which slots
-in as ``changed`` below without touching the rest of the flow.
+Scale notes: the plan action is one hash-aggregate scan of the input plus
+a join against the stored digest table on conv_id (one compact row per
+conversation); its aggregate rides that job, so it costs no exchange of
+its own. On the delta path the plan's changed and removed rows are
+persisted at first use, so the delta semi-join (a broadcast when the
+changed set is small, the common case) and the retained-row filters read
+them from memory. On a real deployment the input-side scan disappears
+too: table formats (Iceberg changelog / CDC feeds) hand over the
+changed-row set directly, which ``run_append`` takes as its batch.
 """
 
 from __future__ import annotations
@@ -68,7 +82,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.crf import CRFModel
@@ -100,6 +114,8 @@ DIGEST_COLS = ("conv_id", "turn_idx", "role", "text")
 _TRIPLE_KEY = ("subj_type", "subj", "pred", "obj_type", "obj")
 _PROV_DDL = "array<struct<conv_id:string,turn_idx:int>>"
 PROVENANCE_CAP = 20
+# the per-conversation digest state: a bucketed table beside the stages
+CONVS = "_convs"
 
 
 def _model_fingerprint(model) -> str:
@@ -117,19 +133,10 @@ def _model_fingerprint(model) -> str:
     return h.hexdigest()[:16]
 
 
-def transcripts_snapshot(df: DataFrame) -> str:
-    """Content-hash snapshot id for a transcript frame that has no table
-    snapshot of its own (e.g. synthetic inputs): order-insensitive xxhash."""
-    row = df.select(
-        F.bit_xor(F.xxhash64(*DIGEST_COLS)).alias("h"),
-        F.count("*").alias("n"),
-    ).first()
-    return f"tx:{row.h}:{row.n}"
-
-
 def conv_digests(transcripts: DataFrame) -> DataFrame:
-    """(conv_id, digest): order-insensitive content hash per conversation.
-    Same hash family as transcripts_snapshot, restricted per conv."""
+    """(conv_id, digest, n_turns): order-insensitive content hash per
+    conversation. The XOR of a table's digests is the XOR over all its
+    rows, so the digests also give the table's snapshot id (``_plan``)."""
     return transcripts.groupBy("conv_id").agg(
         F.bit_xor(F.xxhash64(*DIGEST_COLS)).alias("digest"),
         F.count(F.lit(1)).alias("n_turns"),
@@ -230,26 +237,13 @@ class IncrementalKGPipeline:
         return None
 
     def _generation_count(self) -> int:
-        """Number of generation partitions currently in the decoded stage
-        (ledger bucket ids at or past the hash-bucket range)."""
-        m = self.io.manifest("decoded")
-        if not (m and m.get("buckets")):
-            return 0
-        return sum(1 for b in m["buckets"] if int(b) >= self.n_buckets)
-
-    # -- digest state --
-    def _convs_dir(self) -> str:
-        return os.path.join(self.io.base_dir, "_convs")
-
-    def _prev_digests(self) -> DataFrame | None:
-        d = self._convs_dir()
-        if not os.path.isdir(d):
-            return None
-        # partitioned by the conversation's ASSIGNED data partition
-        # (hash bucket at full load, generation id for appended convs),
-        # so state reads/writes prune to the partitions a delta touches
-        return self.spark.read.parquet(d).select(
-            "conv_id", "digest", "n_turns", F.col(BUCKET_COL).cast("int").alias(BUCKET_COL)
+        """Number of generation partitions (ledger bucket ids at or past
+        the hash-bucket range) in the conversation-bucketed stages; a
+        crash mid-rebalance can leave them in some of the stages only."""
+        return max(
+            sum(1 for b in (self.io.manifest(stage) or {}).get("buckets", {})
+                if int(b) >= self.n_buckets)
+            for stage in ("decoded", "mentions", "triples")
         )
 
     def _alloc_generation(self, tx_snap: str) -> int:
@@ -281,43 +275,67 @@ class IncrementalKGPipeline:
         os.replace(tmp, path)
         return gen
 
-    def _plan_delta(self, changed, removed, prev, tx_snap):
-        """(assignment, affected): target partition per changed conv --
-        existing convs rewrite in place, new convs go to this ingest's
-        generation partition -- plus the partitions a commit touches."""
-        ch = changed.join(
-            prev.select("conv_id", F.col(BUCKET_COL).alias("_old")),
-            "conv_id",
-            "left",
-        ).persist()
-        n_new = ch.where(F.col("_old").isNull()).count()
-        gen = self._alloc_generation(tx_snap) if n_new else None
-        assign = ch.select(
-            "conv_id",
-            F.coalesce("_old", F.lit(gen)).cast("int").alias(BUCKET_COL),
-        ).persist()
-        assign.count()
-        old_b = {
-            int(r._old)
-            for r in ch.select("_old").where(F.col("_old").isNotNull())
-            .distinct()
-            .collect()
-        }
-        ch.unpersist()
-        rm_b = set()
-        if removed is not None:
-            rm_b = {
-                int(r.b)
-                for r in removed.join(
-                    prev.select("conv_id", F.col(BUCKET_COL).alias("b")),
+    def _plan(self, tx: DataFrame, prev: DataFrame | None, keep_missing: bool):
+        """The digest diff of one ingest, in ONE Spark action.
+
+        The input's conversation digests are full-outer-joined with the
+        stored digest state ``prev`` (None: a full load). Returns the
+        per-conversation plan -- conv_id, post-ingest digest and n_turns,
+        old partition ``_old``, changed ``_chg`` and removed ``_rm`` -- and
+        the action's aggregate: the post-ingest digest XOR ``h`` and turn
+        count ``n`` (the input snapshot id), ``n_changed``, ``n_new``,
+        ``n_removed`` and the ``old`` partitions the diff touches. With
+        ``keep_missing`` (``run_append``) a stored conversation the input
+        lacks is kept, otherwise (``run``) it is removed."""
+        cur = conv_digests(tx)
+        if prev is None:
+            j = cur.select(
+                "*",
+                F.lit(None).cast("bigint").alias("_pd"),
+                F.lit(None).cast("bigint").alias("_pn"),
+                F.lit(None).cast("int").alias("_old"),
+            )
+        else:
+            j = cur.join(
+                prev.select(
                     "conv_id",
-                )
-                .select("b")
-                .distinct()
-                .collect()
-            }
-        affected = sorted(old_b | rm_b | ({gen} if gen is not None else set()))
-        return assign, affected
+                    F.col("digest").alias("_pd"),
+                    F.col("n_turns").alias("_pn"),
+                    F.col(BUCKET_COL).alias("_old"),
+                ),
+                "conv_id",
+                "full_outer",
+            )
+        # n_turns (a count) is null exactly when the input lacks the conv
+        in_input = F.col("n_turns").isNotNull()
+
+        def post(c: str, stored: str):
+            return F.coalesce(c, stored) if keep_missing else F.col(c)
+
+        plan = j.select(
+            "conv_id",
+            post("digest", "_pd").alias("digest"),
+            post("n_turns", "_pn").alias("n_turns"),
+            "_old",
+            (in_input & ~F.col("digest").eqNullSafe(F.col("_pd"))).alias("_chg"),
+            (F.lit(False) if keep_missing else ~in_input).alias("_rm"),
+        )
+        obs = Observation()
+        # the aggregate rides the plan's one job via observe, and the noop
+        # sink runs that job without writing anything: a global agg()
+        # would add an exchange and one more job
+        plan.observe(
+            obs,
+            F.bit_xor("digest").alias("h"),
+            F.sum("n_turns").alias("n"),
+            F.count_if("_chg").alias("n_changed"),
+            F.count_if(F.col("_chg") & F.col("_old").isNull()).alias("n_new"),
+            F.count_if("_rm").alias("n_removed"),
+            F.collect_set(
+                F.when(F.col("_chg") | F.col("_rm"), F.col("_old"))
+            ).alias("old"),
+        ).write.format("noop").mode("overwrite").save()
+        return plan, obs.get
 
     def _decode(self, turns: DataFrame) -> DataFrame:
         salted = salted_turns(tokenize_turns(turns), bucket=self.salt_bucket)
@@ -364,12 +382,13 @@ class IncrementalKGPipeline:
         the hash-bucket layout (every append batch adds one partition, so
         a long append chain grows the partition count without bound; this
         is the partition-level counterpart of ``TableIO.compact``). Full
-        rewrite of each bucketed stage with hash assignment plus a digest
-        -state reassignment; snapshot ids are content-defined and
-        layout-blind, so each stage MUST land on its unchanged snapshot
-        -- enforced, same contract as compaction."""
+        rewrite, with hash assignment, of each table bucketed by
+        conversation: decoded, mentions, triples and the digest state
+        ``_convs``. Snapshot ids are content-defined and layout-blind, so
+        each MUST land on its unchanged snapshot -- enforced, same
+        contract as compaction."""
         out = {}
-        for stage in ("decoded", "mentions", "triples"):
+        for stage in ("decoded", "mentions", "triples", CONVS):
             m = self.io.manifest(stage)
             if not (m and m.get("complete") and m.get("bucketed")):
                 continue
@@ -386,18 +405,6 @@ class IncrementalKGPipeline:
                     f"{m['snapshot_id']} -> {snap}"
                 )
             out[stage] = snap
-        prev = self._prev_digests()
-        if prev is not None:
-            state = self._with_bucket(
-                prev.drop(BUCKET_COL)
-            ).localCheckpoint(eager=True)
-            state.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-                self._convs_dir() + "__tmp"
-            )
-            import shutil
-
-            shutil.rmtree(self._convs_dir())
-            os.replace(self._convs_dir() + "__tmp", self._convs_dir())
         return out
 
     def resample_provenance(self) -> dict:
@@ -473,107 +480,25 @@ class IncrementalKGPipeline:
         """CDC/micro-batch ingest: ``delta_tx`` holds the complete current
         turns of SOME conversations (new or updated); everything else is
         untouched. No full-input scan happens anywhere -- the cost is
-        O(delta + affected buckets), which is what a foreachBatch sink or
-        an Iceberg changelog feed needs at 100 TB.
+        O(delta + affected buckets) plus one pass over the compact digest
+        state, which is what a foreachBatch sink or an Iceberg changelog
+        feed needs at 100 TB.
 
         The input snapshot id stays EQUAL to what a full run() over the
-        entire table would compute: transcripts_snapshot is an XOR over
-        rows, so it is derivable from the per-conversation digest state
-        (XOR of digests, sum of turn counts) without touching the table.
-        The decoded ... link_pairs snapshots therefore converge to the
-        one-shot ids, and the edges to the one-shot edge set -- pinned by
-        test (module docstring, point 5).
+        entire table would compute: it is an XOR over rows, so the plan
+        derives it from the digest state merged with the batch (XOR of
+        digests, sum of turn counts) without touching the table. The
+        decoded ... link_pairs and ``_convs`` snapshots therefore converge
+        to the one-shot ids, and the edges to the one-shot edge set --
+        pinned by test (module docstring, point 5).
+
+        The first batch into an empty work dir is a full load. Stage
+        tables without a committed digest state (a store built before the
+        state was a bucketed table, or one whose state was deleted) cannot
+        be diffed against, so that raises, unless ``decoded`` was built
+        from exactly this batch: a crashed first load, which resumes.
         """
-        io = self.io
-        prev = self._prev_digests()
-        if prev is None:
-            # first batch = first full load
-            return self.run(delta_tx)
-        stale = self._stale_stage()
-        if stale is not None:
-            raise ValueError(
-                f"run_append cannot merge into stage {stale}: its manifest is "
-                "missing or was built with other parameters; run() over the "
-                "full input rebuilds it"
-            )
-
-        digests_delta = conv_digests(delta_tx).persist()
-        # ignore no-op re-deliveries (same conv content re-sent)
-        changed = (
-            digests_delta.alias("d")
-            .join(prev.alias("p"), "conv_id", "left")
-            .where(
-                F.col("p.digest").isNull()
-                | (F.col("d.digest") != F.col("p.digest"))
-            )
-            .select("conv_id")
-            .persist()
-        )
-        merged_digests = (
-            prev.select("conv_id", "digest", "n_turns")
-            .join(digests_delta.select("conv_id"), "conv_id", "left_anti")
-            .unionByName(digests_delta)
-        )
-        # full-input snapshot id WITHOUT a full-input scan of the
-        # transcripts: the global row XOR is the XOR of per-conversation
-        # digests (same hash family as transcripts_snapshot), the row
-        # count is the sum of turn counts. The digest table itself is one
-        # compact row per conversation -- the only O(#convs) touch.
-        row = merged_digests.agg(
-            F.bit_xor("digest").alias("h"), F.sum("n_turns").alias("n")
-        ).first()
-        tx_snap = f"tx:{row.h}:{row.n}"
-        assign, affected = self._plan_delta(changed, None, prev, tx_snap)
-
-        def commit_digests():
-            # delta-scoped state update: only the partitions owning changed
-            # conversations are rewritten (dynamic partition overwrite);
-            # a crash mid-write self-heals -- re-delivery re-detects the
-            # not-yet-recorded conversations and stages skip by manifest
-            if not affected:
-                return
-            changed_digests = digests_delta.join(
-                assign, "conv_id"
-            ).select("conv_id", "digest", "n_turns", BUCKET_COL)
-            retained = (
-                self._prev_digests()
-                .where(F.col(BUCKET_COL).isin(affected))
-                .join(changed, "conv_id", "left_anti")
-                .select("conv_id", "digest", "n_turns", BUCKET_COL)
-            )
-            new_content = retained.unionByName(changed_digests).localCheckpoint(
-                eager=True
-            )
-            import shutil
-
-            for b in affected:
-                stale = os.path.join(self._convs_dir(), f"{BUCKET_COL}={b}")
-                if os.path.isdir(stale):
-                    shutil.rmtree(stale)
-            conf = self.spark.conf
-            prev_mode = conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                new_content.write.mode("overwrite").partitionBy(
-                    BUCKET_COL
-                ).parquet(self._convs_dir())
-            finally:
-                conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-        res = self._run_delta(
-            delta_tx.join(changed, "conv_id", "left_semi"),
-            changed,
-            None,
-            assign,
-            affected,
-            commit_digests,
-            tx_snap,
-        )
-        digests_delta.unpersist()
-        changed.unpersist()
-        assign.unpersist()
+        res = self._ingest(delta_tx, keep_missing=True)
         # default-on state bounding: fold accumulated generation
         # partitions back into the hash buckets once they reach the
         # threshold (amortized O(state/threshold) per batch; snapshot
@@ -592,116 +517,93 @@ class IncrementalKGPipeline:
 
     def run(self, transcripts: DataFrame) -> IncrementalResult:
         """Full-input ingest: diff the whole table's conversation digests
-        against the recorded state; decode only the difference."""
-        tx_snap = transcripts_snapshot(transcripts)
-        digests_new = conv_digests(transcripts)
-        prev = self._prev_digests()
-        if prev is not None and self._stale_stage() is not None:
-            # the full-load path over the existing state: stages skip by
+        against the recorded state; decode only the difference. A
+        conversation missing from ``transcripts`` is removed."""
+        return self._ingest(transcripts, keep_missing=False)
+
+    def _ingest(self, tx: DataFrame, keep_missing: bool) -> IncrementalResult:
+        """The one ingest path behind ``run`` and ``run_append``: plan the
+        digest diff in one action, then run the stages over the delta --
+        or over everything on the full-load path."""
+        io = self.io
+        prev = io.read(CONVS) if io.manifest(CONVS) else None
+        if prev is not None and (stale := self._stale_stage()) is not None:
+            if keep_missing:
+                raise ValueError(
+                    f"run_append cannot merge into stage {stale}: its manifest "
+                    "is missing or was built with other parameters; run() over "
+                    "the full input rebuilds it"
+                )
+            prev = None
+        plan, row = self._plan(tx, prev, keep_missing)
+        tx_snap = f"tx:{row['h']}:{row['n'] or 0}"
+        if prev is None:
+            decoded = io.manifest("decoded")
+            if (
+                keep_missing
+                and any(io.manifest(s) for s in STAGES)
+                and not (decoded and decoded["inputs"][0] == tx_snap)
+            ):
+                raise ValueError(
+                    f"run_append found stage tables but no committed {CONVS} "
+                    "digest state to diff the batch against; run() over the "
+                    "full input rebuilds it"
+                )
+            # the full-load path over existing state: stages skip by
             # manifest, so exactly the invalidated suffix recomputes --
             # into the hash layout, so generation partitions fold first
-            if any(
-                int(b) >= self.n_buckets
-                for stage in ("decoded", "mentions", "triples")
-                for b in (self.io.manifest(stage) or {}).get("buckets", {})
-            ):
+            if self._generation_count():
                 self.rebalance()
-            prev = None
+            res = IncrementalResult(run_id=new_run_id(), full_load=True)
+            self._run_delta(res, tx, None, None, None, plan, tx_snap)
+            return res
 
-        def full_state_write(state_df):
-            # full rewrite, atomically swapped (tmp dir + rename)
-            state_df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-                self._convs_dir() + "__tmp"
-            )
-            import shutil
-
-            if os.path.isdir(self._convs_dir()):
-                shutil.rmtree(self._convs_dir())
-            os.replace(self._convs_dir() + "__tmp", self._convs_dir())
-
-        if prev is None:
-            return self._run_delta(
-                transcripts,
-                None,
-                None,
-                None,
-                None,
-                lambda: full_state_write(self._with_bucket(digests_new)),
+        # existing convs rewrite in place, new convs go to this ingest's
+        # generation partition
+        gen = self._alloc_generation(tx_snap) if row["n_new"] else None
+        affected = sorted(
+            {int(b) for b in row["old"]} | ({gen} if gen is not None else set())
+        )
+        res = IncrementalResult(
+            run_id=new_run_id(),
+            full_load=False,
+            n_changed=row["n_changed"],
+            n_removed=row["n_removed"],
+            affected_buckets=list(affected),
+        )
+        delta = plan.where(F.col("_chg") | F.col("_rm")).persist()
+        changed = delta.where("_chg")
+        assign = changed.select(
+            "conv_id", F.coalesce("_old", F.lit(gen)).cast("int").alias(BUCKET_COL)
+        )
+        try:
+            self._run_delta(
+                res,
+                # semi-join the input down to the changed conversations;
+                # AQE turns this into a broadcast join for small deltas
+                tx.join(changed.select("conv_id"), "conv_id", "left_semi"),
+                delta.select("conv_id"),
+                assign,
+                affected,
+                changed,
                 tx_snap,
             )
-
-        joined = digests_new.alias("n").join(
-            prev.alias("p"), "conv_id", "full_outer"
-        )
-        changed = joined.where(
-            F.col("p.digest").isNull()
-            | (F.col("n.digest") != F.col("p.digest"))
-        ).select("conv_id").persist()
-        removed = joined.where(F.col("n.digest").isNull()).select("conv_id")
-        assign, affected = self._plan_delta(changed, removed, prev, tx_snap)
-
-        def commit_digests():
-            # unchanged convs keep their recorded partition; changed convs
-            # take the planned assignment (in-place or this ingest's gen)
-            state = (
-                digests_new.join(
-                    prev.select("conv_id", F.col(BUCKET_COL).alias("_pb")),
-                    "conv_id",
-                    "left",
-                )
-                .join(
-                    assign.select("conv_id", F.col(BUCKET_COL).alias("_ab")),
-                    "conv_id",
-                    "left",
-                )
-                .select(
-                    "conv_id",
-                    "digest",
-                    "n_turns",
-                    F.coalesce("_ab", "_pb").cast("int").alias(BUCKET_COL),
-                )
-            )
-            full_state_write(state)
-
-        res = self._run_delta(
-            # semi-join the input down to the changed conversations; AQE
-            # turns this into a broadcast join for small deltas
-            transcripts.join(changed, "conv_id", "left_semi"),
-            changed,
-            removed,
-            assign,
-            affected,
-            commit_digests,
-            tx_snap,
-        )
-        changed.unpersist()
-        assign.unpersist()
+        finally:
+            delta.unpersist()
         return res
 
     def _run_delta(
         self,
+        res: IncrementalResult,
         delta_tx: DataFrame,
-        changed: DataFrame | None,
-        removed: DataFrame | None,
+        affected_convs: DataFrame | None,
         assign: DataFrame | None,
         affected: list | None,
-        commit_digests,
+        digests: DataFrame,
         tx_snap: str,
-    ) -> IncrementalResult:
+    ) -> None:
         io = self.io
         params = self._stage_params()
-
-        if changed is None:
-            res = IncrementalResult(run_id=new_run_id(), full_load=True)
-            affected_convs = None
-        else:
-            res = IncrementalResult(run_id=new_run_id(), full_load=False)
-            affected_convs = (
-                changed.unionByName(removed) if removed is not None else changed
-            ).persist()
-            res.n_changed = changed.count()
-            res.n_removed = removed.count() if removed is not None else 0
-            res.affected_buckets = list(affected)
 
         def attach_bucket(df: DataFrame) -> DataFrame:
             # full load: hash-spread across the base buckets; delta: the
@@ -1187,10 +1089,15 @@ class IncrementalKGPipeline:
 
         # digest state commits last: a crash before this point replays the
         # same delta on re-run (stages already committed skip via manifests)
-        commit_digests()
+        if not io.is_complete(CONVS, [tx_snap]):
+            io.write_bucketed(
+                CONVS,
+                merged(CONVS, digests.select("conv_id", "digest", "n_turns")),
+                [tx_snap],
+                res.run_id,
+                affected_buckets=affected, n_buckets=self.n_buckets,
+            )
+        res.snapshots[CONVS] = io.snapshot_id(CONVS)
 
         if "df" in decoded_delta:
             decoded_delta["df"].unpersist()
-        if affected_convs is not None:
-            affected_convs.unpersist()
-        return res

@@ -195,9 +195,12 @@ def stream_kg_ingest(
 ):
     """Drive the incremental KG pipeline from a transcript stream: each
     micro-batch flows through ``IncrementalKGPipeline.run_append`` via
-    ``foreachBatch``, so the KG tables (decoded/mentions/triples/nodes/
-    edges) advance per batch with delta-only decode and bucket-scoped
-    commits.
+    ``foreachBatch``, so the eight KG stage tables (decoded, mentions,
+    triples, triple_counts, candidates, link_pairs, nodes, edges) and the
+    ``_convs`` digest state advance per batch with delta-only decode and
+    bucket-scoped commits. The first batch into an empty work dir is a
+    full load; a work dir holding stage tables without a ``_convs``
+    digest state makes the batch raise (``run_append``).
 
     Source contract: a micro-batch must carry the COMPLETE current
     turn-set of every conversation it touches (conversation-snapshot CDC

@@ -59,8 +59,11 @@ def test_incremental_delta_and_convergence(spark, english_model, tmp_path):
     assert r1.full_load
     assert r1.executed == ["decoded", "mentions", "triples", "triple_counts", "candidates", "link_pairs", "nodes", "edges"]
 
-    # no-change re-run: every stage skips, zero decode work
-    r1b = inc.run(tx1)
+    # no-change re-run: every stage skips, zero decode work -- the digest
+    # diff is one plan action, so only its few jobs run
+    got = {}
+    assert _jobs_in_group(spark, lambda: got.update(r=inc.run(tx1))) <= 6
+    r1b = got["r"]
     assert r1b.executed == []
     assert r1b.skipped == ["decoded", "mentions", "triples", "triple_counts", "candidates", "link_pairs", "nodes", "edges"]
 
@@ -132,7 +135,9 @@ def test_run_append_matches_full_run(spark, english_model, tmp_path):
 
     # re-delivering the same batch is a no-op: digests unchanged -> the
     # derived input snapshot matches -> every stage skips
-    a3 = appender.run_append(extra)
+    got = {}
+    assert _jobs_in_group(spark, lambda: got.update(r=appender.run_append(extra))) <= 6
+    a3 = got["r"]
     assert a3.executed == []
     assert a3.skipped == ["decoded", "mentions", "triples", "triple_counts", "candidates", "link_pairs", "nodes", "edges"]
 
@@ -143,6 +148,8 @@ def test_run_append_matches_full_run(spark, english_model, tmp_path):
     for stage in ("decoded", "mentions", "triples", "candidates", "link_pairs"):
         assert a2.snapshots[stage] == r_one.snapshots[stage], stage
     assert _edges_set(appender.io) == _edges_set(oneshot.io)
+    # the digest state converges too: its content XOR is layout-blind
+    assert a2.snapshots["_convs"] == r_one.snapshots["_convs"]
 
     # maintenance: rebalance folds the generation partition back into the
     # hash layout WITHOUT changing any snapshot; state stays consistent
@@ -155,6 +162,7 @@ def test_run_append_matches_full_run(spark, english_model, tmp_path):
         int(b) for b in appender.io.manifest("decoded")["buckets"]
     }
     assert max(decoded_buckets) < 16  # generations folded away
+    assert appender.io.audit("_convs")
     a4 = appender.run_append(extra)
     assert a4.executed == []
     assert _edges_set(appender.io) == _edges_set(oneshot.io)
@@ -424,6 +432,7 @@ def test_random_ingest_sequences_converge(spark, english_model, seed, tmp_path):
     assert r_last.executed == []
     for stage in ("decoded", "mentions", "triples", "candidates", "link_pairs"):
         assert r_last.snapshots[stage] == r_one.snapshots[stage], stage
+    assert r_last.snapshots["_convs"] == r_one.snapshots["_convs"]
     assert _edges_set(pipe.io) == _edges_set(oneshot.io)
 
 

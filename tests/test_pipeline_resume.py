@@ -59,6 +59,13 @@ def test_pipeline_run_resume_invalidate(spark, full_load):
     base = pipe.io.base_dir
     os.remove(os.path.join(base, "triples", "_manifest.json"))
     shutil.rmtree(os.path.join(base, "_convs"))
+    # stage tables without a digest state: an append cannot be diffed
+    # against them (it would rebuild every stage from the batch alone)
+    extra = synth_transcripts(spark, 10, seed=22).withColumn(
+        "conv_id", F.concat(F.lit("n_"), F.col("conv_id"))
+    )
+    with pytest.raises(ValueError, match="_convs"):
+        pipe.run_append(extra)
     r3 = pipe.run(tx)
     assert r3.executed == ["triples"]
     assert r3.skipped == [s for s in STAGES if s != "triples"]
@@ -66,9 +73,6 @@ def test_pipeline_run_resume_invalidate(spark, full_load):
     assert r3.snapshots == r1.snapshots  # deterministic snapshot ids
 
     # input change (ten turns of new conversations) invalidates everything
-    extra = synth_transcripts(spark, 10, seed=22).withColumn(
-        "conv_id", F.concat(F.lit("n_"), F.col("conv_id"))
-    )
     r4 = pipe.run(tx.unionByName(extra))
     assert r4.executed == STAGES
 
