@@ -2232,8 +2232,8 @@ def q_kg_incremental(spark, sf_dir):
     built as TWO delta ingests through bucketed stage commits
     (plans/lineage.write_bucketed) instead of one shot -- ingest 1 decodes
     ~80%% of conversations, ingest 2 decodes ONLY the remaining
-    conversations and merges them via dynamic partition overwrite of the
-    affected buckets. The oracle is the one-shot full-recompute SQL
+    conversations and commits them as a fresh generation partition, which
+    the manifest rename publishes next to the untouched buckets. The oracle is the one-shot full-recompute SQL
     (SQL_KG_PIPELINE), so the driver independently verifies that the
     incremental commit chain converges to the exact one-shot result."""
     import tempfile

@@ -27,11 +27,14 @@ exactly that sliver:
      GENERATION partition per append batch (a broad append writes exactly
      one new partition dir; hash-bucketing would scatter it across every
      bucket). Modifications/removals rewrite only the partitions recorded
-     for the affected conversations. The digest state is itself a
-     bucketed table (``_convs``: conv_id, digest, n_turns, bucket) with
-     the input snapshot as its one input, committed last through the same
-     ``write_bucketed`` delta commit as the stages, so it has a manifest,
-     a ledger, ``audit()`` and ``compact()`` like them;
+     for the affected conversations: the commit writes their new content
+     to fresh files, and the manifest rename swaps them in for the old
+     ones (plans/lineage.py), so a failed commit leaves the previous
+     snapshot intact and a rerun resumes from it. The digest state is
+     itself a bucketed table (``_convs``: conv_id, digest, n_turns,
+     bucket) with the input snapshot as its one input, committed last
+     through the same ``write_bucketed`` delta commit as the stages, so
+     it has a manifest, a ledger, ``audit()`` and ``compact()`` like them;
   4. the graph phase is delta-proportional too: a maintained candidates
      state advances by count arithmetic over the delta, per-block
      link-pair state rescores ONLY blocks whose membership changed
@@ -252,7 +255,8 @@ class IncrementalKGPipeline:
         across every bucket -- a broad append therefore writes one new
         partition dir and touches nothing else. Keyed by the target input
         snapshot so a crash-resume of the same ingest reuses the same id
-        (stage partition dirs are pre-deleted idempotently on rewrite).
+        (a failed commit published nothing into it; a committed stage
+        skips on resume).
         """
         import json
 
@@ -386,17 +390,18 @@ class IncrementalKGPipeline:
         conversation: decoded, mentions, triples and the digest state
         ``_convs``. Snapshot ids are content-defined and layout-blind, so
         each MUST land on its unchanged snapshot -- enforced, same
-        contract as compaction."""
+        contract as compaction. Each stage is repartitioned by bucket
+        first, so every bucket dir gets one file."""
         out = {}
         for stage in ("decoded", "mentions", "triples", CONVS):
+            self.io.remove_orphans(stage)
             m = self.io.manifest(stage)
             if not (m and m.get("complete") and m.get("bucketed")):
                 continue
-            df = self._with_bucket(
-                self.io.read(stage).drop(BUCKET_COL)
-            ).localCheckpoint(eager=True)
+            df = self._with_bucket(self.io.read(stage).drop(BUCKET_COL))
             snap = self.io.write_bucketed(
-                stage, df, m["inputs"], m["run_id"] + ".rebalance",
+                stage, df.repartition(BUCKET_COL), m["inputs"],
+                m["run_id"] + ".rebalance",
                 n_buckets=self.n_buckets,
             )
             if snap != m["snapshot_id"]:
@@ -424,6 +429,8 @@ class IncrementalKGPipeline:
         produces, so downstream stages are invalidated only if stale
         pointers actually existed."""
         io = self.io
+        io.remove_orphans("triples")
+        io.remove_orphans("triple_counts")
         m = io.manifest("triple_counts")
         if not (m and m.get("complete") and m.get("bucketed")):
             raise ValueError("no complete bucketed triple_counts state to resample")
@@ -460,10 +467,8 @@ class IncrementalKGPipeline:
         tc_bucket = F.pmod(F.xxhash64(*_TRIPLE_KEY), F.lit(self.n_buckets)).cast(
             "int"
         )
-        df = (
-            fresh.withColumn(BUCKET_COL, tc_bucket)
-            .repartition(self.n_buckets, F.col(BUCKET_COL))
-            .localCheckpoint(eager=True)
+        df = fresh.withColumn(BUCKET_COL, tc_bucket).repartition(
+            self.n_buckets, F.col(BUCKET_COL)
         )
         snap = io.write_bucketed(
             "triple_counts", df, m["inputs"], m["run_id"] + ".resample",
@@ -524,8 +529,11 @@ class IncrementalKGPipeline:
     def _ingest(self, tx: DataFrame, keep_missing: bool) -> IncrementalResult:
         """The one ingest path behind ``run`` and ``run_append``: plan the
         digest diff in one action, then run the stages over the delta --
-        or over everything on the full-load path."""
+        or over everything on the full-load path. What a killed commit
+        left in the stage dirs is removed first."""
         io = self.io
+        for stage in (*STAGES, CONVS):
+            io.remove_orphans(stage)
         prev = io.read(CONVS) if io.manifest(CONVS) else None
         if prev is not None and (stale := self._stale_stage()) is not None:
             if keep_missing:
@@ -617,10 +625,9 @@ class IncrementalKGPipeline:
             """delta rows + retained rows of the affected partitions, i.e.
             the complete new content of exactly those partitions. A pure
             append (affected == [gen] with no prior rows there) has an
-            empty retained side -- the commit writes only the delta.
-            localCheckpoint cuts lineage to the stage's own files so the
-            dynamic overwrite does not read from the path it writes (on a
-            cluster: a reliable checkpoint or staging dir)."""
+            empty retained side -- the commit writes only the delta. The
+            commit may read the files it replaces: it writes fresh ones and
+            the manifest rename swaps them in."""
             delta_b = attach_bucket(delta_df)
             if affected is None:
                 return delta_b
@@ -628,11 +635,7 @@ class IncrementalKGPipeline:
                 affected_convs, "conv_id", "left_anti"
             )
             cols = io.manifest(stage)["columns"] + [BUCKET_COL]
-            return (
-                retained.select(*cols)
-                .unionByName(delta_b.select(*cols))
-                .localCheckpoint(eager=True)
-            )
+            return retained.select(*cols).unionByName(delta_b.select(*cols))
 
         decoded_delta: dict = {}
 
@@ -666,8 +669,8 @@ class IncrementalKGPipeline:
 
         def compute_mentions():
             # candidate-state arithmetic needs the counts of the affected
-            # conversations' OLD mention rows, which exist only until this
-            # stage's overwrite -- capture them eagerly first
+            # conversations' OLD mention rows, whose files this stage's
+            # commit deletes -- capture them eagerly first
             if affected is not None:
                 mentions_state["old_counts"] = (
                     io.read_buckets("mentions", affected)
@@ -703,7 +706,7 @@ class IncrementalKGPipeline:
 
         def compute_triples():
             # triple-count arithmetic needs the affected conversations' OLD
-            # triple rows, which exist only until this stage's overwrite --
+            # triple rows, whose files this stage's commit deletes --
             # capture their per-key counts eagerly first (same pattern as
             # the mentions/candidates state)
             if affected is not None:
@@ -844,7 +847,7 @@ class IncrementalKGPipeline:
                 .where(F.col("n") > 0)
                 .withColumn(BUCKET_COL, tc_bucket)
             )
-            return retained.unionByName(upd).localCheckpoint(eager=True)
+            return retained.unionByName(upd)
 
         s_tc = self._commit(
             res,
@@ -911,7 +914,9 @@ class IncrementalKGPipeline:
                 )
             state = io.read_buckets("candidates", cand_affected)
             # delta-keyed plan: only surfaces with a count delta -- state
-            # rows without one stay in `retained` (and ONLY there)
+            # rows without one stay in `retained` (and ONLY there); eager,
+            # as link-pair planning reads it after this commit deletes the
+            # old state files
             plan = (
                 cand_plan["delta_counts"]
                 .join(
@@ -944,7 +949,7 @@ class IncrementalKGPipeline:
                 )
                 .withColumn(BUCKET_COL, cand_bucket)
             )
-            return retained.unionByName(updated).localCheckpoint(eager=True)
+            return retained.unionByName(updated)
 
         s_cands = self._commit(
             res,
@@ -1027,7 +1032,7 @@ class IncrementalKGPipeline:
             retained = io.read_buckets("link_pairs", pair_affected).join(
                 changed_blocks, "block", "left_anti"
             ).select("block", "src_key", "dst_key", "score", BUCKET_COL)
-            return retained.unionByName(rescored).localCheckpoint(eager=True)
+            return retained.unionByName(rescored)
 
         s_pairs = self._commit(
             res,

@@ -7,6 +7,18 @@ and does not replicate is explicit: snapshot-id-addressed reads and commit
 atomicity via rename -> yes; Iceberg's snapshot isolation / time travel
 -> no.
 
+Commits are write-once, as in Iceberg: a commit appends fresh files to
+the stage's data dir (Spark names them by job UUID, so they never collide
+with committed ones), renames in a manifest listing the kept files plus
+the fresh ones, and only then deletes the files that manifest superseded.
+A stage's contents change only at that rename. A commit that fails
+in-process deletes its fresh files; the previous manifest and data stay
+as they were. What a killed process leaves behind -- unlisted files, a
+``_temporary`` dir -- is deleted by ``remove_orphans``, which every
+writer entry point of the pipeline calls first; until then a directory
+read sees it and ``audit()`` reports the mismatch. Reads stay directory
+reads (one listing, no Spark job); read-only calls never delete anything.
+
 One Spark job per commit: the stage's data write. The content checksum
 (order-insensitive xxhash XOR over all rows) and row count -- and, for a
 bucketed commit, the per-bucket XORs of its ledger -- ride that job via
@@ -86,6 +98,18 @@ def _list_parquet_files(data_dir: str) -> list[str]:
     return sorted(out)
 
 
+def _footers(data_dir: str, files: list[str], run_id: str) -> dict:
+    """Lineage entries of freshly written ``files`` (relative to
+    ``data_dir``): ``run_id`` plus their footers' row count and
+    fingerprint (threadpooled, footers only)."""
+    with ThreadPoolExecutor(max_workers=min(32, max(1, len(files)))) as ex:
+        metas = ex.map(_footer_meta, [os.path.join(data_dir, f) for f in files])
+        return {
+            f: {"run_id": run_id, "rows": int(n), "checksum": int(fp)}
+            for f, (n, _size, fp) in zip(files, metas)
+        }
+
+
 class ParquetManifestTableIO:
     """Stage-addressed table store under ``base_dir`` with manifest-based
     commit/resume."""
@@ -131,24 +155,6 @@ class ParquetManifestTableIO:
             and os.path.isdir(self._data_dir(stage))
         )
 
-    def _files(self, stage: str, run_id: str, kept: dict | None = None) -> dict:
-        """Per-file lineage of the stage's data dir: files with a ``kept``
-        entry (untouched by a delta commit) keep it and the run_id that
-        wrote them; the rest get ``run_id`` and their footer's row count
-        and fingerprint (threadpooled, footers only)."""
-        data_dir = self._data_dir(stage)
-        kept = kept or {}
-        files = _list_parquet_files(data_dir)
-        fresh = [f for f in files if f not in kept]
-        with ThreadPoolExecutor(max_workers=min(32, max(1, len(fresh)))) as ex:
-            metas = ex.map(_footer_meta, [os.path.join(data_dir, f) for f in fresh])
-            out = {
-                f: {"run_id": run_id, "rows": int(n), "checksum": int(fp)}
-                for f, (n, _size, fp) in zip(fresh, metas)
-            }
-        out.update((f, kept[f]) for f in files if f in kept)
-        return dict(sorted(out.items()))
-
     def _publish(
         self,
         stage: str,
@@ -181,6 +187,41 @@ class ParquetManifestTableIO:
         os.replace(tmp, self._manifest_path(stage))
         return snapshot
 
+    def _commit(self, stage: str, run_id: str, write, publish) -> str:
+        """The write-once commit shared by every write: ``write(data_dir)``
+        appends fresh files next to the committed ones, ``publish(written)``
+        renames in the manifest that lists them, given their lineage
+        entries. Either way the stage then holds exactly its manifest's
+        files: after the rename the superseded ones are deleted, after a
+        failure the fresh ones."""
+        data_dir = self._data_dir(stage)
+        before = set(_list_parquet_files(data_dir))
+        try:
+            write(data_dir)
+            fresh = [f for f in _list_parquet_files(data_dir) if f not in before]
+            return publish(_footers(data_dir, fresh, run_id))
+        finally:
+            self.remove_orphans(stage)
+
+    def remove_orphans(self, stage: str) -> None:
+        """Delete every file of the stage its manifest does not list, and
+        the dirs that leaves empty: unlisted data files, Spark's
+        ``_temporary`` dir, ``_SUCCESS``, a manifest temp file, and the
+        ``bucket=*`` dirs a digest state written before ``_convs`` became
+        a stage left next to ``data/``. Without a manifest nothing is
+        listed. Listed files keep their ``.crc`` sidecars."""
+        stage_dir, data_dir = self._dir(stage), self._data_dir(stage)
+        keep = {self._manifest_path(stage)}
+        for f in (self.manifest(stage) or {}).get("files", {}):
+            head, name = os.path.split(os.path.join(data_dir, f))
+            keep |= {os.path.join(head, name), os.path.join(head, f".{name}.crc")}
+        for root, _dirs, files in os.walk(stage_dir, topdown=False):
+            for name in files:
+                if os.path.join(root, name) not in keep:
+                    os.remove(os.path.join(root, name))
+            if root not in (stage_dir, data_dir) and not os.listdir(root):
+                os.rmdir(root)
+
     # -- IO --
     def write(
         self,
@@ -189,8 +230,9 @@ class ParquetManifestTableIO:
         input_snapshots: list[str],
         run_id: str,
     ) -> str:
-        """Write stage output, then commit the manifest (the manifest
-        rename is the atomic commit point).
+        """Replace the stage's content with ``df``: write fresh files, then
+        commit the manifest listing only them (the manifest rename is the
+        atomic commit point; the previous files are deleted after it).
 
         One Spark job: the content checksum (order-insensitive xxhash64
         XOR over all rows -- layout-independent, so the snapshot id is
@@ -199,24 +241,30 @@ class ParquetManifestTableIO:
         """
         cols = [f.name for f in df.schema.fields]
         obs = Observation()
-        df.observe(
+        observed = df.observe(
             obs,
             # bit_xor: no ANSI overflow, any accumulation order
             F.bit_xor(F.xxhash64(*cols)).alias("content_xor"),
             F.count(F.lit(1)).alias("rows"),
-        ).write.mode("overwrite").parquet(self._data_dir(stage))
-        got = obs.get
-        return self._publish(
-            stage,
-            input_snapshots,
-            run_id,
-            {
-                "row_count": int(got["rows"]),
-                "content_xor": _xor(got["content_xor"]),
-                "columns": cols,
-                "schema": df.schema.jsonValue(),
-            },
-            self._files(stage, run_id),
+        )
+
+        def publish(written: dict) -> str:
+            got = obs.get
+            return self._publish(
+                stage,
+                input_snapshots,
+                run_id,
+                {
+                    "row_count": int(got["rows"]),
+                    "content_xor": _xor(got["content_xor"]),
+                    "columns": cols,
+                    "schema": df.schema.jsonValue(),
+                },
+                written,
+            )
+
+        return self._commit(
+            stage, run_id, observed.write.mode("append").parquet, publish
         )
 
     def read(self, stage: str) -> DataFrame:
@@ -249,14 +297,17 @@ class ParquetManifestTableIO:
         read_buckets pruning (round-4 ADVICE). Omitted -> inherited from
         the stage's previous manifest; a full commit with neither raises.
 
-        ``affected_buckets is None`` -> full overwrite of the stage, whose
-        rows must lie in ``range(n_buckets)``. Otherwise ``df`` must hold
-        the *complete new content of exactly those buckets*; they are
-        replaced via dynamic partition overwrite (untouched buckets keep
-        their files AND their ledger and lineage entries, so commit I/O is
-        proportional to the delta, not the table). A row outside the
-        declared buckets raises ValueError and the stage's manifest is
-        removed: the data no longer matches it.
+        ``affected_buckets is None`` -> the commit replaces the whole
+        stage, whose rows must lie in ``range(n_buckets)``. Otherwise ``df``
+        must hold the *complete new content of exactly those buckets*; the
+        new manifest keeps every other bucket's files AND their ledger and
+        lineage entries, so commit I/O is proportional to the delta, not
+        the table. Either way the write appends fresh files and the
+        manifest rename publishes them (module docstring), so ``df`` may
+        read the files it replaces, and a bucket whose rows are all gone
+        simply lists no file. A row outside the declared buckets raises
+        ValueError; nothing is published and the previous snapshot
+        stands.
 
         The ledger maps bucket -> (rows, content XOR). The XORs are computed
         during the write job by one ``observe``: the row hash is projected
@@ -270,7 +321,6 @@ class ParquetManifestTableIO:
         snapshot id a one-shot write of the same content produces (XOR is
         associative; layout never enters the hash).
         """
-        data_dir = self._data_dir(stage)
         prev = self.manifest(stage)
         delta = affected_buckets is not None
         if delta and not (prev and prev.get("complete")):
@@ -304,80 +354,56 @@ class ParquetManifestTableIO:
             )
             .drop(_ROW_HASH)
         )
-
-        if delta:
-            # the caller materialized df (eager checkpoint) so it no longer
-            # reads these files; dropping the affected partition dirs up
-            # front makes an all-rows-removed bucket disappear -- a dynamic
-            # overwrite would never touch a partition it writes no rows for
-            import shutil
-
-            for k in declared:
-                stale = os.path.join(data_dir, f"{bucket_col}={k}")
-                if os.path.isdir(stale):
-                    shutil.rmtree(stale)
-
-        conf = self.spark.conf
-        prev_mode = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        conf.set(
-            "spark.sql.sources.partitionOverwriteMode",
-            "dynamic" if delta else "static",
-        )
-        try:
-            observed.write.mode("overwrite").partitionBy(bucket_col).parquet(data_dir)
-        finally:
-            conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-        kept: dict = {}
-        if delta:
-            rewritten = tuple(f"{bucket_col}={k}{os.sep}" for k in declared)
-            kept = {
-                f: e for f, e in prev["files"].items() if not f.startswith(rewritten)
-            }
-        files = self._files(stage, run_id, kept)
-        # per-bucket row counts from the footers of the files this commit
-        # wrote; rows written anywhere else make the observed total exceed
-        # their sum
         dirs = {f"{bucket_col}={k}": k for k in declared}
-        counts = dict.fromkeys(declared, 0)
-        for f, e in files.items():
-            k = dirs.get(f.split(os.sep, 1)[0])
-            if k is not None and f not in kept:
-                counts[k] += e["rows"]
-        got = obs.get
-        outside = int(got["rows"]) - sum(counts.values())
-        if outside:
-            if prev is not None:
-                os.remove(self._manifest_path(stage))
-            raise ValueError(
-                f"{stage}: {outside} rows lie outside the declared buckets; "
-                "no manifest published"
+        kept = {
+            f: e
+            for f, e in (prev["files"] if delta else {}).items()
+            if f.split(os.sep, 1)[0] not in dirs
+        }
+
+        def publish(written: dict) -> str:
+            # per-bucket row counts from the footers of the fresh files;
+            # rows written anywhere else make the observed total exceed
+            # their sum
+            counts = dict.fromkeys(declared, 0)
+            for f, e in written.items():
+                k = dirs.get(f.split(os.sep, 1)[0])
+                if k is not None:
+                    counts[k] += e["rows"]
+            got = obs.get
+            outside = int(got["rows"]) - sum(counts.values())
+            if outside:
+                raise ValueError(
+                    f"{stage}: {outside} rows lie outside the declared "
+                    "buckets; nothing published"
+                )
+            ledger: dict = dict(prev["buckets"]) if delta else {}
+            for k in declared:
+                ledger.pop(str(k), None)
+                if counts[k]:
+                    ledger[str(k)] = {"rows": counts[k], "xor": _xor(got[f"x{k}"])}
+            global_xor = 0
+            for e in ledger.values():
+                global_xor ^= e["xor"]
+            return self._publish(
+                stage,
+                input_snapshots,
+                run_id,
+                {
+                    "row_count": sum(e["rows"] for e in ledger.values()),
+                    "content_xor": global_xor,
+                    "columns": cols,
+                    "schema": schema,
+                    "bucketed": True,
+                    "bucket_col": bucket_col,
+                    "n_buckets": n_buckets,
+                    "buckets": ledger,
+                },
+                dict(sorted({**kept, **written}.items())),
             )
 
-        ledger: dict = dict(prev["buckets"]) if delta else {}
-        for k in declared:
-            ledger.pop(str(k), None)
-            if counts[k]:
-                ledger[str(k)] = {"rows": counts[k], "xor": _xor(got[f"x{k}"])}
-        global_xor = 0
-        for e in ledger.values():
-            global_xor ^= e["xor"]
-        return self._publish(
-            stage,
-            input_snapshots,
-            run_id,
-            {
-                "row_count": sum(e["rows"] for e in ledger.values()),
-                "content_xor": global_xor,
-                "columns": cols,
-                "schema": schema,
-                "bucketed": True,
-                "bucket_col": bucket_col,
-                "n_buckets": n_buckets,
-                "buckets": ledger,
-            },
-            files,
-        )
+        write = observed.write.mode("append").partitionBy(bucket_col).parquet
+        return self._commit(stage, run_id, write, publish)
 
     def read_buckets(
         self, stage: str, buckets: list[int], bucket_col: str = "bucket"
@@ -396,16 +422,19 @@ class ParquetManifestTableIO:
     ) -> str:
         """Rewrite bucket partitions into one file each (delta commits
         accumulate a file per commit per bucket; this is the
-        rewrite-data-files maintenance job). Because snapshot ids are
-        content-defined and layout-independent, compaction MUST return
-        the identical snapshot id -- verified after the rewrite commits;
-        a mismatch raises so orchestration halts at the damaged stage
-        (recoverable: upstream manifests + lineage pin what to rebuild)
-        instead of silently proceeding with changed content.
+        rewrite-data-files maintenance job). The rewrite reads the old
+        files while it writes their replacements, which the manifest
+        rename publishes. Because snapshot ids are content-defined and
+        layout-independent, compaction MUST return the identical
+        snapshot id -- verified after the rewrite commits; a mismatch
+        raises so orchestration halts at the damaged stage (recoverable:
+        upstream manifests + lineage pin what to rebuild) instead of
+        silently proceeding with changed content.
         """
         m = self.manifest(stage)
         if not (m and m.get("complete") and m.get("bucketed")):
             raise ValueError(f"{stage} is not a committed bucketed stage")
+        self.remove_orphans(stage)
         bucket_col = m.get("bucket_col", "bucket")
         buckets = (
             [int(b) for b in m["buckets"]] if buckets is None else list(buckets)
@@ -413,12 +442,9 @@ class ParquetManifestTableIO:
         if not buckets:
             return m["snapshot_id"]
         # one shuffle partition per bucket value -> one file per bucket
-        # dir after partitionBy; eager checkpoint cuts lineage to the old
-        # files so the overwrite below is safe
-        df = (
-            self.read_buckets(stage, buckets, bucket_col=bucket_col)
-            .repartition(len(buckets), F.col(bucket_col))
-            .localCheckpoint(eager=True)
+        # dir after partitionBy
+        df = self.read_buckets(stage, buckets, bucket_col=bucket_col).repartition(
+            len(buckets), F.col(bucket_col)
         )
         snap = self.write_bucketed(
             stage,

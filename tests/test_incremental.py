@@ -4,6 +4,9 @@ convergence to the one-shot result (identical content-defined snapshots).
 
 from __future__ import annotations
 
+import os
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -335,8 +338,9 @@ def test_commit_runs_one_spark_job(spark, tmp_path):
 def test_commit_rejects_rows_outside_declared_buckets(spark, tmp_path):
     """The declared buckets -- affected_buckets for a delta, range(n_buckets)
     for a full commit -- bound what a commit may write: a row outside them
-    raises and no manifest is published. A first full commit must name
-    n_buckets (no previous manifest records one)."""
+    raises and nothing is published; a delta commit keeps the previous
+    snapshot. A first full commit must name n_buckets (no previous
+    manifest records one)."""
     from hmm_crf_ner_fromscratch_spark.plans.lineage import (
         ParquetManifestTableIO,
     )
@@ -351,9 +355,16 @@ def test_commit_rejects_rows_outside_declared_buckets(spark, tmp_path):
     assert io.manifest("s") is None
 
     io.write_bucketed("d", spark.createDataFrame([(1, 0)], ddl), ["i1"], "r1", n_buckets=4)
+    committed = io.manifest("d")
     with pytest.raises(ValueError, match="outside the declared buckets"):
         io.write_bucketed("d", rows, ["i2"], "r2", affected_buckets=[0])
-    assert io.manifest("d") is None
+    # the failed delta commit keeps the previous snapshot and its files
+    assert io.manifest("d") == committed
+    assert io.audit("d") is True
+    data = tmp_path / "t" / "d" / "data"
+    assert sorted(
+        str(p.relative_to(data)) for p in data.rglob("*.parquet")
+    ) == sorted(committed["files"])
 
 
 def test_manifest_without_file_lineage_reads_as_absent(spark, tmp_path):
@@ -602,8 +613,16 @@ def test_auto_rebalance_bounds_generations(spark, english_model, tmp_path):
         )
         for k in range(4)
     ]
-    for b in batches:
+    for k, b in enumerate(batches):
         inc.run_append(b)
+        if k == 2:
+            # the fold ran after this batch: rebalance repartitions each
+            # stage by bucket, so every bucket lists exactly one file
+            assert inc._generation_count() == 0
+            for stage in ("decoded", "mentions", "triples", "_convs"):
+                files = inc.io.manifest(stage)["files"]
+                per_bucket = Counter(f.split(os.sep, 1)[0] for f in files)
+                assert set(per_bucket.values()) == {1}, (stage, per_bucket)
     # generation count stays bounded below the threshold: the fold at
     # batch 3 cleared generations 8 and 9; only the post-fold batch's
     # fresh generation may remain
