@@ -22,7 +22,8 @@ exactly that sliver:
   2. the expensive conversation-local stages (decode -> mentions -> triples)
      run ONLY over changed+new conversations (the Python DP never sees
      unchanged data);
-  3. stage tables are partitioned by an ASSIGNED partition recorded per
+  3. the tables keyed by conversation (decoded, mentions, triples and the
+     digest state) are partitioned by an ASSIGNED partition recorded per
      conversation in the digest state -- hash bucket at full load, a fresh
      GENERATION partition per append batch (a broad append writes exactly
      one new partition dir; hash-bucketing would scatter it across every
@@ -35,18 +36,22 @@ exactly that sliver:
      bucket) with the input snapshot as its one input, committed last
      through the same ``write_bucketed`` delta commit as the stages, so
      it has a manifest, a ledger, ``audit()`` and ``compact()`` like them;
-  4. the graph phase is delta-proportional too: a maintained candidates
-     state advances by count arithmetic over the delta, per-block
-     link-pair state rescores ONLY blocks whose membership changed
-     (block keys/features are pure functions of the surface; rescoring
-     runs against full block sizes so the explosion guard -- and thus
-     convergence -- is exact), and a maintained triple-count state
-     advances by the same count arithmetic so edge weights never rescan
-     the triples table. What stays global: CC + canonicalization over
-     the candidate set, and the final nodes/edges aggregates -- both
-     bounded by DISTINCT entities/triple keys, not corpus size;
-  5. snapshot ids stay content-defined through the per-bucket ledger
-     (lineage.write_bucketed): a chain of incremental commits converges to
+  4. the tables keyed by entity or triple (triple_counts, candidates,
+     link_pairs, nodes, edges) are rewritten whole through ``io.write``:
+     every ingest reads them in full anyway, so graph work is O(distinct
+     keys) per ingest and a key-hash layout would save nothing. What
+     scales with the delta is how they advance: each maintained state is
+     one full outer join of the stored state with the delta's counts
+     (candidates and triple counts by count arithmetic over the changed
+     conversations' old and new rows, so edge weights never rescan the
+     triples table), and link pairs are rescored ONLY for blocks whose
+     membership changed (block keys/features are pure functions of the
+     surface; rescoring runs against full block sizes so the explosion
+     guard -- and thus convergence -- is exact). CC + canonicalization
+     run over the whole candidate set;
+  5. snapshot ids stay content-defined (a bucketed commit derives them
+     from its per-bucket ledger, a whole-table write from its content
+     XOR; plans/lineage.py): a chain of incremental commits converges to
      the IDENTICAL decoded, mentions, triples, candidates, link_pairs and
      ``_convs`` snapshot ids a one-shot run over the final input produces,
      and to the same (src, pred, dst, weight) edge set -- the properties
@@ -73,9 +78,12 @@ conversation); its aggregate rides that job, so it costs no exchange of
 its own. On the delta path the plan's changed and removed rows are
 persisted at first use, so the delta semi-join (a broadcast when the
 changed set is small, the common case) and the retained-row filters read
-them from memory. On a real deployment the input-side scan disappears
-too: table formats (Iceberg changelog / CDC feeds) hand over the
-changed-row set directly, which ``run_append`` takes as its batch.
+them from memory. Conversation-local work and commits scale with the
+delta; the graph phase scales with the distinct entities and triple keys
+(each ingest reads and rewrites those states whole), never with the
+corpus. On a real deployment the input-side scan disappears too: table
+formats (Iceberg changelog / CDC feeds) hand over the changed-row set
+directly, which ``run_append`` takes as its batch.
 """
 
 from __future__ import annotations
@@ -112,6 +120,9 @@ STAGES = (
     "decoded", "mentions", "triples", "triple_counts", "candidates",
     "link_pairs", "nodes", "edges",
 )
+# the stages keyed by conversation: bucketed, with delta commits; the
+# others are keyed by entity or triple and rewritten whole
+CONV_STAGES = STAGES[:3]
 DIGEST_COLS = ("conv_id", "turn_idx", "role", "text")
 # triple-count state key + provenance sample bound (operators/graph.py)
 _TRIPLE_KEY = ("subj_type", "subj", "pred", "obj_type", "obj")
@@ -167,13 +178,14 @@ class IncrementalKGPipeline:
     """The one stage orchestrator: ``run`` into a fresh ``work_dir`` is the
     one-shot build; later ``run``/``run_append`` calls execute the delta.
 
-    ``n_buckets`` sizes the stage partitioning: pick so one bucket's decoded
+    ``n_buckets`` sizes the partitioning of the tables keyed by
+    conversation (module docstring, point 3): pick so one bucket's decoded
     rows fit an executor write task comfortably (at 100 TB input, 1024
     buckets is ~100 GB of transcripts -> a few GB of decoded parquet per
     bucket). It also sets the CPU cost of a full bucketed commit (the
-    first load, ``rebalance``, ``resample_provenance``): its ledger
-    evaluates one conditional XOR per bucket for every row (docs/SCALE.md,
-    K9), so do not size it above what the data needs.
+    first load, ``rebalance``): its ledger evaluates one conditional XOR
+    per bucket for every row (docs/SCALE.md, K9), so do not size it above
+    what the data needs.
 
     ``auto_rebalance_generations`` bounds append-chain state growth BY
     DEFAULT (round-6 verdict ask #3: the mitigation existed but was
@@ -246,7 +258,7 @@ class IncrementalKGPipeline:
         return max(
             sum(1 for b in (self.io.manifest(stage) or {}).get("buckets", {})
                 if int(b) >= self.n_buckets)
-            for stage in ("decoded", "mentions", "triples")
+            for stage in CONV_STAGES
         )
 
     def _alloc_generation(self, tx_snap: str) -> int:
@@ -356,8 +368,7 @@ class IncrementalKGPipeline:
         stage: str,
         inputs: list[str],
         compute,
-        affected: list[int] | None,
-        bucketed: bool = True,
+        affected: list[int] | None = None,
     ) -> str:
         if self.io.is_complete(stage, inputs):
             snap = self.io.snapshot_id(stage)
@@ -366,7 +377,7 @@ class IncrementalKGPipeline:
             return snap
         t0 = time.time()
         df = compute()
-        if bucketed:
+        if stage in CONV_STAGES:
             snap = self.io.write_bucketed(
                 stage, df, inputs, res.run_id, affected_buckets=affected,
                 n_buckets=self.n_buckets,
@@ -393,7 +404,7 @@ class IncrementalKGPipeline:
         contract as compaction. Each stage is repartitioned by bucket
         first, so every bucket dir gets one file."""
         out = {}
-        for stage in ("decoded", "mentions", "triples", CONVS):
+        for stage in (*CONV_STAGES, CONVS):
             self.io.remove_orphans(stage)
             m = self.io.manifest(stage)
             if not (m and m.get("complete") and m.get("bucketed")):
@@ -432,21 +443,10 @@ class IncrementalKGPipeline:
         io.remove_orphans("triples")
         io.remove_orphans("triple_counts")
         m = io.manifest("triple_counts")
-        if not (m and m.get("complete") and m.get("bucketed")):
-            raise ValueError("no complete bucketed triple_counts state to resample")
-        stored = m.get("n_buckets")
-        if stored is not None and stored != self.n_buckets:
-            raise ValueError(
-                f"triple_counts state is bucketed mod {stored} but this "
-                f"pipeline was constructed with n_buckets={self.n_buckets}; "
-                "resampling under a different modulus silently rebuckets the "
-                "state and breaks read_buckets pruning -- construct the "
-                "pipeline with the stored value (kg_admin derives it)"
-            )
+        if not (m and m.get("complete")):
+            raise ValueError("no complete triple_counts state to resample")
         key = list(_TRIPLE_KEY)
-        fresh = triple_counts_from_triples(
-            io.read("triples").drop(BUCKET_COL), PROVENANCE_CAP
-        )
+        fresh = triple_counts_from_triples(io.read("triples"), PROVENANCE_CAP)
         state = io.read("triple_counts")
         mismatched = (
             fresh.select(*key, "n")
@@ -464,15 +464,8 @@ class IncrementalKGPipeline:
                 "triple_counts counts disagree with a re-aggregate of the "
                 f"triples table (state corruption): {mismatched}"
             )
-        tc_bucket = F.pmod(F.xxhash64(*_TRIPLE_KEY), F.lit(self.n_buckets)).cast(
-            "int"
-        )
-        df = fresh.withColumn(BUCKET_COL, tc_bucket).repartition(
-            self.n_buckets, F.col(BUCKET_COL)
-        )
-        snap = io.write_bucketed(
-            "triple_counts", df, m["inputs"], m["run_id"] + ".resample",
-            n_buckets=self.n_buckets,
+        snap = io.write(
+            "triple_counts", fresh, m["inputs"], m["run_id"] + ".resample"
         )
         return {
             "stage": "triple_counts",
@@ -534,6 +527,16 @@ class IncrementalKGPipeline:
         io = self.io
         for stage in (*STAGES, CONVS):
             io.remove_orphans(stage)
+        # decoded and _convs both hold every conversation, so after the
+        # same ingest they list the same partitions -- unless a rebalance
+        # died between them; the plan reads _convs' partitions, so finish
+        # that fold first
+        dec, convs = io.manifest("decoded"), io.manifest(CONVS)
+        if (
+            dec and convs and dec["inputs"][0] == convs["inputs"][0]
+            and dec["buckets"].keys() != convs["buckets"].keys()
+        ):
+            self.rebalance()
         prev = io.read(CONVS) if io.manifest(CONVS) else None
         if prev is not None and (stale := self._stale_stage()) is not None:
             if keep_missing:
@@ -733,42 +736,30 @@ class IncrementalKGPipeline:
             affected,
         )
 
-        def one_file_per_bucket(df: DataFrame) -> DataFrame:
-            # the maintained state tables (triple counts / candidates /
-            # link pairs) are small relative to the corpus; one shuffle
-            # partition per bucket keeps their file counts flat across
-            # delta commits (read amplification on these hot tables
-            # otherwise grows per ingest)
-            return df.repartition(self.n_buckets, F.col(BUCKET_COL))
-
         # ---- triple-count state: (subj_type, subj, pred, obj_type, obj)
-        # -> exact count + capped provenance sample, partitioned by key
-        # hash. Maintained by count arithmetic over the delta (O(delta),
-        # never a triples-table scan), so the graph tail below reads a
-        # state table bounded by DISTINCT triple keys instead of rescanning
-        # every triple ever ingested -- the stage that otherwise grows
-        # linearly with corpus size under sustained appends (measured:
-        # micro-batch latency 60 s -> 184 s across 10 x 50k-turn batches
-        # before this state existed; see BENCH/BASELINE.md round 3).
+        # -> exact count + capped provenance sample, committed whole.
+        # Maintained by count arithmetic over the delta (never a triples-
+        # table scan), so the graph tail below reads a state table bounded
+        # by DISTINCT triple keys instead of rescanning every triple ever
+        # ingested -- the stage that otherwise grows linearly with corpus
+        # size under sustained appends (measured: micro-batch latency
+        # 60 s -> 184 s across 10 x 50k-turn batches before this state
+        # existed; see BENCH/BASELINE.md round 3).
         # Provenance contract: counts are exact; the per-key sample keeps
         # up to provenance_cap supporting turns, entries of replaced
         # conversations filtered for TOUCHED keys. Untouched keys may
         # retain pointers into superseded turns of OTHER conversations'
         # edits (refreshable via a compact-style resample); weights and
         # membership are unaffected.
-        tc_bucket = F.pmod(
-            F.xxhash64(*_TRIPLE_KEY), F.lit(self.n_buckets)
-        ).cast("int")
-        tc_plan: dict = {}
-        tc_affected = None
-        if (
-            affected is not None
-            and "delta" in triples_state
-            and not io.is_complete("triple_counts", [s_tri])
-        ):
-            new_counts = (
+        def compute_triple_counts():
+            if "delta" not in triples_state:
+                # full load / resume fallback: one aggregate pass
+                return triple_counts_from_triples(io.read("triples"), PROVENANCE_CAP)
+            key = list(_TRIPLE_KEY)
+            empty = F.expr(f"CAST(array() AS {_PROV_DDL})")
+            touched = (
                 triples_state["delta"]
-                .groupBy(*_TRIPLE_KEY)
+                .groupBy(*key)
                 .agg(
                     F.count(F.lit(1)).alias("n_new"),
                     F.slice(
@@ -777,42 +768,18 @@ class IncrementalKGPipeline:
                         PROVENANCE_CAP,
                     ).alias("prov_new"),
                 )
-            )
-            touched = (
-                new_counts.join(
-                    triples_state["old_counts"], list(_TRIPLE_KEY), "full_outer"
-                )
+                .join(triples_state["old_counts"], key, "full_outer")
                 .select(
-                    *_TRIPLE_KEY,
+                    *key,
                     (
                         F.coalesce("n_new", F.lit(0))
                         - F.coalesce("n_old", F.lit(0))
                     ).alias("d"),
-                    F.coalesce(
-                        "prov_new", F.expr(f"CAST(array() AS {_PROV_DDL})")
-                    ).alias("prov_new"),
+                    F.coalesce("prov_new", empty).alias("prov_new"),
                 )
-                .localCheckpoint(eager=True)
             )
-            tc_affected = sorted(
-                int(r.b)
-                for r in touched.select(tc_bucket.alias("b")).distinct().collect()
-            )
-            tc_plan["touched"] = touched
-
-        def compute_triple_counts():
-            if "touched" not in tc_plan:
-                # full load / resume fallback: one aggregate pass
-                return triple_counts_from_triples(
-                    io.read("triples").drop(BUCKET_COL), PROVENANCE_CAP
-                ).withColumn(BUCKET_COL, tc_bucket)
-            state = io.read_buckets("triple_counts", tc_affected)
-            key = list(_TRIPLE_KEY)
-            touched = tc_plan["touched"]
-            retained = state.join(touched.select(*key), key, "left_anti").select(
-                *key, "n", "prov", BUCKET_COL
-            )
-            # retained provenance of touched keys, minus entries pointing
+            state = io.read("triple_counts").select(*key, "n", "prov")
+            # stored provenance of touched keys, minus entries pointing
             # into the replaced conversations (explode-join: O(touched
             # keys x cap), no driver-side conv list)
             kept_prov = (
@@ -826,138 +793,76 @@ class IncrementalKGPipeline:
                 .groupBy(*key)
                 .agg(F.collect_list("e").alias("prov_kept"))
             )
-            empty = F.expr(f"CAST(array() AS {_PROV_DDL})")
-            upd = (
-                touched.join(
-                    state.select(*key, F.col("n").alias("n_before")), key, "left"
-                )
+            return (
+                state.join(touched, key, "full_outer")
                 .join(kept_prov, key, "left")
                 .select(
                     *key,
-                    (F.coalesce("n_before", F.lit(0)) + F.col("d")).alias("n"),
-                    F.slice(
-                        F.concat(
-                            F.coalesce("prov_kept", empty),
-                            F.col("prov_new"),
-                        ),
-                        1,
-                        PROVENANCE_CAP,
+                    (F.coalesce("n", F.lit(0)) + F.coalesce("d", F.lit(0))).alias("n"),
+                    F.when(F.col("d").isNull(), F.col("prov")).otherwise(
+                        F.slice(
+                            F.concat(F.coalesce("prov_kept", empty), "prov_new"),
+                            1,
+                            PROVENANCE_CAP,
+                        )
                     ).alias("prov"),
                 )
                 .where(F.col("n") > 0)
-                .withColumn(BUCKET_COL, tc_bucket)
             )
-            return retained.unionByName(upd)
 
-        s_tc = self._commit(
-            res,
-            "triple_counts",
-            [s_tri],
-            lambda: one_file_per_bucket(compute_triple_counts()),
-            tc_affected,
-        )
+        s_tc = self._commit(res, "triple_counts", [s_tri], compute_triple_counts)
 
         # ---- incremental entity linking ----
-        # candidates state: (entity_type, surface, n_mentions), partitioned
-        # by surface hash. Delta path: pure count arithmetic over the
-        # affected conversations' old/new mentions -- O(delta), never a
-        # corpus scan. Resume without the in-memory delta falls back to
-        # the full aggregate (correct, one JVM pass).
-        cand_bucket = F.pmod(
-            F.xxhash64("entity_type", "surface"), F.lit(self.n_buckets)
-        ).cast("int")
+        # candidates state: (entity_type, surface, n_mentions), committed
+        # whole. Delta path: count arithmetic over the affected
+        # conversations' old/new mentions, never a mentions scan. Resume
+        # without the in-memory delta falls back to the full aggregate
+        # (correct, one JVM pass).
         cand_plan: dict = {}
-        cand_affected = None
-        if (
-            affected is not None
-            and "delta" in mentions_state
-            and not io.is_complete("candidates", [s_men])
-        ):
-            new_counts = (
-                mentions_state["delta"]
-                .groupBy("entity_type", "surface")
-                .agg(F.count(F.lit(1)).alias("n_new"))
-            )
-            delta_counts = (
-                new_counts.join(
-                    mentions_state["old_counts"],
-                    ["entity_type", "surface"],
-                    "full_outer",
+
+        def compute_candidates():
+            cand = ["entity_type", "surface"]
+            if "delta" not in mentions_state:
+                # full load / resume fallback: one aggregate pass
+                return (
+                    io.read("mentions")
+                    .groupBy(*cand)
+                    .agg(F.count(F.lit(1)).alias("n_mentions"))
                 )
+            delta_counts = (
+                mentions_state["delta"]
+                .groupBy(*cand)
+                .agg(F.count(F.lit(1)).alias("n_new"))
+                .join(mentions_state["old_counts"], cand, "full_outer")
                 .select(
-                    "entity_type",
-                    "surface",
+                    *cand,
                     (
                         F.coalesce("n_new", F.lit(0))
                         - F.coalesce("n_old", F.lit(0))
                     ).alias("d"),
                 )
-                .where(F.col("d") != 0)
-                .persist()
             )
-            cand_affected = sorted(
-                int(r.b)
-                for r in delta_counts.select(cand_bucket.alias("b"))
-                .distinct()
-                .collect()
-            )
-            cand_plan["delta_counts"] = delta_counts
-
-        def compute_candidates():
-            if "delta_counts" not in cand_plan:
-                # full load / resume fallback: one aggregate pass
-                return (
-                    io.read("mentions")
-                    .groupBy("entity_type", "surface")
-                    .agg(F.count(F.lit(1)).alias("n_mentions"))
-                    .withColumn(BUCKET_COL, cand_bucket)
-                )
-            state = io.read_buckets("candidates", cand_affected)
-            # delta-keyed plan: only surfaces with a count delta -- state
-            # rows without one stay in `retained` (and ONLY there); eager,
+            # every candidate's count before and after this ingest; eager,
             # as link-pair planning reads it after this commit deletes the
             # old state files
-            plan = (
-                cand_plan["delta_counts"]
-                .join(
-                    state.select("entity_type", "surface", "n_mentions"),
-                    ["entity_type", "surface"],
-                    "left",
-                )
+            n_before = F.coalesce("n_mentions", F.lit(0))
+            membership = (
+                io.read("candidates")
+                .select(*cand, "n_mentions")
+                .join(delta_counts, cand, "full_outer")
                 .select(
-                    "entity_type",
-                    "surface",
-                    F.coalesce("n_mentions", F.lit(0)).alias("n_before"),
-                    (
-                        F.coalesce("n_mentions", F.lit(0)) + F.col("d")
-                    ).alias("n_after"),
+                    *cand,
+                    n_before.alias("n_before"),
+                    (n_before + F.coalesce("d", F.lit(0))).alias("n_after"),
                 )
                 .localCheckpoint(eager=True)
             )
-            cand_plan["membership"] = plan
-            retained = state.join(
-                cand_plan["delta_counts"].select("entity_type", "surface"),
-                ["entity_type", "surface"],
-                "left_anti",
-            ).select("entity_type", "surface", "n_mentions", BUCKET_COL)
-            updated = (
-                plan.where(F.col("n_after") > 0)
-                .select(
-                    "entity_type",
-                    "surface",
-                    F.col("n_after").alias("n_mentions"),
-                )
-                .withColumn(BUCKET_COL, cand_bucket)
+            cand_plan["membership"] = membership
+            return membership.where(F.col("n_after") > 0).select(
+                *cand, F.col("n_after").alias("n_mentions")
             )
-            return retained.unionByName(updated)
 
-        s_cands = self._commit(
-            res,
-            "candidates",
-            [s_men],
-            lambda: one_file_per_bucket(compute_candidates()),
-            cand_affected,
-        )
+        s_cands = self._commit(res, "candidates", [s_men], compute_candidates)
 
         def state_candidates() -> DataFrame:
             """Candidate frame in candidate_entities shape, derived from
@@ -969,21 +874,24 @@ class IncrementalKGPipeline:
                 .select("entity_type", "surface", "n_mentions", "normalized")
             )
 
-        # link-pairs state: per-block scored pairs, partitioned by block
-        # hash. Pair sets are pure per-block functions of block MEMBERSHIP
-        # (features are static per candidate; counts don't enter scoring),
-        # so only blocks that gained or lost a member need rescoring --
-        # recomputed against FULL block sizes so the explosion guard
-        # behaves exactly as a from-scratch run.
-        pair_bucket = F.pmod(F.xxhash64("block"), F.lit(self.n_buckets)).cast(
-            "int"
-        )
-        pair_affected = None
-        pair_plan: dict = {}
-        if (
-            "membership" in cand_plan
-            and not io.is_complete("link_pairs", [s_cands, params["link_pairs"]])
-        ):
+        # link-pairs state: per-block scored pairs, committed whole. Pair
+        # sets are pure per-block functions of block MEMBERSHIP (features
+        # are static per candidate; counts don't enter scoring), so only
+        # blocks that gained or lost a member need rescoring -- recomputed
+        # against FULL block sizes so the explosion guard behaves exactly
+        # as a from-scratch run.
+        def compute_link_pairs():
+            membership = blocked_candidates(
+                candidate_features(state_candidates())
+            )
+            sizes = membership.groupBy("block").agg(F.count(F.lit(1)).alias("bn"))
+            if "membership" not in cand_plan:
+                return score_block_pairs(
+                    membership,
+                    threshold=self.link_threshold,
+                    max_block=DEFAULT_MAX_BLOCK,
+                    sizes=sizes,
+                )
             changed_keys = (
                 cand_plan["membership"]
                 .where((F.col("n_before") > 0) != (F.col("n_after") > 0))
@@ -999,47 +907,25 @@ class IncrementalKGPipeline:
                 )
                 .select("block")
                 .distinct()
-                .persist()
             )
-            pair_affected = sorted(
-                int(r.b)
-                for r in changed_blocks.select(pair_bucket.alias("b"))
-                .distinct()
-                .collect()
-            )
-            pair_plan["changed_blocks"] = changed_blocks
-
-        def compute_link_pairs():
-            membership = blocked_candidates(
-                candidate_features(state_candidates())
-            )
-            sizes = membership.groupBy("block").agg(F.count(F.lit(1)).alias("bn"))
-            if "changed_blocks" not in pair_plan:
-                scored = score_block_pairs(
-                    membership,
-                    threshold=self.link_threshold,
-                    max_block=DEFAULT_MAX_BLOCK,
-                    sizes=sizes,
-                )
-                return scored.withColumn(BUCKET_COL, pair_bucket)
-            changed_blocks = pair_plan["changed_blocks"]
             rescored = score_block_pairs(
                 membership.join(changed_blocks, "block", "left_semi"),
                 threshold=self.link_threshold,
                 max_block=DEFAULT_MAX_BLOCK,
                 sizes=sizes,
-            ).withColumn(BUCKET_COL, pair_bucket)
-            retained = io.read_buckets("link_pairs", pair_affected).join(
-                changed_blocks, "block", "left_anti"
-            ).select("block", "src_key", "dst_key", "score", BUCKET_COL)
-            return retained.unionByName(rescored)
+            )
+            return (
+                io.read("link_pairs")
+                .join(changed_blocks, "block", "left_anti")
+                .select("block", "src_key", "dst_key", "score")
+                .unionByName(rescored)
+            )
 
         s_pairs = self._commit(
             res,
             "link_pairs",
             [s_cands, params["link_pairs"]],
-            lambda: one_file_per_bucket(compute_link_pairs()),
-            pair_affected,
+            compute_link_pairs,
         )
 
         # graph materialization: CC + canonicalization over the maintained
@@ -1062,31 +948,13 @@ class IncrementalKGPipeline:
                 shared["nodes"], shared["edges"] = materialize_graph_from_counts(
                     state_candidates(),
                     edges_sim,
-                    io.read("triple_counts").drop(BUCKET_COL),
+                    io.read("triple_counts"),
                     provenance_cap=PROVENANCE_CAP,
                 )
             return shared[which]
 
-        self._commit(
-            res,
-            "nodes",
-            [s_pairs, s_cands, s_tc],
-            lambda: graph("nodes"),
-            None,
-            bucketed=False,
-        )
-        self._commit(
-            res,
-            "edges",
-            [s_pairs, s_cands, s_tc],
-            lambda: graph("edges"),
-            None,
-            bucketed=False,
-        )
-        if "delta_counts" in cand_plan:
-            cand_plan["delta_counts"].unpersist()
-        if "changed_blocks" in pair_plan:
-            pair_plan["changed_blocks"].unpersist()
+        self._commit(res, "nodes", [s_pairs, s_cands, s_tc], lambda: graph("nodes"))
+        self._commit(res, "edges", [s_pairs, s_cands, s_tc], lambda: graph("edges"))
         if "delta" in mentions_state:
             mentions_state["delta"].unpersist()
         if "delta" in triples_state:

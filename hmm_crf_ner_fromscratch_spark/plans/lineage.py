@@ -291,10 +291,8 @@ class ParquetManifestTableIO:
         """Bucket-partitioned stage commit with a per-bucket content ledger.
 
         ``n_buckets`` records the bucketing MODULUS in the manifest so
-        later maintenance jobs (rebalance/resample) can derive it from
-        state instead of trusting a CLI default -- running those with a
-        different modulus silently rebuckets the state and breaks
-        read_buckets pruning (round-4 ADVICE). Omitted -> inherited from
+        maintenance (``kg_admin rebalance``) derives it from state
+        instead of trusting a CLI default. Omitted -> inherited from
         the stage's previous manifest; a full commit with neither raises.
 
         ``affected_buckets is None`` -> the commit replaces the whole

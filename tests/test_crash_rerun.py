@@ -53,6 +53,14 @@ def _stored_files(data_dir) -> set[str]:
     }
 
 
+def _assert_committed(pipe, work) -> None:
+    """Every stage audits clean and holds exactly its manifest's files."""
+    for stage in (*STAGES, CONVS):
+        assert pipe.io.audit(stage), stage
+        files = set(pipe.io.manifest(stage)["files"])
+        assert _stored_files(work / stage / "data") == files, stage
+
+
 @pytest.fixture(scope="module")
 def loads(spark, english_model, tmp_path_factory):
     """A committed 240-turn load, the batch that edits two of its
@@ -148,10 +156,65 @@ def test_crash_then_rerun_matches_one_shot(
     pipe.run_append(batch)
 
     assert _state(pipe.io) == want
-    for stage in (*STAGES, CONVS):
-        assert pipe.io.audit(stage), stage
-        files = set(pipe.io.manifest(stage)["files"])
-        assert _stored_files(work / stage / "data") == files, stage
+    _assert_committed(pipe, work)
+
+
+def test_ingest_finishes_interrupted_rebalance(
+    spark, english_model, loads, tmp_path, monkeypatch
+):
+    """A rebalance that dies after folding ``decoded`` leaves ``_convs``
+    mapping the appended conversations to their generation partition
+    while ``decoded`` holds them in hash buckets. The next ingest finishes
+    the fold before it plans, so editing such a conversation replaces its
+    old rows instead of leaving them in the hash bucket."""
+    base_dir, _base, batch, want = loads
+    work = tmp_path / "w"
+    shutil.copytree(base_dir, work)
+    pipe = _pipe(spark, english_model, work, auto_rebalance_generations=None)
+    pipe.run_append(
+        batch.where(F.col("conv_id").startswith("n_")).withColumn(
+            "text", F.concat("text", F.lit(" Berlin"))
+        )
+    )
+    with monkeypatch.context() as mp:
+        _fail_rebalance_after_first_stage(mp, pipe)
+        with pytest.raises(Crash):
+            pipe.rebalance()
+    pipe.run_append(batch)
+
+    assert _state(pipe.io) == want
+    _assert_committed(pipe, work)
+
+
+def test_append_rewrites_key_bucketed_states(spark, english_model, loads, tmp_path):
+    """A store whose triple_counts, candidates and link_pairs are bucketed
+    by a hash of their key, as stores written before those states were
+    committed whole are: the next ingest rewrites them whole and lands on
+    the one-shot state."""
+    base_dir, _base, batch, want = loads
+    work = tmp_path / "w"
+    shutil.copytree(base_dir, work)
+    pipe = _pipe(spark, english_model, work)
+    io = pipe.io
+    keys = {
+        "triple_counts": ("subj_type", "subj", "pred", "obj_type", "obj"),
+        "candidates": ("entity_type", "surface"),
+        "link_pairs": ("block",),
+    }
+    for stage, key in keys.items():
+        m = io.manifest(stage)
+        bucket = F.pmod(F.xxhash64(*key), F.lit(pipe.n_buckets)).cast("int")
+        snap = io.write_bucketed(
+            stage, io.read(stage).withColumn("bucket", bucket), m["inputs"],
+            m["run_id"], n_buckets=pipe.n_buckets,
+        )
+        assert snap == m["snapshot_id"] and io.manifest(stage)["bucketed"], stage
+    pipe.run_append(batch)
+
+    assert _state(io) == want
+    for stage in keys:
+        assert not io.manifest(stage).get("bucketed"), stage
+    _assert_committed(pipe, work)
 
 
 def test_run_removes_pre_stage_digest_layout(spark, english_model, loads, tmp_path):

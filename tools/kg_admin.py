@@ -6,11 +6,13 @@ Usage:
   python tools/kg_admin.py audit   <work_dir> <stage>     # full content verify
   python tools/kg_admin.py compact <work_dir> <stage>     # rewrite small files
   python tools/kg_admin.py rebalance <work_dir> [n_buckets]  # fold generations
-  python tools/kg_admin.py resample  <work_dir> [n_buckets]  # refresh triple-count provenance
+  python tools/kg_admin.py resample  <work_dir>           # refresh triple-count provenance
 
 `audit` re-reads the stage and re-derives the content checksum (the
 per-commit path is single-pass and does not re-scan); `compact` is the
-rewrite-data-files maintenance job and must preserve the snapshot id.
+rewrite-data-files maintenance job of a bucketed stage (decoded, mentions,
+triples, _convs) and must preserve the snapshot id. `rebalance` defaults
+to the bucket count the stage manifests record.
 """
 
 from __future__ import annotations
@@ -72,26 +74,16 @@ def main():
             IncrementalKGPipeline,
         )
 
-        stored = stored_n_buckets()
-        cli = int(sys.argv[3]) if len(sys.argv) > 3 else None
-        if cmd == "resample":
-            # resample must keep the state's modulus: a different one
-            # silently rebuckets and breaks read_buckets pruning
-            if cli is not None and stored is not None and cli != stored:
-                print(json.dumps({
-                    "error": f"state is bucketed mod {stored}, refusing "
-                             f"resample at {cli}"}))
-                return 1
-            n_buckets = stored if stored is not None else (cli or 64)
-        else:
-            # rebalance's JOB is changing the modulus; default = keep it
-            n_buckets = cli if cli is not None else (stored or 64)
         # these ops never decode, so no model is needed
-        pipe = IncrementalKGPipeline(spark, work_dir, None, n_buckets=n_buckets)
-        if cmd == "rebalance":
-            print(json.dumps({"rebalanced": pipe.rebalance()}))
-        else:
+        if cmd == "resample":
+            pipe = IncrementalKGPipeline(spark, work_dir, None)
             print(json.dumps(pipe.resample_provenance()))
+            return 0
+        # rebalance's JOB is changing the modulus; default = keep it
+        cli = int(sys.argv[3]) if len(sys.argv) > 3 else None
+        n_buckets = cli if cli is not None else (stored_n_buckets() or 64)
+        pipe = IncrementalKGPipeline(spark, work_dir, None, n_buckets=n_buckets)
+        print(json.dumps({"rebalanced": pipe.rebalance()}))
         return 0
     if stage is None:
         print(__doc__)
@@ -109,6 +101,9 @@ def main():
         m = io.manifest(stage)
         if m is None:
             print(json.dumps({"stage": stage, "error": "no committed manifest"}))
+            return 1
+        if not m.get("bucketed"):
+            print(json.dumps({"stage": stage, "error": "not a bucketed stage"}))
             return 1
         before = len(m["files"])
         snap = io.compact(stage)
