@@ -4,14 +4,19 @@ Each candidate entity is a vertex (string key); link edges (K6) connect
 variants of the same real-world entity. The component representative --
 the lexicographically smallest key -- becomes the canonical entity.
 
-Two paths, chosen from the deduped edge count (see
+Two paths, chosen from the input pair count (see
 :func:`connected_components`):
-  * small link graphs -> driver-side union-find over the collected edges;
+  * small link graphs -> driver-side union-find over the collected pairs;
   * large ones -> iterative min-label propagation with DataFrame
     self-joins. Every round, each vertex adopts the minimum label among
     itself and its neighbors; converged when no label changes. Rounds =
     O(component diameter); name-similarity graphs have tiny diameters, so
     a handful of rounds suffice -- per SURVEY.md SS2.6 K7.
+
+The same size rule, ``LOCAL_THRESHOLD``, decides one level up whether
+the whole KG tail (components, canonicalization, nodes) runs on the
+driver (operators/graph.py), which calls :func:`_local_components`
+directly.
 
 Scale guards for the distributed loop (the two failure modes of naive
 iterative DataFrames):
@@ -24,6 +29,10 @@ iterative DataFrames):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+# up to this many rows, collecting to the driver beats the fixed cost of
+# the distributed jobs: input pairs here, candidates in operators/graph.py
+LOCAL_THRESHOLD = 500_000
 
 
 def _local_components(pairs: list) -> list:
@@ -56,7 +65,7 @@ def connected_components(
     src: str = "src_key",
     dst: str = "dst_key",
     max_iter: int = 25,
-    local_threshold: int = 500_000,
+    local_threshold: int = LOCAL_THRESHOLD,
 ) -> DataFrame:
     """Returns ``DataFrame[key, component]`` for every vertex appearing in
     ``edges``; ``component`` is the minimum key in the vertex's component.
@@ -65,43 +74,35 @@ def connected_components(
     union isolated vertices back in afterwards (left join + coalesce).
 
     Adaptive execution, same shape as Spark's broadcast-join selection:
-    the deduped edge count is known for free once the symmetrized frame
-    is checkpointed; below ``local_threshold`` edges the component
-    structure is solved with driver-side union-find (one job instead of
-    ~4 jobs x O(diameter) rounds -- the iteration overhead dominates for
-    small link graphs), above it the distributed min-label loop runs.
-    Both paths produce identical (key, min-key-of-component) rows --
-    property-tested equivalent.
+    the (src, dst) pairs are checkpointed once and counted; at or below
+    ``local_threshold`` input pairs (as given: duplicates and both
+    directions count) the component structure is solved with driver-side
+    union-find (one collect instead of ~4 jobs x O(diameter) rounds -- the
+    iteration overhead dominates for small link graphs); above it the
+    pairs are symmetrized and deduped and the distributed min-label loop
+    runs. Both paths produce identical (key, min-key-of-component) rows --
+    property-tested equivalent. No pairs give no rows.
     """
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # empty edge set (common for sparse/clean corpora): every vertex is
-    # its own component -- skip the propagation loop entirely (the count
-    # is free: sym is already materialized by the checkpoint)
-    n_sym = sym.count()
-    if n_sym == 0:
-        return sym.select(F.col("u").alias("key")).withColumn(
-            "component", F.col("key")
-        )
-    if n_sym <= local_threshold:
+    pairs = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
+    if pairs.count() <= local_threshold:
         import pandas as pd
 
-        spark = edges.sparkSession
-        rows = _local_components([(r.u, r.v) for r in sym.collect()])
-        schema = sym.select(
+        rows = _local_components([(r.u, r.v) for r in pairs.collect()])
+        schema = pairs.select(
             F.col("u").alias("key"), F.col("v").alias("component")
         ).schema
         # pandas -> Arrow LocalTableScan: createDataFrame on a plain list
         # builds a pickled python RDD with defaultParallelism partitions,
         # which every downstream consumer pays python-worker roundtrips to
         # scan (and which coalesce(1) turns into ~4 s of sequential drains)
-        return spark.createDataFrame(
+        return edges.sparkSession.createDataFrame(
             pd.DataFrame(rows, columns=["key", "component"]), schema
         )
+    sym = (
+        pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .distinct()
+        .localCheckpoint()
+    )
     labels = (
         sym.select(F.col("u").alias("key"))
         .distinct()

@@ -13,19 +13,39 @@ surface): stable across runs and cluster sizes (no global ordering pass
 at 10^9-node scale) AND engine-portable -- any system can recompute it as
 ``('0x' || substring(md5(type || '|' || canonical), 1, 15))::BIGINT``,
 which is how the DuckDB oracle checks the edge table. Collision
-probability is negligible below ~10^8 nodes and the builder verifies
-uniqueness with a cheap count-distinct assertion.
+probability is negligible below ~10^8 nodes and every build verifies
+that the candidate nodes' ids are unique.
+
+One size decision (:func:`materialize_graph_from_counts`): the tail's
+state is bounded by distinct entities, not by the corpus. The candidates
+are collected once, bounded by ``LOCAL_THRESHOLD`` + 1 rows (the same
+rule ``connected_components`` applies to its pairs). At or below the
+threshold, the link pairs are collected too, and components (the same
+driver union-find), canonical surfaces, nodes, node ids and the collision
+check are computed on the driver; Spark gets one small surface -> node_id
+map, broadcast into the edge aggregate. Above it, CC, the canonical
+aggregate and the nodes aggregate run as Spark jobs. Both paths feed the
+same edge and tool-node aggregates and give identical rows
+(property-tested). :func:`build_graph` collects its candidates before
+linking, so linking and the tail read one local frame.
 
 Provenance arrays are capped (``provenance_cap``) so a frequent triple
 cannot blow up a single row -- the full evidence remains derivable from
-the triples table.
+the triples table. An edge's sample is the ``provenance_cap`` smallest
+(conv_id, turn_idx) of its merged triple-count samples (sorted before
+the slice), so edges depend on the triple-count content, not on its
+partitioning or row order.
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .components import connected_components
+from .components import LOCAL_THRESHOLD, _local_components, connected_components
+from .linking import candidate_entities, link_edges
 
 
 def stable_node_id(type_col, name_col):
@@ -33,7 +53,7 @@ def stable_node_id(type_col, name_col):
     ``type|name`` (conv/substring keeps 15 hex digits -> always positive,
     fits BIGINT). The '|' separator is safe for ids because collisions --
     from separator ambiguity or from hashing -- are caught by the
-    ``check_id_collisions`` count-distinct assertion."""
+    collision check every build runs."""
     return F.conv(
         F.substring(
             F.md5(F.concat(type_col, F.lit("|"), name_col).cast("binary")), 1, 15
@@ -41,7 +61,17 @@ def stable_node_id(type_col, name_col):
         16,
         10,
     ).cast("long")
-from .linking import candidate_entities, link_edges
+
+
+def _node_id(entity_type: str, canonical: str) -> int:
+    """:func:`stable_node_id` computed on the driver."""
+    digest = hashlib.md5(f"{entity_type}|{canonical}".encode()).hexdigest()
+    return int(digest[:15], 16)
+
+
+def _check_unique_ids(n_nodes: int, n_ids: int) -> None:
+    if n_nodes != n_ids:
+        raise RuntimeError(f"node_id hash collision: {n_nodes} nodes, {n_ids} ids")
 
 
 def build_graph(
@@ -49,7 +79,6 @@ def build_graph(
     triples: DataFrame,
     link_threshold: float = 0.72,
     provenance_cap: int = 20,
-    check_id_collisions: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """mentions + triples -> (nodes, edges).
 
@@ -59,23 +88,28 @@ def build_graph(
     the batch plan keeps its single edge-aggregate shuffle (a counts
     pre-agg was measured ~35% slower on the one-shot flagship: it
     shuffles every provenance struct twice). The incremental pipeline
-    feeds real aggregated counts to materialize_graph_from_counts."""
-    cands = candidate_entities(mentions).persist()
-    edges_sim = link_edges(cands, threshold=link_threshold)
+    feeds real aggregated counts to materialize_graph_from_counts.
+
+    Candidates that fit the driver are collected here: linking and the
+    tail then read a local frame, so the mentions are aggregated once
+    (the tail's own collect of a local frame runs no job)."""
+    cands = candidate_entities(mentions)
+    rows = cands.limit(LOCAL_THRESHOLD + 1).collect()
+    if len(rows) <= LOCAL_THRESHOLD:
+        cands = mentions.sparkSession.createDataFrame(
+            pd.DataFrame(rows, columns=cands.columns), cands.schema
+        )
     unit = triples.select(
         "subj_type", "subj", "pred", "obj_type", "obj",
         F.lit(1).alias("n"),
         F.array(F.struct("conv_id", "turn_idx")).alias("prov"),
     )
-    out = materialize_graph_from_counts(
+    return materialize_graph_from_counts(
         cands,
-        edges_sim,
+        link_edges(cands, threshold=link_threshold),
         unit,
         provenance_cap=provenance_cap,
-        check_id_collisions=check_id_collisions,
     )
-    cands.unpersist()
-    return out
 
 
 def triple_counts_from_triples(
@@ -101,66 +135,106 @@ def materialize_graph_from_counts(
     edges_sim: DataFrame,
     triple_counts: DataFrame,
     provenance_cap: int = 20,
-    check_id_collisions: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Graph tail over the aggregated triple-count state (see
     :func:`triple_counts_from_triples`). Split out of
     :func:`build_graph` so callers that maintain ``cands`` /
     ``edges_sim`` / ``triple_counts`` incrementally (block-scoped
     linking + count arithmetic, plans/incremental.py) share the exact
-    same canonicalization and aggregation."""
-    comp = connected_components(edges_sim)
+    same canonicalization and aggregation.
 
-    # Adaptive shortcut (round 7): connected_components always returns a
-    # materialized frame (checkpointed labels or a driver-built local
-    # table), so emptiness is known for free. An EMPTY link graph -- the
-    # common case for clean corpora; the flagship corpus produces zero
-    # link edges (tests/test_kg.py singleton assertion) -- means every
-    # candidate is its own component and its own canonical surface, so
-    # the component join, the canonical-surface aggregate, and the eager
-    # checkpoint all collapse to a projection of cands: two shuffles and
-    # one action less in every graph build. Results are identical by
-    # construction: coalesce(component, key) = key and the per-singleton
-    # best surface = the candidate's own surface. The projection is lazy:
-    # build_graph unpersists cands before it returns, so each consumer of
-    # the result recomputes mentions -> candidates.
-    if comp.isEmpty():
-        enriched = cands.withColumn(
-            "key", F.concat_ws("|", "entity_type", "surface")
-        ).withColumn("component", F.col("key")).withColumn(
-            "canonical", F.col("surface")
-        )
+    ``cands`` needs (entity_type, surface, n_mentions) with one row per
+    (entity_type, surface); ``edges_sim`` needs (src_key, dst_key). The
+    candidates are collected once, at most ``LOCAL_THRESHOLD`` + 1 rows;
+    whether that many came back picks the driver or the distributed
+    path (module docstring)."""
+    keyed = cands.select(
+        "entity_type",
+        "surface",
+        "n_mentions",
+        F.concat_ws("|", "entity_type", "surface").alias("key"),
+    )
+    rows = keyed.limit(LOCAL_THRESHOLD + 1).collect()
+    if len(rows) <= LOCAL_THRESHOLD:
+        nodes, resolve = _local_nodes(rows, edges_sim)
     else:
-        keyed = cands.withColumn(
-            "key", F.concat_ws("|", "entity_type", "surface")
-        ).join(comp, "key", "left").withColumn(
-            "component", F.coalesce("component", F.col("key"))
-        )
+        nodes, resolve = _distributed_nodes(keyed, edges_sim)
+    edges, tool_nodes = _edges(triple_counts, resolve, provenance_cap)
+    return nodes.unionByName(tool_nodes), edges
 
-        # canonical surface: most-mentioned variant, ties -> lexicographic
-        # min
-        canon = (
-            keyed.groupBy("component")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("n_mentions")).alias("neg_n"),
-                        F.col("surface").alias("surface"),
-                    )
-                ).alias("best")
-            )
-            .select("component", F.col("best.surface").alias("canonical"))
-        )
-        # eager localCheckpoint: feeds the nodes aggregate AND both
-        # resolution joins of the edges path (without it every consumer
-        # re-runs linking + CC). Unlike a bare persist(), its blocks are
-        # released by the ContextCleaner once the returned frames are
-        # garbage-collected, so repeated build_graph calls in a long-lived
-        # session don't accumulate cached blocks; and cands can be dropped
-        # as soon as it materializes (build_graph unpersists its cands
-        # right after this returns).
-        enriched = keyed.join(canon, "component").localCheckpoint(eager=True)
 
+def _local_nodes(rows: list, edges_sim: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Driver path: components, canonical surfaces and nodes from the
+    collected candidate rows and link pairs; returns (nodes, resolve)
+    as small local frames, resolve with a broadcast hint."""
+    pairs = edges_sim.select("src_key", "dst_key").collect()
+    component = dict(_local_components([(p.src_key, p.dst_key) for p in pairs]))
+    members: dict = {}
+    for r in rows:
+        members.setdefault(component.get(r.key, r.key), []).append(r)
+    nodes, resolve = [], []
+    for group in members.values():
+        # most mentions, ties -> lexicographic min (the distributed
+        # path's min over (-n_mentions, surface))
+        best = min(group, key=lambda r: (-r.n_mentions, r.surface))
+        nodes.append((
+            _node_id(best.entity_type, best.surface),
+            best.surface,
+            best.entity_type,
+            sorted({r.surface for r in group}),
+            sum(r.n_mentions for r in group),
+        ))
+        resolve += [
+            (r.entity_type, r.surface, _node_id(r.entity_type, best.surface))
+            for r in group
+        ]
+    _check_unique_ids(len(nodes), len({n[0] for n in nodes}))
+    # pandas -> Arrow LocalTableScan (see connected_components)
+    spark = edges_sim.sparkSession
+    return (
+        spark.createDataFrame(
+            pd.DataFrame(
+                nodes,
+                columns=["node_id", "canonical", "entity_type", "aliases", "n_mentions"],
+            ),
+            "node_id long, canonical string, entity_type string, "
+            "aliases array<string>, n_mentions long",
+        ),
+        F.broadcast(spark.createDataFrame(
+            pd.DataFrame(resolve, columns=["entity_type", "surface", "node_id"]),
+            "entity_type string, surface string, node_id long",
+        )),
+    )
+
+
+def _distributed_nodes(
+    keyed: DataFrame, edges_sim: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Spark path of :func:`_local_nodes`, for candidate sets above
+    ``LOCAL_THRESHOLD``."""
+    keyed = keyed.join(connected_components(edges_sim), "key", "left").withColumn(
+        "component", F.coalesce("component", F.col("key"))
+    )
+    # canonical surface: most-mentioned variant, ties -> lexicographic min
+    canon = (
+        keyed.groupBy("component")
+        .agg(
+            F.min(
+                F.struct(
+                    (-F.col("n_mentions")).alias("neg_n"),
+                    F.col("surface").alias("surface"),
+                )
+            ).alias("best")
+        )
+        .select("component", F.col("best.surface").alias("canonical"))
+    )
+    # eager localCheckpoint: feeds the nodes aggregate, the collision
+    # check AND both resolution joins of the edges path (without it every
+    # consumer re-runs linking + CC). Unlike a bare persist(), its blocks
+    # are released by the ContextCleaner once the returned frames are
+    # garbage-collected, so repeated builds in a long-lived session don't
+    # accumulate cached blocks.
+    enriched = keyed.join(canon, "component").localCheckpoint(eager=True)
     nodes = (
         enriched.groupBy("component", "canonical")
         .agg(
@@ -171,20 +245,24 @@ def materialize_graph_from_counts(
         .withColumn("node_id", stable_node_id(F.col("entity_type"), F.col("canonical")))
         .select("node_id", "canonical", "entity_type", "aliases", "n_mentions")
     )
-
-    if check_id_collisions:
-        n, nd = nodes.agg(
-            F.count("*").alias("n"), F.countDistinct("node_id").alias("nd")
-        ).first()
-        if n != nd:
-            raise RuntimeError(f"node_id hash collision: {n} nodes, {nd} ids")
-
-    # surface -> node_id resolution map (per entity_type)
+    n, nd = nodes.agg(
+        F.count("*").alias("n"), F.countDistinct("node_id").alias("nd")
+    ).first()
+    _check_unique_ids(n, nd)
     resolve = enriched.select(
         "entity_type",
         "surface",
         stable_node_id(F.col("entity_type"), F.col("canonical")).alias("node_id"),
     )
+    return nodes, resolve
+
+
+def _edges(
+    triple_counts: DataFrame, resolve: DataFrame, provenance_cap: int
+) -> tuple[DataFrame, DataFrame]:
+    """The edge aggregate and the TOOL-node aggregate over the triple
+    counts, with endpoints resolved through the (entity_type, surface,
+    node_id) map; returns (edges, tool_nodes)."""
     r_subj = resolve.select(
         F.col("entity_type").alias("subj_type"),
         F.col("surface").alias("subj"),
@@ -213,8 +291,10 @@ def materialize_graph_from_counts(
         resolved.groupBy("src", "pred", "dst")
         .agg(
             F.sum("n").cast("double").alias("weight"),
+            # sorted before the slice: collect_list keeps whatever order
+            # the shuffle delivers
             F.slice(
-                F.flatten(F.collect_list("prov")), 1, provenance_cap
+                F.array_sort(F.flatten(F.collect_list("prov"))), 1, provenance_cap
             ).alias("provenance"),
         )
     )
@@ -231,4 +311,4 @@ def materialize_graph_from_counts(
         .groupBy("node_id", "canonical", "entity_type")
         .agg(F.first("aliases").alias("aliases"), F.sum("n").alias("n_mentions"))
     )
-    return nodes.unionByName(tool_nodes), edges
+    return edges, tool_nodes

@@ -2199,14 +2199,7 @@ def _kg_edges_from_mentions(mentions):
         "conv_id",
         "turn_idx",
     )
-    # check_id_collisions=False: the flagship consumes ONLY the edges
-    # frame, and the collision assertion is an extra eager action that
-    # materializes the nodes aggregate this query then discards (guide
-    # SS1.2: don't compute what you throw away). Node-id integrity stays
-    # covered by the library default (True), the test suite, and the
-    # DuckDB oracle, which recomputes every edge id independently and
-    # would hash-mismatch on any collision-induced merge.
-    _, edges = build_graph(mentions, triples, check_id_collisions=False)
+    _, edges = build_graph(mentions, triples)
     return edges.select("src", "pred", "dst", "weight")
 
 

@@ -56,8 +56,12 @@ exactly that sliver:
      ``_convs`` snapshot ids a one-shot run over the final input produces,
      and to the same (src, pred, dst, weight) edge set -- the properties
      the tests pin. triple_counts, nodes and edges do not converge by id:
-     their capped provenance samples depend on the commit history (and
-     on n_buckets), so only their counted content is equal.
+     triple_counts' capped provenance samples depend on the commit
+     history (and on n_buckets), and nodes and edges take its snapshot
+     id as an input, so only their counted content is equal. An edge's
+     sample is the cap smallest (conv_id, turn_idx) of its merged
+     triple-count samples, so equal triple_counts content gives equal
+     edges whatever its file layout.
 
 The delta path runs only when the digest state and every stage are
 committed and the stages were built with this pipeline's parameters
@@ -929,25 +933,21 @@ class IncrementalKGPipeline:
         )
 
         # graph materialization: CC + canonicalization over the maintained
-        # states (cross-candidate by nature -- CC is adaptive and cheap
-        # relative to pair scoring), edge weights aggregated from the
-        # merged triples. CC is recomputed cold every run: removed
-        # conversations can split a component, so the previous snapshot's
-        # labels are not a valid warm start
+        # states (cross-candidate by nature; on the driver while the
+        # candidates are few, see materialize_graph_from_counts), edge
+        # weights aggregated from the merged triples. CC is recomputed cold
+        # every run: removed conversations can split a component, so the
+        # previous snapshot's labels are not a valid warm start. A pair
+        # found in several blocks is one link to either CC path.
         shared: dict = {}
 
         def graph(which: str):
             if "nodes" not in shared:
-                edges_sim = (
-                    io.read("link_pairs")
-                    .select("src_key", "dst_key", "score")
-                    .dropDuplicates(["src_key", "dst_key"])
-                )
                 # graph tail reads the triple-count STATE (bounded by
                 # distinct triple keys), never the raw triples table
                 shared["nodes"], shared["edges"] = materialize_graph_from_counts(
                     state_candidates(),
-                    edges_sim,
+                    io.read("link_pairs"),
                     io.read("triple_counts"),
                     provenance_cap=PROVENANCE_CAP,
                 )

@@ -195,6 +195,139 @@ def test_build_graph_e2e(spark, english_model):
     nodes.unpersist()
 
 
+def _tail_rows(nodes, edges):
+    """Sorted plain tuples of the graph tail's rows, provenance included."""
+    n = sorted(
+        (r.node_id, r.canonical, r.entity_type, tuple(r.aliases), r.n_mentions)
+        for r in nodes.collect()
+    )
+    e = sorted(
+        (r.src, r.pred, r.dst, r.weight,
+         tuple((p.conv_id, p.turn_idx) for p in r.provenance))
+        for r in edges.collect()
+    )
+    return n, e
+
+
+_CANDS_DDL = "entity_type string, surface string, n_mentions long"
+_LINKS_DDL = "src_key string, dst_key string"
+_COUNTS_DDL = (
+    "subj_type string, subj string, pred string, obj_type string, obj string, "
+    "n long, prov array<struct<conv_id:string,turn_idx:int>>"
+)
+
+
+def test_edge_provenance_independent_of_row_order(spark):
+    """One triple-count content under three layouts gives the same edges,
+    provenance included: the sample is the cap smallest (conv_id,
+    turn_idx) of the merged samples of every key resolving to the edge."""
+    from hmm_crf_ner_fromscratch_spark.operators.graph import (
+        materialize_graph_from_counts,
+    )
+
+    cands = spark.createDataFrame(
+        [("ORG", "Acme Corp", 3), ("ORG", "acme corp", 1),
+         ("ORG", "ACME Corp.", 1), ("LOC", "Berlin", 2)],
+        _CANDS_DDL,
+    )
+    links = spark.createDataFrame(
+        [("ORG|Acme Corp", "ORG|acme corp"), ("ORG|ACME Corp.", "ORG|Acme Corp")],
+        _LINKS_DDL,
+    )
+    rows = [
+        ("ORG", "Acme Corp", "located_in", "LOC", "Berlin", 2, [("c9", 1), ("c9", 0)]),
+        ("ORG", "acme corp", "located_in", "LOC", "Berlin", 1, [("c1", 4)]),
+        ("ORG", "ACME Corp.", "located_in", "LOC", "Berlin", 2, [("c5", 2), ("c0", 7)]),
+    ]
+    layouts = [
+        spark.createDataFrame(rows, _COUNTS_DDL).coalesce(1),
+        spark.createDataFrame(rows[::-1], _COUNTS_DDL).coalesce(1),
+        spark.createDataFrame(rows[1:] + rows[:1], _COUNTS_DDL).repartition(3),
+    ]
+    got = [
+        _tail_rows(*materialize_graph_from_counts(cands, links, tc, provenance_cap=2))[1]
+        for tc in layouts
+    ]
+    assert len(got[0]) == 1
+    assert got[0][0][3:] == (5.0, (("c0", 7), ("c1", 4)))
+    assert got[1] == got[0] and got[2] == got[0]
+
+
+def test_graph_tail_driver_matches_distributed(spark, monkeypatch):
+    """Property: the driver tail (union-find, canonical surfaces, nodes,
+    ids and the resolve map computed on the driver) gives the same nodes
+    (every column) and edges (sorted provenance included) as the
+    distributed tail, forced by lowering graph.LOCAL_THRESHOLD. Random
+    candidates with case/punctuation variants, random link pairs (none in
+    one case), TOOL subjects and surfaces no candidate resolves, and an
+    empty candidate set."""
+    import random
+
+    from hmm_crf_ner_fromscratch_spark.operators import graph
+
+    rng = random.Random(23)
+    bases = ["acme corp", "deutsche bank", "north wind", "blue river", "kern"]
+
+    def variants(b):
+        return [b, b.title(), b.upper(), b.title() + ".", b.replace(" ", "-")]
+
+    cases = []
+    for trial in range(3):
+        cands = {}
+        for t in ("ORG", "LOC"):
+            for b in rng.sample(bases, 3):
+                for s in rng.sample(variants(b), rng.randint(1, 4)):
+                    cands[(t, s)] = rng.randint(1, 3)
+        links = []
+        if trial:
+            for _ in range(rng.randint(2, 8)):
+                t = rng.choice(("ORG", "LOC"))
+                same = [s for ty, s in cands if ty == t]
+                a, b = sorted(rng.sample(same, 2))
+                links.append((f"{t}|{a}", f"{t}|{b}"))
+        cases.append((cands, links))
+    cases.append(({}, []))
+
+    for cands, links in cases:
+        surfaces = [(t, s) for t, s in cands] + [("ORG", "Nowhere Ltd")]
+        subjects = surfaces + [("TOOL", "search_api"), ("TOOL", "db.lookup")]
+        counts = {
+            ("TOOL", "search_api", "returned", *surfaces[-1]): [("c3", 1)],
+            (*surfaces[-1], "uses", *surfaces[0]): [("c2", 5), ("c1", 9)],
+        }
+        for _ in range(25):
+            st, ss = rng.choice(subjects)
+            ot, os_ = rng.choice(surfaces)
+            counts[(st, ss, rng.choice(("uses", "located_in")), ot, os_)] = [
+                (f"c{rng.randint(0, 9)}", rng.randint(0, 20))
+                for _ in range(rng.randint(1, 4))
+            ]
+        cdf = spark.createDataFrame(
+            [(t, s, n) for (t, s), n in cands.items()], _CANDS_DDL
+        )
+        ldf = spark.createDataFrame(links, _LINKS_DDL)
+        tc = spark.createDataFrame(
+            [(*k, len(p), p) for k, p in counts.items()], _COUNTS_DDL
+        )
+
+        def tail():
+            return _tail_rows(*graph.materialize_graph_from_counts(
+                cdf, ldf, tc, provenance_cap=3
+            ))
+
+        local_calls = []
+        real_local = graph._local_nodes
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_local_nodes",
+                      lambda *a: local_calls.append(1) or real_local(*a))
+            driver = tail()
+            m.setattr(graph, "LOCAL_THRESHOLD", -1)
+            dist = tail()
+        assert local_calls == [1], "the driver path ran for both or neither"
+        assert driver == dist, f"driver/distributed mismatch on {links[:3]}..."
+        assert "TOOL" in {r[2] for r in driver[0]}
+
+
 @needs_reference
 def test_e2e_triple_pr_vs_reference(spark, english_golden):
     """BASELINE.json metric: triple P/R >= 0.95 vs the reference extraction.

@@ -43,11 +43,14 @@ def _shuffles(plan: str) -> int:
 
 
 def test_kg_pipeline_final_plan(spark):
-    """The flagship tail (after the localCheckpoint cut at mentions):
-    exactly 6 shuffles -- lead() window, CC symmetrize-distinct, canon
-    agg, nodes agg, triple-count resolution, edge agg -- and NO cartesian
-    product and NO python stage (decode ran ONCE upstream of the cut;
-    a python operator here would mean a consumer is re-running it)."""
+    """The flagship tail (after the localCheckpoint cut at mentions): the
+    components, canonical surfaces and nodes ran on the driver while the
+    query was built, so the edges plan has exactly 2 shuffles -- the lead()
+    window and the edge aggregate -- and resolves subjects and objects
+    through broadcast joins with the driver's surface -> node_id map.
+    NO cartesian product and NO python stage (decode ran ONCE upstream of
+    the cut; a python operator here would mean a consumer is re-running
+    it)."""
     from hmm_crf_ner_fromscratch_spark.plans.entry_queries import QUERIES
 
     df = QUERIES["kg_pipeline"](spark, SF)
@@ -56,7 +59,9 @@ def test_kg_pipeline_final_plan(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
     n = _shuffles(plan)
-    assert n <= 6, f"kg_pipeline tail grew a shuffle: {n} > 6"
+    assert n <= 2, f"kg_pipeline tail grew a shuffle: {n} > 2"
+    assert plan.count("BroadcastHashJoin") >= 2, "resolution joins lost their broadcast"
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
 def test_dedup_minhash_no_prebanding_shuffle(spark):
